@@ -19,6 +19,19 @@ object SpatialJoinJob {
   val BroadcastRowThreshold = 100000L
   val SaltBuckets = 8
 
+  /** The salted cell-equi shuffle join: `pages` (pid + z12 `cell`) salt by
+    * hash(pid) and each polygon z8 cover cell (`cell8`) is replicated into
+    * every salt bucket by an explode (no NLJ), so a hot cell spreads over
+    * SaltBuckets tasks; shuffle_hash pins the non-broadcast path.
+    * Candidates only — each caller applies its own exact refine. */
+  private[graft] def saltedCellJoin(pages: DataFrame, polyCells: DataFrame): DataFrame =
+    pages
+      .withColumn("cell8", G.tile_parent(col("cell"), lit(4)))
+      .withColumn("salt", pmod(hash(col("pid")), lit(SaltBuckets)).cast("int"))
+      .join(polyCells
+        .withColumn("salt", explode(array((0 until SaltBuckets).map(s => lit(s)): _*)))
+        .hint("shuffle_hash"), Seq("cell8", "salt"))
+
   def run(spark: SparkSession, sfDir: String, lakeRoot: String): DataFrame = {
     val lake = new LakeTable(lakeRoot)
 
@@ -41,16 +54,9 @@ object SpatialJoinJob {
             G.st_contains_xy(col("poly"), col("lon"), col("lat")))
           .select(col("pid"), col("poly_id"), col("is_hot"))
       } else {
-        // salted cell-equi shuffle join: explode polygons into z8 cover
-        // cells replicated across salt buckets; pages salt by hash(pid).
-        val polyCells = polys
-          .select(col("poly_id"), col("poly"),
-            G.tiles_for(col("poly"), array(lit(8))).as(Seq("cell8", "x", "y", "z")))
-          .crossJoin(spark.range(SaltBuckets).select(col("id").cast("int").as("salt")))
-        val salted = pages
-          .withColumn("cell8", G.tile_parent(col("cell"), lit(4)))
-          .withColumn("salt", pmod(hash(col("pid")), lit(SaltBuckets)).cast("int"))
-        salted.join(polyCells, Seq("cell8", "salt"))
+        // salted shuffle plan over the polygons' z8 cover cells
+        saltedCellJoin(pages, polys.select(col("poly_id"), col("poly"),
+            G.tiles_for(col("poly"), array(lit(8))).as(Seq("cell8", "x", "y", "z"))))
           .where(G.st_contains_xy(col("poly"), col("lon"), col("lat")))
           .select(col("pid"), col("poly_id"), col("is_hot"))
       }

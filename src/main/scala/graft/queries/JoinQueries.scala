@@ -65,25 +65,19 @@ object JoinQueries {
 
   /** The SHUFFLE spatial join plan under the oracle (VERDICT r1 #6): a
     * 20k-box layer is far beyond broadcast-NLJ territory, so the plan is
-    * the salted cell-equi join of SpatialJoinJob's big branch — polygons
-    * exploded into their z8 cover cells and replicated across salt
-    * buckets, pages salted by hash(pid), equi-join on (cell8, salt), exact
-    * box refine after the join. shuffle_hash hint pins the non-broadcast
-    * path so the gate hashes the scale plan, not the small-layer one. */
+    * [[graft.jobs.SpatialJoinJob.saltedCellJoin]] over the boxes' z8 cover
+    * cells, with the exact box refine after the join. Its shuffle_hash
+    * hint pins the non-broadcast path so the gate hashes the scale plan,
+    * not the small-layer one. */
   def shufflePip(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.jobs.SpatialJoinJob.SaltBuckets
     val pages = Pages.volumePages(spark, sfDir)
       .select(col("pid"), col("lon"), col("lat"),
         G.st_tile(col("lon"), col("lat"), 12).as("cell"))
-      .withColumn("cell8", G.tile_parent(col("cell"), lit(4)))
-      .withColumn("salt", pmod(hash(col("pid")), lit(SaltBuckets)).cast("int"))
     val polyCells = shuffleLayer(spark)
       .select(col("poly_id"), col("xmin"), col("ymin"), col("xmax"), col("ymax"),
         G.tiles_for(G.st_makebbox(col("xmin"), col("ymin"), col("xmax"), col("ymax")),
           array(lit(8))).as(Seq("cell8", "x", "y", "z")))
-      // salt replication via explode, not a crossJoin (no NLJ in the plan)
-      .withColumn("salt", explode(array((0 until SaltBuckets).map(s => lit(s)): _*)))
-    pages.join(polyCells.hint("shuffle_hash"), Seq("cell8", "salt"))
+    graft.jobs.SpatialJoinJob.saltedCellJoin(pages, polyCells)
       .where(col("lon") >= col("xmin") && col("lon") <= col("xmax") &&
         col("lat") >= col("ymin") && col("lat") <= col("ymax"))
       .groupBy(col("poly_id"))

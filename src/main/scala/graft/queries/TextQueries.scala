@@ -476,7 +476,7 @@ object TextQueries {
     * MinHash pass once per query. CorpusDedupJob stages exactly this
     * table in its lake; here the stage cache is the query-facing twin.
     * Values are deterministic, so every gate hash is unchanged. */
-  private def sigsDf(spark: SparkSession, sfDir: String): DataFrame =
+  private[graft] def sigsDf(spark: SparkSession, sfDir: String): DataFrame =
     StageCache.getOrPublish(spark, stageCacheDir(sfDir, "minhash_sigs")) {
       // the docs parquet is one row group (one scan task) — spread the
       // docs BEFORE the expensive MinHash projection so the pass runs on
@@ -561,25 +561,48 @@ object TextQueries {
 
   /** Banded candidates + exact refine over an already-materialized
     * signature table (in-memory checkpoint or committed stage) —
-    * UNORDERED; gate queries sort, jobs don't need to. The ONE
-    * implementation of the LSH candidate+refine pipeline: the gate
-    * queries, the label fixed point, and the staged job path
-    * ([[graft.jobs.StagedCC]]) all call this, so banding/threshold
-    * changes cannot silently diverge the byte-equality-coupled paths. */
-  private[graft] def pairsFromSigs(sigs: DataFrame): DataFrame = {
-    val bands = sigs.select(col("doc_id"),
+    * UNORDERED; gate queries sort, jobs don't need to. The gate queries,
+    * the label fixed point and the staged jobs all call this, so
+    * banding/threshold changes cannot silently diverge the
+    * byte-equality-coupled paths. */
+  private[graft] def pairsFromSigs(sigs: DataFrame): DataFrame =
+    pairsFromSigs(sigs, sigs)
+
+  /** The near-dup pairs of `sigs` with at least one end in `probe` (a
+    * subset of `sigs`): the incremental append probes with its new docs
+    * only, the full pipeline probes with the whole table. */
+  private[graft] def pairsFromSigs(probe: DataFrame, sigs: DataFrame): DataFrame =
+    signatureMatches(candidatePairs(bandRows(probe), bandRows(sigs)), sigs)
+      .where(col("n_match") >= TextOps.MatchThreshold)
+      .select(col("a"), col("b"), col("n_match"))
+
+  /** (doc_id, band, key): one row per doc and LSH band. */
+  private[graft] def bandRows(sigs: DataFrame): DataFrame =
+    sigs.select(col("doc_id"),
       posexplode(TextOps.bandKeys(col("sigs"))).as(Seq("band", "key")))
-    val cand = bands.select(col("band"), col("key"), col("doc_id").as("a"))
-      .join(bands.select(col("band"), col("key"), col("doc_id").as("b")),
+
+  /** Distinct candidate pairs (a < b) of docs sharing a band bucket — an
+    * equi-join on (band, key), so only same-bucket rows meet and the
+    * volume is O(N·bands·bucket_size), never O(N²). Canonicalizing with
+    * least/greatest makes the result independent of which side a doc is
+    * on, so a probe set may join a table that contains it. */
+  private[graft] def candidatePairs(probe: DataFrame, build: DataFrame): DataFrame =
+    probe.select(col("band"), col("key"), col("doc_id").as("x"))
+      .join(build.select(col("band"), col("key"), col("doc_id").as("y")),
         Seq("band", "key"))
+      .select(least(col("x"), col("y")).as("a"), greatest(col("x"), col("y")).as("b"))
       .where(col("a") < col("b"))
       .dropDuplicates("a", "b")
+
+  /** `cand` plus `n_match`: the count of agreeing positions of both ends'
+    * signatures (n_match/128 estimates Jaccard). */
+  private[graft] def signatureMatches(cand: DataFrame, sigs: DataFrame): DataFrame = {
+    GraftRegistrar.ensure(sigs.sparkSession)
     cand
       .join(sigs.select(col("doc_id").as("a"), col("sigs").as("sa")), Seq("a"))
       .join(sigs.select(col("doc_id").as("b"), col("sigs").as("sb")), Seq("b"))
       .withColumn("n_match", TextOps.sigMatches(col("sa"), col("sb")))
-      .where(col("n_match") >= TextOps.MatchThreshold)
-      .select(col("a"), col("b"), col("n_match"))
+      .drop("sa", "sb")
   }
 
   /** Near-dup GROUPS from the banded-LSH pair graph: connected components
@@ -735,46 +758,16 @@ object TextQueries {
       .orderBy(col("a"), col("b"))
   }
 
-  /** EXACT n-gram Jaccard near-dup (builder prompt's dedup list names it
-    * next to MinHash, which only ESTIMATES it): banded-LSH candidates,
-    * then |A∩B| / |A∪B| over each doc's DISTINCT 8-gram shingle-hash SET.
-    * Kept integer-exact — the gate outputs (common, nA, nB) and filters
-    * J ≥ 0.5 as 3·common ≥ nA+nB, so no float ever faces the oracle. At
-    * scale: candidates are O(N·bands) from the LSH equi-join, the shingle
-    * join is an equi-join on (hash), both shuffle-partitioned. */
-  /** (a, b, common, na, nb) shingle overlap over the LSH shortlist — the
-    * shared engine of q46 (Jaccard) and q92 (containment). */
-  /** The banded-LSH candidate pair frame over the staged signatures —
-    * the shared step of q46's exact engine and q115's eval (built ONCE
-    * per query; review: the eval used to run it twice, once inside each
-    * leg). LAZY on the warm path (optimization round): both sides of the
-    * band self-join are the SAME canonical subplan over the staged
-    * parquet, so ReuseExchange computes the (band, key) shuffle once —
-    * the previous two eager `trackedCheckpoint`s bought nothing the
-    * reused exchange doesn't, at the cost of two driver barriers per
-    * query (the q18 `pairsFromSigs` path has always run this shape
-    * checkpoint-free). The cold shingle-stage build, which reads the
-    * frame three times, checkpoints its OWN handle inside the closure
-    * ([[shingleOverlapFrom]]). */
-  private def bandedCandidates(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftRegistrar.ensure(spark)
-    val bands = sigsDf(spark, sfDir)
-      .select(col("doc_id"),
-        posexplode(TextOps.bandKeys(col("sigs"))).as(Seq("band", "key")))
-    bands.select(col("band"), col("key"), col("doc_id").as("a"))
-      .join(bands.select(col("band"), col("key"), col("doc_id").as("b")), Seq("band", "key"))
-      .where(col("a") < col("b"))
-      .select(col("a"), col("b")).dropDuplicates("a", "b")
+  private def shingleOverlap(spark: SparkSession, sfDir: String): DataFrame = {
+    val sigs = sigsDf(spark, sfDir)
+    shingleOverlapFrom(spark, sfDir, candidatePairs(bandRows(sigs), bandRows(sigs)))
   }
 
-  private def shingleOverlap(spark: SparkSession, sfDir: String): DataFrame =
-    shingleOverlapFrom(spark, sfDir, bandedCandidates(spark, sfDir))
-
-  /** q46's exact-Jaccard machinery over a prebuilt (checkpointed)
-    * candidate frame — candidates have NO n_match threshold applied
-    * (Jaccard decides). */
-  private def shingleOverlapFrom(spark: SparkSession, sfDir: String,
-                                 cand: DataFrame): DataFrame = {
+  /** (a, b, common, na, nb) shingle overlap over a banded-LSH candidate
+    * frame — the shared engine of q46 (Jaccard), q92 (containment) and
+    * q115. Candidates have NO n_match threshold applied (Jaccard decides). */
+  private[graft] def shingleOverlapFrom(spark: SparkSession, sfDir: String,
+                                        cand: DataFrame): DataFrame = {
     // shingle sets are computed ONLY for LSH-shortlisted docs: the
     // broadcast semi-join lands BEFORE the shingle explode, so the md5
     // pass runs over the few hundred candidates, not the whole corpus
@@ -790,7 +783,7 @@ object TextQueries {
         stageCacheDir(sfDir, "jaccard_shingles")) {
       // ONE-TIME cold build: materialize a local candidate handle so the
       // two union branches below read rows, not two more band self-joins
-      // (the warm path stays lazy — see bandedCandidates)
+      // (the warm path stays lazy)
       val candCk = cand.trackedCheckpoint
       val candDocs = candCk.select(col("a").as("doc_id"))
         .union(candCk.select(col("b").as("doc_id"))).distinct()
@@ -825,6 +818,13 @@ object TextQueries {
         size(col("hb")).cast("long").as("nb"))
   }
 
+  /** EXACT n-gram Jaccard near-dup (builder prompt's dedup list names it
+    * next to MinHash, which only ESTIMATES it): banded-LSH candidates,
+    * then |A∩B| / |A∪B| over each doc's DISTINCT 8-gram shingle-hash SET.
+    * Kept integer-exact — the gate outputs (common, nA, nB) and filters
+    * J ≥ 0.5 as 3·common ≥ nA+nB, so no float ever faces the oracle. At
+    * scale: candidates are O(N·bands) from the LSH equi-join, the shingle
+    * join is an equi-join on (hash), both shuffle-partitioned. */
   def ngramJaccard(spark: SparkSession, sfDir: String): DataFrame =
     shingleOverlap(spark, sfDir)
       .where(col("common") * 3 >= col("na") + col("nb")) // J ≥ 0.5, integer-exact
@@ -906,7 +906,7 @@ object TextQueries {
     * signature-only path at full scale.
     *
     * Scale shape: the banded candidate frame is built ONCE
-    * ([[bandedCandidates]]) and BOTH verdicts are evaluated as flags on
+    * ([[candidatePairs]]) and BOTH verdicts are evaluated as flags on
     * one pass over it; the signature and shingle inputs are staged
     * tables shared with q17/q46; every join and the one-row rollup run
     * over pair-table-sized frames only. */
@@ -919,14 +919,12 @@ object TextQueries {
     // extra pair-frame shuffle plus duplicated candidate-join chains to
     // compute the same three counts; a pair is "in" a leg iff its flag
     // holds, so the flag sums are the leg counts by construction).
-    val cand = bandedCandidates(spark, sfDir)
     val sigs = sigsDf(spark, sfDir)
-    shingleOverlapFrom(spark, sfDir, cand) // every cand pair, with common/na/nb
-      .join(sigs.select(col("doc_id").as("a"), col("sigs").as("sa")), Seq("a"))
-      .join(sigs.select(col("doc_id").as("b"), col("sigs").as("sb")), Seq("b"))
-      .select(
-        (TextOps.sigMatches(col("sa"), col("sb")) >= TextOps.MatchThreshold)
-          .as("lsh"),
+    val cand = candidatePairs(bandRows(sigs), bandRows(sigs))
+    // every cand pair survives with common/na/nb: the shingle build's
+    // greatest(length(text) - 7, 1) gives every doc ≥ 1 shingle row
+    signatureMatches(shingleOverlapFrom(spark, sfDir, cand), sigs)
+      .select((col("n_match") >= TextOps.MatchThreshold).as("lsh"),
         (col("common") * 3 >= col("na") + col("nb")).as("ex"))
       .agg(sum(when(col("lsh"), 1L).otherwise(0L)).as("n_lsh"),
         sum(when(col("ex"), 1L).otherwise(0L)).as("n_exact"),

@@ -69,6 +69,28 @@ object GeomSqlOps {
   def parseCached(wkb: Array[Byte]): GGeometry = geomCache.get().get(wkb)
 }
 
+/** Mixed into a kernel whose `compute` may return null for non-null
+  * inputs: its generated code takes `ev.isNull` from the result (a null
+  * unboxed or passed on as non-null would NPE or corrupt rows). */
+trait NullableResult extends Expression {
+  override def nullable: Boolean = true
+}
+
+/** Shared `doGenCode` body of the Graft base classes. */
+private[sql] object GraftCodegen {
+  def assign(ctx: CodegenContext, ev: ExprCode, e: Expression, call: String): String = {
+    val boxed = CodeGenerator.boxedType(e.dataType)
+    e match {
+      case _: NullableResult =>
+        val r = ctx.freshName("r")
+        s"""$boxed $r = ($boxed) $call;
+           |${ev.isNull} = $r == null;
+           |if (!${ev.isNull}) ${ev.value} = $r;""".stripMargin
+      case _ => s"${ev.value} = ($boxed) $call;"
+    }
+  }
+}
+
 /** Unary geometry-ish expression: compute on the unboxed child value. */
 abstract class GraftUnary extends UnaryExpression with Serializable {
   override def nullIntolerant: Boolean = true
@@ -77,8 +99,8 @@ abstract class GraftUnary extends UnaryExpression with Serializable {
   override def nullSafeEval(input: Any): Any = compute(input)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val ref = ctx.addReferenceObj("graftExpr", this, classOf[GraftUnary].getName)
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = (${CodeGenerator.boxedType(dataType)}) $ref.compute($c);")
+    nullSafeCodeGen(ctx, ev, c => GraftCodegen.assign(ctx, ev, this,
+      s"$ref.compute($c)"))
   }
 }
 
@@ -88,8 +110,8 @@ abstract class GraftBinary extends BinaryExpression with Serializable {
   override def nullSafeEval(a: Any, b: Any): Any = compute(a, b)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val ref = ctx.addReferenceObj("graftExpr", this, classOf[GraftBinary].getName)
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = (${CodeGenerator.boxedType(dataType)}) $ref.compute($a, $b);")
+    nullSafeCodeGen(ctx, ev, (a, b) => GraftCodegen.assign(ctx, ev, this,
+      s"$ref.compute($a, $b)"))
   }
 }
 
@@ -99,8 +121,8 @@ abstract class GraftTernary extends TernaryExpression with Serializable {
   override def nullSafeEval(a: Any, b: Any, c: Any): Any = compute(a, b, c)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val ref = ctx.addReferenceObj("graftExpr", this, classOf[GraftTernary].getName)
-    nullSafeCodeGen(ctx, ev, (a, b, c) =>
-      s"${ev.value} = (${CodeGenerator.boxedType(dataType)}) $ref.compute($a, $b, $c);")
+    nullSafeCodeGen(ctx, ev, (a, b, c) => GraftCodegen.assign(ctx, ev, this,
+      s"$ref.compute($a, $b, $c)"))
   }
 }
 

@@ -37,7 +37,8 @@ object VecKernels {
   * null poisons the fold). Two array<bigint> inputs dot in pure Long
   * arithmetic and return BIGINT (the q99 integer-projection dot — exact
   * under any accumulation order, so the kernel IS the fold it replaces). */
-case class VecDot(left: Expression, right: Expression) extends GraftBinary {
+case class VecDot(left: Expression, right: Expression)
+    extends GraftBinary with NullableResult { // ragged or null-element inputs
   @transient private lazy val bothLong =
     left.dataType.asInstanceOf[ArrayType].elementType == LongType &&
       right.dataType.asInstanceOf[ArrayType].elementType == LongType
@@ -142,10 +143,12 @@ case class SigMatches(left: Expression, right: Expression) extends GraftBinary {
   * `aggregate`) AND the intermediate `codes` checkpoint: every product
   * and sum is BIGINT (|y_j| ≤ 64·63·1000 ≈ 4e6 — no overflow), so the
   * result is independent of accumulation order and bit-identical to the
-  * fold it replaces. Null handling mirrors the HOF chain's observable
-  * behavior: a null element poisons every projection (the row's norm2
-  * goes null and the `norm2 > 0` filter drops it either way). */
-case class JlProject(left: Expression, right: Expression) extends GraftBinary {
+  * fold it replaces. A null element or a length other than Dim makes
+  * the whole projection NULL (interpreted and codegen'd alike — it is a
+  * [[NullableResult]]); `jlProjected` then drops the row, since vec_dot
+  * of a null array is null and fails its `norm2 > 0` filter. */
+case class JlProject(left: Expression, right: Expression)
+    extends GraftBinary with NullableResult {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
   override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
@@ -225,7 +228,7 @@ case class JlProject(left: Expression, right: Expression) extends GraftBinary {
   * pass computes all `count` planes — the weight matrix is materialized
   * once per expression instance, never per row. */
 case class PlaneDots(child: Expression, base: Expression, count: Expression)
-    extends GraftTernary {
+    extends GraftTernary with NullableResult { // wrong-length or null-element input
   override def first: Expression = child
   override def second: Expression = base
   override def third: Expression = count

@@ -233,27 +233,17 @@ class LakeSpec extends SparkTestBase {
     val root1 = freshRoot("bc")
     val broadcastRows = SpatialJoinJob.run(spark, sf, root1)
       .orderBy("poly_id").collect().map(_.toSeq).toSeq
-    // force the salted path by dropping the broadcast threshold
-    val root2 = freshRoot("salt")
-    val saved = SpatialJoinJob.BroadcastRowThreshold
+    // the job broadcasts its 6 polygons; drive its salted branch directly
     val shuffled = {
-      // re-run the salted branch directly (threshold is a val — drive the
-      // branch through its internals)
-      val lake = new graft.lake.LakeTable(root2)
       import graft.model.{Pages, PolygonLayer}
       import graft.sql.{functions => G}
       val pages = Pages.volumePages(spark, sf)
         .select(col("pid"), col("lon"), col("lat"), col("is_hot"),
           G.st_tile(col("lon"), col("lat"), 12).as("cell"))
-      val polys = PolygonLayer.toDF(spark)
-      val polyCells = polys
+      val polyCells = PolygonLayer.toDF(spark)
         .select(col("poly_id"), col("poly"),
           G.tiles_for(col("poly"), array(lit(8))).as(Seq("cell8", "x", "y", "z")))
-        .crossJoin(spark.range(SpatialJoinJob.SaltBuckets).select(col("id").cast("int").as("salt")))
-      val salted = pages
-        .withColumn("cell8", G.tile_parent(col("cell"), lit(4)))
-        .withColumn("salt", pmod(hash(col("pid")), lit(SpatialJoinJob.SaltBuckets)).cast("int"))
-      salted.join(polyCells, Seq("cell8", "salt"))
+      SpatialJoinJob.saltedCellJoin(pages, polyCells)
         .where(G.st_contains_xy(col("poly"), col("lon"), col("lat")))
         .groupBy(col("poly_id"))
         .agg(count(lit(1)).as("n"), min(col("pid")).as("min_pid"),

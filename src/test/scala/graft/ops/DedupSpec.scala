@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.queries.TextQueries
 import graft.sql.SparkTestBase
 import org.apache.spark.sql.functions._
 
@@ -28,21 +29,9 @@ class DedupSpec extends SparkTestBase {
     dupDocs ++ noiseDocs
   }
 
-  private def sigsOf(df: org.apache.spark.sql.DataFrame) = {
-    org.apache.spark.sql.GraftRegistrar.ensure(spark)
-    df.select(col("doc_id"), call_function("minhash128", col("text")).as("sigs"))
-  }
-
   test("minhash recall golden: planted near-dups all matched, noise all rejected") {
     val docs = corpus(clusters = 8, dups = 3, noise = 50).toDF("doc_id", "text")
-    val bands = sigsOf(docs).select(col("doc_id"), col("sigs"),
-      posexplode(TextOps.bandKeys(col("sigs"))).as(Seq("band", "key")))
-    val a = bands.select(col("band"), col("key"), col("doc_id").as("a"), col("sigs").as("sa"))
-    val b = bands.select(col("band"), col("key"), col("doc_id").as("b"), col("sigs").as("sb"))
-    val pairs = a.join(b, Seq("band", "key")).where(col("a") < col("b"))
-      .dropDuplicates("a", "b")
-      .withColumn("n_match", TextOps.sigMatches(col("sa"), col("sb")))
-      .where(col("n_match") >= TextOps.MatchThreshold)
+    val pairs = TextQueries.pairsFromSigs(TextQueries.sigsOf(spark, docs))
       .select("a", "b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     // expected: all within-cluster pairs (61-token docs sharing 60 tokens)
     val expected = (for (c <- 0 until 8; i <- 0 until 3; j <- i + 1 until 3)
@@ -54,11 +43,22 @@ class DedupSpec extends SparkTestBase {
     // 200 unrelated docs: with 32 bands the candidate count must stay near
     // zero — an accidental O(N²) plan would produce ~19900 pairs.
     val docs = corpus(clusters = 0, dups = 0, noise = 200).toDF("doc_id", "text")
-    val bands = sigsOf(docs).select(col("doc_id"),
-      posexplode(TextOps.bandKeys(col("sigs"))).as(Seq("band", "key")))
-    val cand = bands.as("x").join(bands.as("y"), Seq("band", "key"))
-      .where(col("x.doc_id") < col("y.doc_id")).count()
+    val bands = TextQueries.bandRows(TextQueries.sigsOf(spark, docs))
+    val cand = TextQueries.candidatePairs(bands, bands).count()
     assert(cand < 50, s"candidate pairs $cand — banding failed to separate noise")
+  }
+
+  test("q115 n_lsh: every LSH candidate pair survives the shingle-overlap joins") {
+    // dedupEval counts n_lsh over shingleOverlapFrom's output, so a
+    // candidate dropped there (a doc with no shingle row) would silently
+    // undercount it
+    val sf = "/root/testdata/sf0.001"
+    val sigs = TextQueries.sigsDf(spark, sf)
+    val cand = TextQueries.candidatePairs(TextQueries.bandRows(sigs), TextQueries.bandRows(sigs))
+    val n = cand.count()
+    assert(n > 0, "fixture must produce LSH candidates")
+    assert(TextQueries.shingleOverlapFrom(spark, sf, cand).count() === n)
+    org.apache.spark.sql.GraftCheckpoints.releaseAll()
   }
 
   test("min-propagation components: chain a-b-c collapses to one group") {

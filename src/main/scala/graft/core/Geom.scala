@@ -163,11 +163,6 @@ object Geom {
     case gg => planarArea(gg)
   }
 
-  private val Eck4CX = 0.42223820031577120149 // 2 / sqrt(4*pi + pi^2)
-  private val Eck4CY = 1.32650042817700232218 // 2 * sqrt(pi / (4 + pi))
-  private val Eck4Theta = math.Pi / 2 + 2     // (2 + pi/2) * sin(phi) target coeff
-  private val EarthR = 6371007.180918475      // authalic sphere radius (proj default ellps=GRS80→sphere? eck4 on sphere a=6371008.7714?)
-
   /** Eckert IV forward on the WGS84 authalic sphere. lon/lat degrees → x/y
     * meters. Public formula: x = 2/sqrt(pi(4+pi)) * R * lam * (1+cos th),
     * y = 2 sqrt(pi/(4+pi)) R sin th, with (th + sin th cos th + 2 sin th)

@@ -1152,9 +1152,8 @@ object Jp2Decoder {
     val i1 = i0 + n
     // symmetric extension lookup into absolute coordinates
     @inline def ext(i: Int): Int = {
-      var k = i
       val period = 2 * (n - 1)
-      var d = k - i0
+      var d = i - i0
       d = ((d % period) + period) % period
       if (d >= n) d = period - d
       d

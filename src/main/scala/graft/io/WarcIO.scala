@@ -1,10 +1,9 @@
 package graft.io
 
-import java.io.{BufferedInputStream, ByteArrayInputStream, EOFException, InputStream}
+import java.io.{BufferedInputStream, ByteArrayInputStream, InputStream}
 import java.util.zip.{GZIPInputStream, GZIPOutputStream}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
 
 /** One parsed WARC record (ISO 28500). `payload` is the raw record block
   * (for `response` records: the HTTP message or bare content bytes);

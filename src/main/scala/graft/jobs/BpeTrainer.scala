@@ -1,6 +1,6 @@
 package graft.jobs
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.GraftCheckpoints
 import org.apache.spark.sql.GraftCheckpoints.TrackedDataFrame
 import org.apache.spark.sql.functions._

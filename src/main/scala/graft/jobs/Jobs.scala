@@ -45,8 +45,8 @@ object SpatialJoinJob {
     val polys = PolygonLayer.toDF(spark)
 
     val joined = StageRunner.stage(spark, lake, "s2_pip_join") {
-      val polyCount = polys.count()
-      if (polyCount <= BroadcastRowThreshold) {
+      // the layer's row count is known on the driver: no job to count it
+      if (PolygonLayer.polys.size <= BroadcastRowThreshold) {
         // broadcast plan: zero shuffle on the probe side
         pages.join(broadcast(polys),
           col("lon") >= col("xmin") && col("lon") <= col("xmax") &&

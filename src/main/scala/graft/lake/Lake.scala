@@ -1,14 +1,15 @@
 package graft.lake
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftLineage, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructType}
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.nio.charset.StandardCharsets
 
 /** Iceberg-style table emulation (SURVEY.md §7: no Iceberg jar ships in
-  * this sandbox): each stage commit = parquet data files + per-partition
-  * lineage rows + an atomically-renamed JSON snapshot manifest. A rerun
+  * this sandbox): each stage commit = parquet data files + an
+  * atomically-renamed JSON snapshot manifest that carries the
+  * per-partition lineage rows. A rerun
   * consults the manifest and skips committed stages — the
   * checkpoint/resume contract of the north rule. Swap [[LakeTable]] for a
   * real Iceberg catalog by reimplementing the four methods. */
@@ -31,11 +32,6 @@ class LakeTable(val root: String) {
   private def manifestField(json: String, key: String): Option[String] =
     ("\"" + key + "\":\"([^\"]*)\"").r.findFirstMatchIn(json).map(_.group(1))
 
-  private def resolvePath(stage: String, key: String, legacy: String): String = {
-    val rel = manifest(stage).flatMap(manifestField(_, key)).getOrElse(legacy)
-    s"${stageDir(stage)}/$rel"
-  }
-
   /** The data directories (relative to the stage dir) a snapshot manifest
     * references: `data_paths` (comma-separated, written by appends) wins
     * over the single `data_path` of a rewrite commit. */
@@ -44,14 +40,33 @@ class LakeTable(val root: String) {
       .orElse(manifestField(m, "data_path").map(Seq(_)))
       .getOrElse(Seq.empty)
 
-  def read(spark: SparkSession, stage: String): DataFrame = {
+  /** The current snapshot's rows. A known `schema` (the build's, right
+    * after committing it) skips parquet's footer-inference job; a file
+    * source makes it nullable, so it equals the inferred one. */
+  def read(spark: SparkSession, stage: String,
+           schema: Option[StructType] = None): DataFrame = {
     val rels = manifest(stage).map(dataRelPaths).filter(_.nonEmpty)
       .getOrElse(Seq("data"))
-    spark.read.parquet(rels.map(r => s"${stageDir(stage)}/$r"): _*)
+    schema.fold(spark.read)(spark.read.schema)
+      .parquet(rels.map(r => s"${stageDir(stage)}/$r"): _*)
   }
 
-  def readLineage(spark: SparkSession, stage: String): DataFrame =
-    spark.read.parquet(resolvePath(stage, "lineage_path", "lineage"))
+  /** The current snapshot's lineage, one row per write task that wrote
+    * rows: (partition_id, output_rows, checksum, stage, wall_ms). Built
+    * from the manifest alone — no Spark job, no file read. */
+  def readLineage(spark: SparkSession, stage: String): DataFrame = {
+    val m = manifest(stage).getOrElse(
+      throw new IllegalArgumentException(s"stage $stage has no committed snapshot"))
+    val lin = manifestField(m, "lineage").getOrElse(
+      throw new IllegalStateException(s"stage $stage: manifest carries no lineage"))
+    val wallMs = manifestField(m, "wall_ms").fold(0L)(_.toLong)
+    val rows = lin.split(",").toSeq.filter(_.nonEmpty).map { e =>
+      val Array(p, n, c) = e.split(":")
+      Row(p.toInt, n.toLong, c.toLong, stage, wallMs)
+    }
+    import scala.jdk.CollectionConverters._
+    spark.createDataFrame(rows.asJava, LakeTable.LineageSchema)
+  }
 
   // ------------------------------------------------- snapshots / time-travel
   /** Committed snapshot versions of a stage, ascending (Iceberg-style
@@ -104,13 +119,13 @@ class LakeTable(val root: String) {
   }
 
   /** Commit a stage — single-pass (VERDICT r1 #7 / ADVICE r1):
-    *  1. ONE evaluation of the plan: the data parquet write.
-    *  2. ONE scan of the COMMITTED bytes computing lineage + row count
-    *     together (so checksums describe exactly the files a reader sees,
-    *     not a second nondeterministically-partitioned evaluation).
-    *  3. The P collected lineage rows (bounded by partition count, never
-    *     by data size) are written back from the driver — a zero-data-scan
-    *     job — then the manifest lands via write-tmp + ATOMIC_MOVE.
+    *  1. write + lineage in one job: ONE evaluation of the plan writes the
+    *     data parquet, and each write task counts and checksums exactly
+    *     the rows it hands the writer ([[GraftLineage]]), so the lineage
+    *     describes the committed files without reading them back;
+    *  2. manifest: the P lineage rows (bounded by partition count, never
+    *     by data size) and the row count go into the snapshot manifest,
+    *     which lands via write-tmp + ATOMIC_MOVE.
     * Partial writes without a manifest are invisible to readers and get
     * overwritten on retry.
     *
@@ -195,9 +210,12 @@ class LakeTable(val root: String) {
     * TOCTOU the single-manifest-read parentV closes). No-op in production. */
   protected def onAppendBeforeCas(): Unit = ()
 
-  /** snapshot payload files on disk, not yet referenced by any pointer. */
+  /** snapshot payload files on disk, not yet referenced by any pointer,
+    * with the lineage their write tasks recorded. */
   private case class SnapshotFiles(version: Int, dataRel: String,
-                                   lineageRel: String, rows: Long)
+                                   lineage: Seq[GraftLineage.Part], wallMs: Long) {
+    def rows: Long = lineage.map(_.rows).sum
+  }
 
   /** Atomically claim the next free version number: CREATE_NEW on
     * `_claim_v<N>.json` — two concurrent writers can never both own N, so
@@ -219,25 +237,16 @@ class LakeTable(val root: String) {
     -1 // unreachable
   }
 
-  /** Write the snapshot's data + lineage parquet under a freshly-claimed
-    * version. Invisible to readers until a pointer references it. */
+  /** Write the snapshot's data under a freshly-claimed version, recording
+    * its lineage in the same job. Invisible to readers until a pointer
+    * references it. */
   private def writeSnapshotFiles(stage: String, data: DataFrame): SnapshotFiles = {
     val t0 = System.nanoTime()
-    val dir = stageDir(stage)
     val version = claimVersion(stage)
-    data.write.mode("overwrite").parquet(s"$dir/data_v$version")
-
-    val spark = data.sparkSession
-    val committed = spark.read.parquet(s"$dir/data_v$version")
-    val linDf = StageRunner.lineageOf(stage, committed)
-    val lin = linDf.collect()
-    val rows = lin.map(_.getAs[Long]("output_rows")).sum
-    val wallMs = (System.nanoTime() - t0) / 1000000
-    val schema = linDf.schema.add("wall_ms", LongType, nullable = false)
-    val withWall: Seq[Row] = lin.toSeq.map(r => Row.fromSeq(r.toSeq :+ wallMs))
-    spark.createDataFrame(spark.sparkContext.parallelize(withWall, 1), schema)
-      .write.mode("overwrite").parquet(s"$dir/lineage_v$version")
-    SnapshotFiles(version, s"data_v$version", s"lineage_v$version", rows)
+    val lineage = GraftLineage.recordWhile(data)(
+      _.write.mode("overwrite").parquet(s"${stageDir(stage)}/data_v$version"))
+    SnapshotFiles(version, s"data_v$version", lineage,
+      (System.nanoTime() - t0) / 1000000)
   }
 
   /** `version` names the manifest; the payload paths come from `sf` (they
@@ -251,7 +260,9 @@ class LakeTable(val root: String) {
       "version" -> version.toString,
       "data_path" -> sf.dataRel,
       "data_paths" -> rels.mkString(","),
-      "lineage_path" -> sf.lineageRel,
+      "lineage" -> sf.lineage
+        .map(p => s"${p.partition}:${p.rows}:${p.checksum}").mkString(","),
+      "wall_ms" -> sf.wallMs.toString,
       "row_count" -> (parentRows + sf.rows).toString,
       "committed_at" -> java.time.Instant.now().toString)
     fields.map { case (k, v) =>
@@ -378,7 +389,7 @@ class LakeTable(val root: String) {
     * removal): drop every snapshot older than the newest `retainLast`,
     * ALWAYS keeping the one the current pointer references (a rolled-back
     * table never loses the data it is serving) — then delete the dropped
-    * snapshots' data/lineage files and any stray tmp dirs. Time-travel to
+    * snapshots' data files and any stray tmp dirs. Time-travel to
     * a dropped version fails afterwards; retained versions are untouched.
     * Returns the dropped versions. */
   def vacuum(stage: String, retainLast: Int,
@@ -398,7 +409,6 @@ class LakeTable(val root: String) {
     drop.foreach { v =>
       if (!referenced.contains(s"data_v$v"))
         rmTree(Paths.get(s"${stageDir(stage)}/data_v$v"))
-      rmTree(Paths.get(s"${stageDir(stage)}/lineage_v$v"))
       Files.deleteIfExists(Paths.get(s"${stageDir(stage)}/_manifest_v$v.json"))
       Files.deleteIfExists(Paths.get(s"${stageDir(stage)}/_claim_v$v.json"))
     }
@@ -430,6 +440,14 @@ object LakeTable {
   /** In-JVM serialization ahead of the OS pointer lock (same-JVM
     * contenders on one file lock throw OverlappingFileLockException). */
   private[lake] val PointerMonitor = new Object
+
+  /** [[readLineage]]'s columns. */
+  private val LineageSchema = new StructType()
+    .add("partition_id", IntegerType, nullable = false)
+    .add("output_rows", LongType, nullable = false)
+    .add("checksum", LongType, nullable = false)
+    .add("stage", StringType, nullable = false)
+    .add("wall_ms", LongType, nullable = false)
 }
 
 /** A concurrent writer advanced the stage pointer past the snapshot this
@@ -448,24 +466,17 @@ final class ConcurrentCommitException(val stage: String, val attempted: Int,
   * (stage, partition_id, output_rows, checksum) — SURVEY.md §2.11. */
 object StageRunner {
 
-  /** Order-independent content checksum per Spark partition:
-    * bit_xor of xxhash64 over all columns (overflow-free under ANSI). */
-  def lineageOf(stage: String, df: DataFrame): DataFrame = {
-    val cols = df.columns.map(col).toSeq
-    df.withColumn("__pid", spark_partition_id())
-      .groupBy(col("__pid").as("partition_id"))
-      .agg(count(lit(1)).as("output_rows"),
-        bit_xor(xxhash64(cols: _*)).as("checksum"))
-      .withColumn("stage", lit(stage))
-  }
-
   /** Run (or resume) a stage: if the manifest exists, read the committed
     * result instead of recomputing — rerunning a failed job resumes after
     * the last committed stage. The build plan is evaluated exactly once
-    * (the data write inside [[LakeTable.commit]]). */
+    * (the data write inside [[LakeTable.commit]]), and a fresh commit is
+    * read back with the build's schema. */
   def stage(spark: SparkSession, lake: LakeTable, name: String,
-            meta: Map[String, String] = Map.empty)(build: => DataFrame): DataFrame = {
-    if (!lake.isCommitted(name)) lake.commit(name, build, meta)
-    lake.read(spark, name)
-  }
+            meta: Map[String, String] = Map.empty)(build: => DataFrame): DataFrame =
+    if (lake.isCommitted(name)) lake.read(spark, name)
+    else {
+      val df = build
+      lake.commit(name, df, meta)
+      lake.read(spark, name, Some(df.schema))
+    }
 }

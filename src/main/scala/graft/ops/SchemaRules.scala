@@ -19,7 +19,7 @@ object SchemaRules {
   def unifyPropertyType(name: String, observed: Seq[Option[DataType]]): Option[DataType] =
     observed.foldLeft(Option.empty[DataType]) {
       case (None, t) => t
-      case (acc @ Some(a), Some(b)) if a != b =>
+      case (Some(a), Some(b)) if a != b =>
         throw new FeatureCollectionIOError(
           s"property '$name' has conflicting types: $a vs $b")
       case (acc, _) => acc

@@ -1,8 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import graft.sql.{functions => G}
 
 /** telluric's BaseCollection/FeatureCollection operator surface

@@ -701,7 +701,6 @@ object QualityQueries {
     * document length, never a global ordering). At 10^12 docs the global
     * count is a partial-aggregated 16-byte-key rollup — the same plan. */
   def spanDedup(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val k = SpanK
     val grams = docs(spark, sfDir)
       .select(col("doc_id"), split(col("text"), " ").as("a"))
@@ -2002,7 +2001,6 @@ object QualityOracles {
     * the 16-word q82 blocks, same distinct-pair / first-seen algebra. */
   val crawlNovelty: String = {
     val w = QualityQueries.BlockW
-    val base = graft.model.Pages.DocEpochBase
     val mul = graft.model.Pages.DocEpochMul
     val mod = graft.model.Pages.DocEpochMod
     val bs = QualityQueries.NoveltyBucketS

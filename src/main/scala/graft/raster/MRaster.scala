@@ -1,7 +1,7 @@
 package graft.raster
 
-import graft.core.{Geom, Mercator}
-import graft.core.Geom.{Geometry, GPoint, GPolygon, GMultiPolygon, GCollection, Pt}
+import graft.core.Geom
+import graft.core.Geom.{Geometry, GPoint, GPolygon, GMultiPolygon, GCollection}
 
 /** Affine transform, rasterio/affine-library convention:
   * x = a*col + b*row + c ; y = d*col + e*row + f

@@ -1,6 +1,6 @@
 package graft.raster
 
-import graft.core.{Geom, Mercator}
+import graft.core.Mercator
 
 /** merge_all / merge_two semantics (georaster.py:95-450), ported rule-for-
   * rule: band strategies LEFT_ALL/INTERSECTION/UNION over an insertion-

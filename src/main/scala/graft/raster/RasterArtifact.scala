@@ -98,7 +98,7 @@ object Png {
   * tiling. */
 object RasterArtifact {
 
-  import org.apache.spark.sql.{DataFrame, SparkSession}
+  import org.apache.spark.sql.SparkSession
   import java.nio.file.{Files, Paths, StandardCopyOption}
   import java.nio.charset.StandardCharsets
 
@@ -121,9 +121,6 @@ object RasterArtifact {
     val a = r.affine
     val bands = r.bandNames.map(b => "\"" + b + "\"").mkString("[", ",", "]")
     val lv = (1 +: levels).mkString("[", ",", "]")
-    val tagStr = tags.map { case (k, v) =>
-      "\"" + k.replace("\"", "'") + "\":\"" + v.replace("\"", "'") + "\""
-    }.mkString("{", ",", "}")
     s"""{"width":${r.width},"height":${r.height},
        |"affine":[${a.a},${a.b},${a.c},${a.d},${a.e},${a.f}],
        |"crs":${r.crs},"dtype":"${r.dtype}","nodata":${r.nodata.map(_.toString).getOrElse("null")},

@@ -1,6 +1,6 @@
 package graft.raster
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The tile-relation: a GeoRaster as a Dataset of fixed-size chunks —

@@ -1,6 +1,6 @@
 package graft.sql
 
-import graft.core.{Geom, Mercator}
+import graft.core.Geom
 import graft.core.Geom.{Geometry => GGeometry, GPoint, GPolygon, GMultiPolygon}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._

@@ -182,6 +182,94 @@ class LakeSpec extends SparkTestBase {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
+  /** xor of `xxhash64(<all columns>)` over a frame's rows. */
+  private def xorHash(df: org.apache.spark.sql.DataFrame): Long =
+    df.agg(bit_xor(xxhash64(df.columns.map(col).toSeq: _*))).head().getLong(0)
+
+  private def lineageXor(lake: LakeTable, stage: String): Long =
+    lake.readLineage(spark, stage).collect().map(_.getAs[Long]("checksum"))
+      .foldLeft(0L)(_ ^ _)
+
+  private def lineageRows(lake: LakeTable, stage: String): Long =
+    lake.readLineage(spark, stage).collect().map(_.getAs[Long]("output_rows")).sum
+
+  test("write-task lineage describes the committed rows: checksums xor to bit_xor(xxhash64(*)), rows sum to row_count") {
+    val root = freshRoot("linsum")
+    val lake = new LakeTable(root)
+    def mixed(lo: Long, hi: Long) = spark.range(lo, hi).toDF("id")
+      .withColumn("name", when(col("id") % 7 =!= 0, concat(lit("n"), col("id").cast("string"))))
+      .withColumn("x", col("id") * 0.25)
+      .withColumn("xs", array(col("id"), col("id") + 1))
+      .repartition(4, col("id"))
+    lake.commit("s", mixed(0, 1000), Map.empty)
+    assert(lineageXor(lake, "s") === xorHash(lake.read(spark, "s")))
+    assert(lineageRows(lake, "s") === 1000L)
+    assert(lake.rowCount("s").contains(1000L))
+    // an append's lineage covers its delta only; row_count is the total.
+    // xor cancels the parent's rows out of the new snapshot's checksum.
+    val v = lake.commitAppend("s", mixed(5000, 5300), Map.empty)
+    assert(lineageXor(lake, "s") ===
+      (xorHash(lake.read(spark, "s")) ^ xorHash(lake.readAt(spark, "s", v - 1))))
+    assert(lineageRows(lake, "s") === 300L)
+    assert(lake.rowCount("s").contains(1300L))
+  }
+
+  test("a fresh stage and its resumed rerun return equal schemas and rows") {
+    val root = freshRoot("schema")
+    val lake = new LakeTable(root)
+    var builds = 0
+    def run() = StageRunner.stage(spark, lake, "s1") {
+      builds += 1
+      spark.range(50).toDF("id")
+        .withColumn("tag", when(col("id") % 3 === 0, lit("t")))
+        .withColumn("pt", struct(col("id").cast("double").as("x"), lit(1.5).as("y")))
+        .withColumn("xs", array(col("id"), lit(null).cast("long")))
+        .withColumn("kv", map(col("id").cast("string"), col("id") * 2))
+    }
+    val fresh = run()
+    val resumed = run()
+    assert(builds === 1)
+    assert(fresh.schema === resumed.schema)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("id").collect().map(_.toSeq).toSeq
+    assert(rows(fresh) === rows(resumed))
+  }
+
+  test("a stage commit reads 0 bytes of committed data") {
+    val root = freshRoot("zeroread")
+    val lake = new LakeTable(root)
+    val sc = spark.sparkContext
+    val bytesRead = new java.util.concurrent.atomic.AtomicLong(0)
+    val markerJob = new java.util.concurrent.atomic.AtomicInteger(-1)
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (t.taskMetrics != null)
+          bytesRead.addAndGet(t.taskMetrics.inputMetrics.bytesRead)
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(j.properties).exists(_.getProperty("lakespec.marker") != null))
+          markerJob.set(j.jobId)
+      override def onJobEnd(j: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+        if (j.jobId == markerJob.get) drained.countDown()
+    }
+    sc.addSparkListener(listener)
+    try {
+      StageRunner.stage(spark, lake, "s1") {
+        spark.range(200000).toDF("id")
+          .withColumn("payload", md5(col("id").cast("string")))
+          .repartition(4)
+      }
+      // listener events arrive in order: once a marker job's end is seen,
+      // every task of the commit has been counted
+      sc.setLocalProperty("lakespec.marker", "1")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty("lakespec.marker", null)
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      assert(lake.rowCount("s1").contains(200000L))
+      assert(bytesRead.get() === 0L,
+        s"the commit read ${bytesRead.get()} bytes back from what it wrote")
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("snapshot versioning: recommit → v2, time-travel readAt, atomic rollback") {
     val root = freshRoot("snap")
     val lake = new LakeTable(root)

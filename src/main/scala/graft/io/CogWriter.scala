@@ -1,6 +1,6 @@
 package graft.io
 
-import java.nio.{ByteBuffer, ByteOrder}
+import java.nio.ByteBuffer
 import java.nio.file.{Files, Paths}
 
 import graft.raster.{MRaster, Reproject, Resample, RasterArtifact}
@@ -34,77 +34,6 @@ object CogWriter {
 
   val BlockSize = 256
 
-  private final case class Entry(tag: Int, ttype: Int, count: Int,
-                                 payload: Array[Byte])
-
-  private def shorts(vs: Int*): Array[Byte] = {
-    val b = ByteBuffer.allocate(2 * vs.length).order(ByteOrder.LITTLE_ENDIAN)
-    vs.foreach(v => b.putShort(v.toShort)); b.array()
-  }
-  private def longs(vs: Long*): Array[Byte] = {
-    val b = ByteBuffer.allocate(4 * vs.length).order(ByteOrder.LITTLE_ENDIAN)
-    vs.foreach(v => b.putInt(v.toInt)); b.array()
-  }
-  private def dbls(vs: Double*): Array[Byte] = {
-    val b = ByteBuffer.allocate(8 * vs.length).order(ByteOrder.LITTLE_ENDIAN)
-    vs.foreach(b.putDouble); b.array()
-  }
-  private def ascii(s: String): Array[Byte] = (s + " ").getBytes("ISO-8859-1")
-
-  private def deflate(data: Array[Byte]): Array[Byte] = {
-    val d = new java.util.zip.Deflater()
-    d.setInput(data); d.finish()
-    val buf = new Array[Byte](data.length + 64)
-    val out = new java.io.ByteArrayOutputStream()
-    while (!d.finished()) out.write(buf, 0, d.deflate(buf))
-    d.end()
-    out.toByteArray
-  }
-
-  private def dtypeInfo(dtype: String): (Int, Int) = dtype match {
-    case "uint8" => (1, 8)
-    case "uint16" => (1, 16)
-    case "uint32" => (1, 32)
-    case "int16" => (2, 16)
-    case "int32" => (2, 32)
-    case "float32" => (3, 32)
-    case "float64" => (3, 64)
-    case d => throw new IllegalArgumentException(s"cannot write dtype $d")
-  }
-
-  /** chunky-interleaved deflated sample tile (padded to tile dims). */
-  private def sampleTile(r: MRaster, tx: Int, ty: Int, tw: Int, th: Int,
-                         bytesPerSample: Int): Array[Byte] = {
-    val spp = r.numBands
-    val raw = ByteBuffer.allocate(tw * th * spp * bytesPerSample)
-      .order(ByteOrder.LITTLE_ENDIAN)
-    var row = 0
-    while (row < th) {
-      val gy = ty * th + row
-      var c = 0
-      while (c < tw) {
-        val gx = tx * tw + c
-        val inside = gx < r.width && gy < r.height
-        var s = 0
-        while (s < spp) {
-          val v = if (inside) r.image(s)(gy * r.width + gx) else 0.0
-          val at = ((row * tw + c) * spp + s) * bytesPerSample
-          r.dtype match {
-            case "uint8" => raw.put(at, v.toInt.toByte)
-            case "uint16" | "int16" => raw.putShort(at, v.toInt.toShort)
-            case "uint32" | "int32" => raw.putInt(at, v.toLong.toInt)
-            case "float32" => raw.putFloat(at, v.toFloat)
-            case "float64" => raw.putDouble(at, v)
-          }
-          s += 1
-        }
-        c += 1
-      }
-      row += 1
-    }
-    deflate(raw.array())
-  }
-
   /** 1-bit mask tile, MSB-first fill order, bit 1 = VALID (GDAL mask). */
   private def maskTile(r: MRaster, tx: Int, ty: Int, tw: Int, th: Int): Array[Byte] = {
     val rowBytes = (tw + 7) / 8
@@ -123,18 +52,8 @@ object CogWriter {
       }
       row += 1
     }
-    deflate(raw)
+    Tiff.deflate(raw)
   }
-
-  private final case class Ifd(entries: Seq[Entry], tiles: Seq[Array[Byte]])
-
-  /** external values are even-padded (TIFF 6.0: values begin on a word
-    * boundary; ASCII payloads can be odd-length). */
-  private def padded(len: Int): Int = len + (len & 1)
-
-  /** IFD block size on disk: entry table + next pointer + external values. */
-  private def ifdBlockSize(e: Seq[Entry]): Int =
-    2 + 12 * e.length + 4 + e.map(_.payload.length).filter(_ > 4).map(padded).sum
 
   def write(r: MRaster, path: String, blocksize: Int = BlockSize): Unit =
     writeLayout(r, path, blocksize, cogDataOrder = true)
@@ -145,9 +64,6 @@ object CogWriter {
     * are not vacuous. */
   private[io] def writeLayout(r: MRaster, path: String, blocksize: Int,
                               cogDataOrder: Boolean): Unit = {
-    val (sampleFormat, bps) = dtypeInfo(r.dtype)
-    val spp = r.numBands
-    val bytesPerSample = bps / 8
     val tw = blocksize
     val th = blocksize
 
@@ -159,141 +75,53 @@ object CogWriter {
         resampling = Resample.Cubic)
     }
 
-    def tilesOf(lvl: MRaster): Seq[Array[Byte]] = {
+    def tilesOf(lvl: MRaster)(tile: (Int, Int) => Array[Byte]): Seq[Array[Byte]] = {
       val ta = (lvl.width + tw - 1) / tw
       val td = (lvl.height + th - 1) / th
-      (0 until td).flatMap(ty => (0 until ta).map(tx =>
-        sampleTile(lvl, tx, ty, tw, th, bytesPerSample)))
+      (0 until td).flatMap(ty => (0 until ta).map(tx => tile(tx, ty)))
     }
-    def maskTilesOf(lvl: MRaster): Seq[Array[Byte]] = {
-      val ta = (lvl.width + tw - 1) / tw
-      val td = (lvl.height + th - 1) / th
-      (0 until td).flatMap(ty => (0 until ta).map(tx => maskTile(lvl, tx, ty, tw, th)))
-    }
+    // dims, Deflate, tile size. Dims as LONG (TIFF allows SHORT or LONG):
+    // a pyramided raster routinely exceeds 65535 px and a SHORT would
+    // silently wrap
+    def tileEntries(lvl: MRaster): Seq[Tiff.Entry] = Seq(
+      Tiff.longs(256, lvl.width.toLong),
+      Tiff.longs(257, lvl.height.toLong),
+      Tiff.shorts(259, 8),
+      Tiff.shorts(322, tw),
+      Tiff.shorts(323, th))
 
-    val nodataStr = r.nodata.map(nd =>
-      if (nd == nd.toLong) nd.toLong.toString else nd.toString)
-    val bandNamesXml =
-      "<GDALMetadata>\n  <Item name=\"band_names\" domain=\"rastile\">[" +
-        r.bandNames.mkString(", ") + "]</Item>\n</GDALMetadata>\n"
-    val geographic = r.crs == 4326
-    val geoKeys: Seq[Int] = Seq(
-      1, 1, 0, 3,
-      1024, 0, 1, if (geographic) 2 else 1,
-      1025, 0, 1, 1) ++
-      (if (geographic) Seq(2048, 0, 1, r.crs) else Seq(3072, 0, 1, r.crs))
-
-    // entries with PLACEHOLDER 324 offsets; counts (hence sizes) are final
-    def imageIfd(lvl: MRaster, isOverview: Boolean, withGeo: Boolean): Ifd = {
-      val tiles = tilesOf(lvl)
-      val es = (Seq.empty[Entry] ++
-        (if (isOverview) Seq(Entry(254, 4, 1, longs(1L))) else Nil) ++ Seq(
-        // dims as LONG (TIFF allows SHORT or LONG): a pyramided raster
-        // routinely exceeds 65535 px and a SHORT would silently wrap
-        Entry(256, 4, 1, longs(lvl.width.toLong)),
-        Entry(257, 4, 1, longs(lvl.height.toLong)),
-        Entry(258, 3, spp, shorts(Seq.fill(spp)(bps): _*)),
-        Entry(259, 3, 1, shorts(8)),
-        Entry(262, 3, 1, shorts(if (spp >= 3) 2 else 1)),
-        Entry(277, 3, 1, shorts(spp)),
-        Entry(284, 3, 1, shorts(1)),
-        Entry(322, 3, 1, shorts(tw)),
-        Entry(323, 3, 1, shorts(th)),
-        Entry(324, 4, tiles.length, longs(tiles.map(_ => 0L): _*)),
-        Entry(325, 4, tiles.length, longs(tiles.map(_.length.toLong): _*)),
-        Entry(339, 3, spp, shorts(Seq.fill(spp)(sampleFormat): _*))) ++
-        (if (withGeo) Seq(
-          Entry(33550, 12, 3, dbls(r.affine.a, -r.affine.e, 0.0)),
-          Entry(33922, 12, 6, dbls(0, 0, 0, r.affine.c, r.affine.f, 0)),
-          Entry(34735, 3, geoKeys.length, shorts(geoKeys: _*)),
-          Entry(42112, 2, bandNamesXml.length + 1, ascii(bandNamesXml))) ++
-          nodataStr.map(s => Entry(42113, 2, s.length + 1, ascii(s))).toSeq
-        else Nil)).sortBy(_.tag)
-      Ifd(es, tiles)
-    }
+    def imageIfd(lvl: MRaster, isOverview: Boolean): Tiff.Ifd = Tiff.Ifd(
+      (if (isOverview) Seq(Tiff.longs(254, 1L)) else Tiff.geoEntries(r)) ++
+        tileEntries(lvl) ++ Tiff.sampleEntries(lvl),
+      tilesOf(lvl)((tx, ty) => Tiff.deflate(Tiff.chunky(lvl, tx * tw, ty * th, tw, th))),
+      tiled = true)
     // subfileType 4 = mask of the full-res image; 5 = FILETYPE_REDUCEDIMAGE
     // | FILETYPE_MASK — mask of an overview (GDAL internal-mask layout)
-    def maskIfd(lvl: MRaster, subfileType: Long): Ifd = {
-      val tiles = maskTilesOf(lvl)
-      val es = Seq(
-        Entry(254, 4, 1, longs(subfileType)),
-        Entry(256, 4, 1, longs(lvl.width.toLong)),
-        Entry(257, 4, 1, longs(lvl.height.toLong)),
-        Entry(258, 3, 1, shorts(1)),
-        Entry(259, 3, 1, shorts(8)),
-        Entry(262, 3, 1, shorts(4)),
-        Entry(277, 3, 1, shorts(1)),
-        Entry(284, 3, 1, shorts(1)),
-        Entry(322, 3, 1, shorts(tw)),
-        Entry(323, 3, 1, shorts(th)),
-        Entry(324, 4, tiles.length, longs(tiles.map(_ => 0L): _*)),
-        Entry(325, 4, tiles.length, longs(tiles.map(_.length.toLong): _*)),
-        Entry(339, 3, 1, shorts(1))).sortBy(_.tag)
-      Ifd(es, tiles)
-    }
+    def maskIfd(lvl: MRaster, subfileType: Long): Tiff.Ifd = Tiff.Ifd(
+      Seq(Tiff.longs(254, subfileType),
+        Tiff.shorts(258, 1),
+        Tiff.shorts(262, 4),
+        Tiff.shorts(277, 1),
+        Tiff.shorts(284, 1),
+        Tiff.shorts(339, 1)) ++ tileEntries(lvl),
+      tilesOf(lvl)((tx, ty) => maskTile(lvl, tx, ty, tw, th)),
+      tiled = true)
 
     // chain order = main, overviews (descending), full-res mask, overview
     // masks (the GDAL internal-mask IFD layout)
     val nOvr = overviews.length
-    val ifds: Seq[Ifd] =
-      (imageIfd(r, isOverview = false, withGeo = true) +:
-        overviews.map(o => imageIfd(o, isOverview = true, withGeo = false))) ++
-        (maskIfd(r, 4L) +: overviews.map(o => maskIfd(o, 5L)))
+    val ifds: Seq[Tiff.Ifd] =
+      (imageIfd(r, isOverview = false) +: overviews.map(imageIfd(_, isOverview = true))) ++
+        (maskIfd(r, 4L) +: overviews.map(maskIfd(_, 5L)))
 
     // layout: [header][IFD blocks in chain order][all mask data]
     //         [smallest-ovr data]…[largest-ovr data][main data]
-    val ifdOffsets = ifds.scanLeft(8)((off, ifd) => off + ifdBlockSize(ifd.entries)).init
-    val dataStart = 8 + ifds.map(i => ifdBlockSize(i.entries)).sum
     // data write order by IFD index: masks first, then overviews reversed
     // (smallest first), then main (index 0) LAST
     val dataOrder: Seq[Int] =
       if (cogDataOrder) (nOvr + 1 until ifds.length) ++ (nOvr to 1 by -1) ++ Seq(0)
       else Seq(0) ++ (nOvr + 1 until ifds.length) ++ (nOvr to 1 by -1)
-    var cursor = dataStart.toLong
-    val tileOffsets: Map[Int, Seq[Long]] = dataOrder.map { idx =>
-      val offs = ifds(idx).tiles.map { t =>
-        val o = cursor; cursor += t.length; o
-      }
-      idx -> offs
-    }.toMap
-    require(cursor < Int.MaxValue.toLong,
-      s"COG would be $cursor bytes — classic TIFF offsets are 32-bit; " +
-        "shard the raster (RasterArtifact) or reduce it before writing " +
-        "(BigTIFF is out of scope)")
-    val total = cursor.toInt
-
-    val out = ByteBuffer.allocate(total).order(ByteOrder.LITTLE_ENDIAN)
-    out.put(0, 'I'.toByte); out.put(1, 'I'.toByte)
-    out.putShort(2, 42); out.putInt(4, 8)
-    ifds.zipWithIndex.foreach { case (ifd, idx) =>
-      val base = ifdOffsets(idx)
-      val entries = ifd.entries.map { e =>
-        if (e.tag == 324) e.copy(payload = longs(tileOffsets(idx): _*)) else e
-      }
-      out.putShort(base, entries.length.toShort)
-      var extOff = base + 2 + 12 * entries.length + 4
-      entries.zipWithIndex.foreach { case (e, i) =>
-        val at = base + 2 + 12 * i
-        out.putShort(at, e.tag.toShort)
-        out.putShort(at + 2, e.ttype.toShort)
-        out.putInt(at + 4, e.count)
-        if (e.payload.length <= 4)
-          System.arraycopy(e.payload.padTo(4, 0.toByte), 0, out.array(), at + 8, 4)
-        else {
-          System.arraycopy(longs(extOff.toLong), 0, out.array(), at + 8, 4)
-          System.arraycopy(e.payload, 0, out.array(), extOff, e.payload.length)
-          extOff += padded(e.payload.length)
-        }
-      }
-      val next = if (idx + 1 < ifds.length) ifdOffsets(idx + 1) else 0
-      out.putInt(base + 2 + 12 * entries.length, next)
-    }
-    ifds.indices.foreach { idx =>
-      ifds(idx).tiles.zip(tileOffsets(idx)).foreach { case (t, o) =>
-        System.arraycopy(t, 0, out.array(), o.toInt, t.length)
-      }
-    }
-    Files.write(Paths.get(path), out.array())
+    Tiff.write(path, ifds, dataOrder)
   }
 }
 
@@ -303,88 +131,42 @@ object CogWriter {
 object CogValidator {
 
   /** (NewSubfileType, width, height) per chained IFD — spec hook for
-    * asserting the main/overview/mask IFD inventory. */
-  def ifdSummary(path: String): Seq[(Long, Int, Int)] = {
-    val bytes = Files.readAllBytes(Paths.get(path))
-    val order =
-      if (bytes(0) == 'I' && bytes(1) == 'I') ByteOrder.LITTLE_ENDIAN
-      else ByteOrder.BIG_ENDIAN
-    val buf = ByteBuffer.wrap(bytes).order(order)
-    var out = Vector.empty[(Long, Int, Int)]
-    var off = (buf.getInt(4) & 0xFFFFFFFFL).toInt
-    while (off != 0) {
-      val n = buf.getShort(off) & 0xFFFF
-      var sub = 0L; var w = 0; var h = 0
-      (0 until n).foreach { i =>
-        val e = off + 2 + 12 * i
-        val tag = buf.getShort(e) & 0xFFFF
-        val ttype = buf.getShort(e + 2) & 0xFFFF
-        def inlineLong: Long =
-          if (ttype == 3) (buf.getShort(e + 8) & 0xFFFF).toLong
-          else buf.getInt(e + 8) & 0xFFFFFFFFL
-        tag match {
-          case 254 => sub = inlineLong
-          case 256 => w = inlineLong.toInt
-          case 257 => h = inlineLong.toInt
-          case _ => ()
-        }
-      }
-      out = out :+ ((sub, w, h))
-      off = buf.getInt(off + 2 + 12 * n)
-    }
-    out
-  }
+    * asserting the main/overview/mask IFD inventory. A truncated or
+    * corrupt file throws IllegalArgumentException. */
+  def ifdSummary(path: String): Seq[(Long, Int, Int)] =
+    chainOf(Tiff.open(Files.readAllBytes(Paths.get(path))))
+      .map(i => (i.subfileType, i.width, i.height))
 
-  def validate(path: String): Seq[String] = {
-    val bytes = Files.readAllBytes(Paths.get(path))
-    val order =
-      if (bytes(0) == 'I' && bytes(1) == 'I') ByteOrder.LITTLE_ENDIAN
-      else if (bytes(0) == 'M' && bytes(1) == 'M') ByteOrder.BIG_ENDIAN
-      else return Seq("not a TIFF (bad byte-order mark)")
-    val buf = ByteBuffer.wrap(bytes).order(order)
-    if (buf.getShort(2) != 42) return Seq("not a classic TIFF (bad magic)")
+  /** A file that is not a TIFF, or whose IFDs are truncated or corrupt,
+    * yields that one error. */
+  def validate(path: String): Seq[String] =
+    try check(Tiff.open(Files.readAllBytes(Paths.get(path))))
+    catch { case e: IllegalArgumentException => Seq(e.getMessage) }
 
+  private final case class IfdInfo(offset: Long, subfileType: Long, width: Int,
+                                   height: Int, tiled: Boolean, firstBlock: Long,
+                                   next: Long)
+
+  private def chainOf(buf: ByteBuffer): Vector[IfdInfo] =
+    Tiff.ifdChain(buf).map { d =>
+      def one(t: Int): Long = Tiff.first(buf, d.tags, t, 0L)
+      IfdInfo(d.offset, one(254), one(256).toInt, one(257).toInt, d.tags.contains(322),
+        d.tags.get(324).orElse(d.tags.get(273))
+          .flatMap(Tiff.values(buf, _).headOption).getOrElse(-1L),
+        d.next)
+    }.toVector
+
+  private def check(buf: ByteBuffer): Seq[String] = {
     val errors = Seq.newBuilder[String]
     val mainIfdOffset = buf.getInt(4) & 0xFFFFFFFFL
     if (mainIfdOffset != 8)
       errors += s"The offset of the main IFD should be 8 for ClassicTIFF. It is $mainIfdOffset instead"
 
-    // walk the IFD chain
-    final case class IfdInfo(offset: Long, subfileType: Long, width: Int,
-                             height: Int, tiled: Boolean, firstBlock: Long)
-    var chain = Vector.empty[IfdInfo]
-    var off = mainIfdOffset
-    while (off != 0) {
-      val o = off.toInt
-      val n = buf.getShort(o) & 0xFFFF
-      var sub = 0L; var w = 0; var h = 0; var tiled = false; var block0 = -1L
-      (0 until n).foreach { i =>
-        val e = o + 2 + 12 * i
-        val tag = buf.getShort(e) & 0xFFFF
-        val ttype = buf.getShort(e + 2) & 0xFFFF
-        val count = buf.getInt(e + 4)
-        def inlineLong: Long =
-          if (ttype == 3) (buf.getShort(e + 8) & 0xFFFF).toLong
-          else buf.getInt(e + 8) & 0xFFFFFFFFL
-        tag match {
-          case 254 => sub = inlineLong
-          case 256 => w = inlineLong.toInt
-          case 257 => h = inlineLong.toInt
-          case 322 => tiled = true
-          case 324 | 273 =>
-            block0 =
-              if (count == 1) inlineLong
-              else {
-                val ext = buf.getInt(e + 8) & 0xFFFFFFFFL
-                buf.getInt(ext.toInt) & 0xFFFFFFFFL
-              }
-          case _ => ()
-        }
-      }
-      chain = chain :+ IfdInfo(off, sub, w, h, tiled, block0)
-      off = buf.getInt(o + 2 + 12 * n) & 0xFFFFFFFFL
-    }
+    val chain = chainOf(buf)
     if (chain.isEmpty) return Seq("no IFD found")
+    // the chain walk stops where a next-IFD pointer revisits an IFD
+    if (chain.last.next != 0)
+      errors += s"The IFD chain loops: the IFD at ${chain.last.offset} points back to ${chain.last.next}"
 
     val main = chain.head
     // masks (bit 4 of NewSubfileType) are excluded from overview ordering,

@@ -1,14 +1,15 @@
 package graft.io
 
-import java.nio.{BufferUnderflowException, ByteBuffer, ByteOrder}
+import java.nio.{BufferUnderflowException, ByteBuffer}
 import java.nio.file.{Files, Paths}
 
 import graft.raster.{Affine, MRaster}
 
 /** GeoTIFF reader — GeoRaster2.open on real raster files
   * (`/root/reference/telluric/georaster.py:655-685` open;
-  * `util/raster_utils.py` tags). Pure-JVM baseline-TIFF IFD parse from the
-  * public specs (TIFF 6.0, GeoTIFF 1.1 / OGC 19-008r4):
+  * `util/raster_utils.py` tags). Pure-JVM baseline-TIFF decode from the
+  * public specs (TIFF 6.0, GeoTIFF 1.1 / OGC 19-008r4); the IFD parse is
+  * [[Tiff]]'s:
   *
   *  - geo-referencing: ModelPixelScale (33550) + ModelTiepoint (33922) →
   *    north-up affine; GeoKeyDirectory (34735) → EPSG (ProjectedCSType 3072
@@ -28,6 +29,7 @@ import graft.raster.{Affine, MRaster}
   */
 object GeoTiffIO {
 
+  /** One IFD entry as [[Tiff]] parses it: `data` holds its value bytes. */
   final case class Tag(ttype: Int, count: Int, valueOffset: Long, data: Array[Byte])
 
   /** Open a GeoTIFF. A truncated or structurally-corrupt file fails with
@@ -46,36 +48,22 @@ object GeoTiffIO {
 
   private def readImpl(path: String, bandNames: Seq[String]): MRaster = {
     val bytes = Files.readAllBytes(Paths.get(path))
-    val order =
-      if (bytes(0) == 'I' && bytes(1) == 'I') ByteOrder.LITTLE_ENDIAN
-      else if (bytes(0) == 'M' && bytes(1) == 'M') ByteOrder.BIG_ENDIAN
-      else throw new IllegalArgumentException("not a TIFF (bad byte-order mark)")
-    val buf = ByteBuffer.wrap(bytes).order(order)
-    require(buf.getShort(2) == 42, "not a TIFF (bad magic)")
-    val ifdOff = buf.getInt(4) & 0xFFFFFFFFL
-    val tags = readIfd(buf, ifdOff.toInt)
+    val buf = Tiff.open(bytes)
+    val chain = Tiff.ifdChain(buf)
+    require(chain.hasNext, "no IFD found")
+    val tags = chain.next().tags
 
-    def short1(t: Int, dflt: Long = -1): Long =
-      tags.get(t).map(v => typedValues(buf, v).head).getOrElse(dflt)
+    def short1(t: Int, dflt: Long = -1): Long = Tiff.first(buf, tags, t, dflt)
     val w = short1(256).toInt
     val h = short1(257).toInt
     val spp = short1(277, 1).toInt
-    val bits = tags.get(258).map(v => typedValues(buf, v)).getOrElse(Seq(8L))
-    val sampleFmt = tags.get(339).map(v => typedValues(buf, v)).getOrElse(Seq(1L))
+    val bits = tags.get(258).map(v => Tiff.values(buf, v)).getOrElse(Seq(8L))
+    val sampleFmt = tags.get(339).map(v => Tiff.values(buf, v)).getOrElse(Seq(1L))
     val compression = short1(259, 1).toInt
     val planar = short1(284, 1).toInt
     val predictor = short1(317, 1).toInt
 
-    val dtype = (sampleFmt.head.toInt, bits.head.toInt) match {
-      case (1, 8) => "uint8"
-      case (1, 16) => "uint16"
-      case (1, 32) => "uint32"
-      case (2, 16) => "int16"
-      case (2, 32) => "int32"
-      case (3, 32) => "float32"
-      case (3, 64) => "float64"
-      case (f, b) => throw new IllegalArgumentException(s"unsupported sample format $f/$b bits")
-    }
+    val dtype = Tiff.dtypeOf(sampleFmt.head.toInt, bits.head.toInt)
     val bytesPerSample = bits.head.toInt / 8
 
     // ---- pixels
@@ -90,23 +78,17 @@ object GeoTiffIO {
     if (!decodedNatively) decodeViaImageIO(bytes, w, h, spp, image)
 
     // ---- geo-referencing
-    val affine = (tags.get(33550), tags.get(33922)) match {
-      case (Some(sc), Some(tp)) =>
-        val s = doubleValues(buf, sc)
-        val t = doubleValues(buf, tp)
-        // tiepoint (i, j, k, X, Y, Z): world origin shifted by the pixel anchor
-        Affine(s(0), 0.0, t(3) - t(0) * s(0), 0.0, -s(1), t(4) + t(1) * s(1))
-      case _ => Affine.northUp(0, h, 1, 1) // ungeoreferenced: pixel grid
-    }
-    val crs = epsgFromGeoKeys(buf, tags).getOrElse(0)
-    val nodata = tags.get(42113).map(v => asciiValue(v).trim).filter(_.nonEmpty)
+    val affine = Tiff.affineOf(buf, tags)
+      .getOrElse(Affine.northUp(0, h, 1, 1)) // ungeoreferenced: pixel grid
+    val crs = Tiff.epsgOf(buf, tags).getOrElse(0)
+    val nodata = tags.get(42113).map(v => Tiff.asciiValue(v).trim).filter(_.nonEmpty)
       .flatMap(s => scala.util.Try(s.toDouble).toOption)
 
     // mask: an internal per-dataset mask IFD (GDAL_TIFF_INTERNAL_MASK — a
     // chained IFD with NewSubfileType bit 4, 1-bit samples, bit 1 = valid;
     // the COG writer emits one) takes precedence; otherwise the
     // all-bands-equal-nodata heuristic
-    val mask = internalMask(buf, bytes, ifdOff.toInt, w, h).getOrElse {
+    val mask = internalMask(buf, bytes, chain, w, h).getOrElse {
       val m = new Array[Boolean](w * h)
       nodata.foreach { nd =>
         var i = 0
@@ -135,42 +117,21 @@ object GeoTiffIO {
     * the image tags describe a 1×1 dummy). [[Jp2Decoder]] feeds that
     * embedded TIFF here; `readImpl` would choke on the missing strips. */
   private[io] def geoFromTiffBytes(tiff: Array[Byte]): (Option[Affine], Option[Int]) = {
-    val order =
-      if (tiff(0) == 'I' && tiff(1) == 'I') ByteOrder.LITTLE_ENDIAN
-      else if (tiff(0) == 'M' && tiff(1) == 'M') ByteOrder.BIG_ENDIAN
-      else throw new IllegalArgumentException(
-        "embedded GeoJP2 payload is not a TIFF (bad byte-order mark)")
-    val buf = ByteBuffer.wrap(tiff).order(order)
-    require(buf.getShort(2) == 42, "embedded GeoJP2 payload is not a TIFF (bad magic)")
-    val tags = readIfd(buf, buf.getInt(4))
-    val affine = (tags.get(33550), tags.get(33922)) match {
-      case (Some(sc), Some(tp)) =>
-        val s = doubleValues(buf, sc)
-        val t = doubleValues(buf, tp)
-        Some(Affine(s(0), 0.0, t(3) - t(0) * s(0), 0.0, -s(1), t(4) + t(1) * s(1)))
-      case _ => None
-    }
-    (affine, epsgFromGeoKeys(buf, tags))
+    val buf = Tiff.open(tiff)
+    val chain = Tiff.ifdChain(buf)
+    require(chain.hasNext, "embedded GeoJP2 payload has no IFD")
+    val tags = chain.next().tags
+    (Tiff.affineOf(buf, tags), Tiff.epsgOf(buf, tags))
   }
 
-  private def nextIfdOffset(buf: ByteBuffer, off: Int): Int = {
-    val n = buf.getShort(off) & 0xFFFF
-    buf.getInt(off + 2 + 12 * n)
-  }
-
-  /** Decode the full-resolution internal mask IFD if one is chained:
-    * returns masked-flags (true = INVALID; the on-disk bit is 1 = valid). */
+  /** Decode the full-resolution internal mask IFD if one is chained after
+    * the main IFD (`rest`): returns masked-flags (true = INVALID; the
+    * on-disk bit is 1 = valid). */
   private def internalMask(buf: ByteBuffer, bytes: Array[Byte],
-                           firstIfd: Int, w: Int, h: Int): Option[Array[Boolean]] = {
-    var off = nextIfdOffset(buf, firstIfd)
-    val seen = scala.collection.mutable.Set[Int]()
-    while (off != 0) {
-      // a crafted next-IFD pointer can cycle (self- or mutual-pointing
-      // IFDs) — revisiting an offset means no mask exists down this chain
-      if (!seen.add(off)) return None
-      val tags = readIfd(buf, off)
-      def one(t: Int, dflt: Long = 0L): Long =
-        tags.get(t).map(v => typedValues(buf, v).head).getOrElse(dflt)
+                           rest: Iterator[Tiff.Dir], w: Int, h: Int): Option[Array[Boolean]] = {
+    while (rest.hasNext) {
+      val tags = rest.next().tags
+      def one(t: Int, dflt: Long = 0L): Long = Tiff.first(buf, tags, t, dflt)
       val sub = one(254)
       // only codecs this reader decodes natively (none / Deflate) — a
       // foreign LZW/PackBits mask IFD falls through to the nodata
@@ -181,8 +142,8 @@ object GeoTiffIO {
         (maskComp == 1 || maskComp == 8 || maskComp == 32946)) {
         val tw = one(322).toInt
         val th = one(323).toInt
-        val offs = typedValues(buf, tags(324))
-        val lens = typedValues(buf, tags(325))
+        val offs = Tiff.values(buf, tags(324))
+        val lens = Tiff.values(buf, tags(325))
         val comp = one(259, 1).toInt
         val rowBytes = (tw + 7) / 8
         val tilesAcross = (w + tw - 1) / tw
@@ -190,7 +151,7 @@ object GeoTiffIO {
         offs.indices.foreach { ti =>
           val raw = java.util.Arrays.copyOfRange(
             bytes, offs(ti).toInt, (offs(ti) + lens(ti)).toInt)
-          val seg = if (comp == 1) raw else inflate(raw, rowBytes * th)
+          val seg = if (comp == 1) raw else Tiff.inflate(raw, rowBytes * th)
           val tx = (ti % tilesAcross) * tw
           val ty = (ti / tilesAcross) * th
           var r = 0
@@ -206,103 +167,15 @@ object GeoTiffIO {
         }
         return Some(m)
       }
-      off = nextIfdOffset(buf, off)
     }
     None
   }
 
-  private def readIfd(buf: ByteBuffer, off: Int): Map[Int, Tag] = {
-    val n = buf.getShort(off) & 0xFFFF
-    (0 until n).map { i =>
-      val e = off + 2 + 12 * i
-      val tag = buf.getShort(e) & 0xFFFF
-      val ttype = buf.getShort(e + 2) & 0xFFFF
-      val count = buf.getInt(e + 4)
-      val inlineSize = typeSize(ttype) * count
-      val data =
-        if (inlineSize <= 4) {
-          val d = new Array[Byte](4)
-          var k = 0
-          while (k < 4) { d(k) = buf.get(e + 8 + k); k += 1 }
-          d
-        } else {
-          val o = buf.getInt(e + 8)
-          val d = new Array[Byte](inlineSize)
-          var k = 0
-          while (k < inlineSize) { d(k) = buf.get(o + k); k += 1 }
-          d
-        }
-      tag -> Tag(ttype, count, buf.getInt(e + 8) & 0xFFFFFFFFL, data)
-    }.toMap
-  }
-
-  private def typeSize(t: Int): Int = t match {
-    case 1 | 2 | 6 | 7 => 1
-    case 3 | 8 => 2
-    case 4 | 9 | 11 => 4
-    case 5 | 10 | 12 => 8
-    case _ => 4
-  }
-
-  private def typedValues(buf: ByteBuffer, t: Tag): Seq[Long] = {
-    val b = ByteBuffer.wrap(t.data).order(buf.order())
-    t.ttype match {
-      case 1 => (0 until t.count).map(i => (t.data(i) & 0xFF).toLong)
-      case 3 => (0 until t.count).map(i => (b.getShort(2 * i) & 0xFFFF).toLong)
-      case 4 => (0 until t.count).map(i => b.getInt(4 * i) & 0xFFFFFFFFL)
-      case _ => throw new IllegalArgumentException(s"unexpected tag type ${t.ttype}")
-    }
-  }
-
-  private def doubleValues(buf: ByteBuffer, t: Tag): Seq[Double] = {
-    val b = ByteBuffer.wrap(t.data).order(buf.order())
-    (0 until t.count).map(i => b.getDouble(8 * i))
-  }
-
-  private def asciiValue(t: Tag): String =
-    new String(t.data.takeWhile(_ != 0), "ISO-8859-1")
-
-  /** GeoKeyDirectory (34735): header (4 shorts) + keys of 4 shorts
-    * (keyId, location, count, value). EPSG: ProjectedCSType 3072 wins,
-    * else GeographicType 2048. */
-  private def epsgFromGeoKeys(buf: ByteBuffer, tags: Map[Int, Tag]): Option[Int] =
-    tags.get(34735).map(t => typedValues(buf, t)).flatMap { keys =>
-      val entries = keys.drop(4).grouped(4).collect {
-        case Seq(id, loc, _, v) if loc == 0 => id.toInt -> v.toInt
-      }.toMap
-      entries.get(3072).filter(v => v > 0 && v != 32767)
-        .orElse(entries.get(2048).filter(v => v > 0 && v != 32767))
-    }
-
   private def gdalBandNames(tags: Map[Int, Tag]): Option[Seq[String]] =
-    tags.get(42112).map(asciiValue).flatMap { xml =>
+    tags.get(42112).map(Tiff.asciiValue).flatMap { xml =>
       val m = """name="band_names"[^>]*>\[(.*?)\]""".r.findFirstMatchIn(xml)
       m.map(_.group(1).split(",").map(_.trim.stripPrefix("'").stripSuffix("'")).toSeq)
     }
-
-  private def inflate(data: Array[Byte], expected: Int): Array[Byte] = {
-    val inf = new java.util.zip.Inflater()
-    inf.setInput(data)
-    val out = new Array[Byte](expected)
-    var got = 0
-    try {
-      while (got < expected && !inf.finished()) {
-        val n = inf.inflate(out, got, expected - got)
-        // a truncated Deflate stream yields 0 with the inflater starving
-        // for input — without this check the loop spins forever (round-4
-        // review drive caught a hang on a truncated Deflate COG)
-        if (n == 0 && (inf.needsInput() || inf.needsDictionary()))
-          throw new IllegalArgumentException(
-            s"Deflate stream ended prematurely: got $got of $expected bytes")
-        got += n
-      }
-    } catch {
-      case e: java.util.zip.DataFormatException =>
-        throw new IllegalArgumentException(
-          s"corrupt Deflate stream after $got of $expected bytes", e)
-    } finally inf.end()
-    out
-  }
 
   private def decodeStripsOrTiles(buf: ByteBuffer, bytes: Array[Byte],
       tags: Map[Int, Tag], w: Int, h: Int, spp: Int, bps: Int, dtype: String,
@@ -311,7 +184,7 @@ object GeoTiffIO {
 
     def segment(off: Long, len: Long, expected: Int): Array[Byte] = {
       val raw = java.util.Arrays.copyOfRange(bytes, off.toInt, (off + len).toInt)
-      if (compression == 1) raw else inflate(raw, expected)
+      if (compression == 1) raw else Tiff.inflate(raw, expected)
     }
 
     def sampleAt(seg: Array[Byte], idx: Int): Double = {
@@ -343,10 +216,10 @@ object GeoTiffIO {
 
     if (tags.contains(322)) {
       // tiled layout
-      val tw = typedValues(buf, tags(322)).head.toInt
-      val th = typedValues(buf, tags(323)).head.toInt
-      val offs = typedValues(buf, tags(324))
-      val lens = typedValues(buf, tags(325))
+      val tw = Tiff.values(buf, tags(322)).head.toInt
+      val th = Tiff.values(buf, tags(323)).head.toInt
+      val offs = Tiff.values(buf, tags(324))
+      val lens = Tiff.values(buf, tags(325))
       val tilesAcross = (w + tw - 1) / tw
       val tilesDown = (h + th - 1) / th
       val tilesPerBand = tilesAcross * tilesDown
@@ -375,9 +248,9 @@ object GeoTiffIO {
         }
       }
     } else {
-      val rowsPerStrip = tags.get(278).map(t => typedValues(buf, t).head.toInt).getOrElse(h)
-      val offs = typedValues(buf, tags(273))
-      val lens = typedValues(buf, tags(279))
+      val rowsPerStrip = tags.get(278).map(t => Tiff.values(buf, t).head.toInt).getOrElse(h)
+      val offs = Tiff.values(buf, tags(273))
+      val lens = Tiff.values(buf, tags(279))
       val stripsPerBand = (h + rowsPerStrip - 1) / rowsPerStrip
       offs.indices.foreach { si =>
         val bandBase = if (planar == 2) si / stripsPerBand else 0

@@ -1,8 +1,5 @@
 package graft.io
 
-import java.nio.{ByteBuffer, ByteOrder}
-import java.nio.file.{Files, Paths}
-
 import graft.raster.MRaster
 
 /** GeoTIFF writer — GeoRaster2.save parity (georaster.py:977-1050) for the
@@ -10,7 +7,8 @@ import graft.raster.MRaster
   * ModelTiepoint, GeoKeyDirectory EPSG, GDAL_NODATA, GDALMetadata band
   * names. `GeoTiffIO.read(write(r)) ≡ r` — the reopenable .tif artifact a
   * telluric user expects from save(). (COG layout — overviews + tiling —
-  * lives in RasterArtifact; this is the plain-TIFF interchange sink.) */
+  * lives in [[CogWriter]]; this is the plain-TIFF interchange sink. The
+  * TIFF container itself is [[Tiff]].) */
 object GeoTiffWriter {
 
   /** `compression`: "none" (baseline), "deflate" (tag 259 = 8, zlib over
@@ -40,53 +38,20 @@ object GeoTiffWriter {
       require(r.nodata.isEmpty,
         "jpeg compression is lossy and would corrupt nodata sentinel pixels")
     }
-    val (sampleFormat, bps) = r.dtype match {
-      case "uint8" => (1, 8)
-      case "uint16" => (1, 16)
-      case "uint32" => (1, 32)
-      case "int16" => (2, 16)
-      case "int32" => (2, 32)
-      case "float32" => (3, 32)
-      case "float64" => (3, 64)
-      case d => throw new IllegalArgumentException(s"cannot write dtype $d")
-    }
+    val bps = Tiff.sampleType(r.dtype)._2
     val spp = r.numBands
-    val bytesPerSample = bps / 8
-    val pixelBytes = r.width * r.height * spp * bytesPerSample
-
     // chunky interleaved samples, encoded up front so the strip byte count
-    // in the IFD reflects the (possibly deflated) on-disk size
-    val pix = ByteBuffer.allocate(pixelBytes).order(ByteOrder.LITTLE_ENDIAN)
-    locally {
-      var i = 0
-      val n = r.width * r.height
-      while (i < n) {
-        var s = 0
-        while (s < spp) {
-          val v = r.image(s)(i)
-          val at = (i * spp + s) * bytesPerSample
-          r.dtype match {
-            case "uint8" => pix.put(at, v.toInt.toByte)
-            case "uint16" | "int16" => pix.putShort(at, v.toInt.toShort)
-            case "uint32" | "int32" => pix.putInt(at, v.toLong.toInt)
-            case "float32" => pix.putFloat(at, v.toFloat)
-            case "float64" => pix.putDouble(at, v)
-          }
-          s += 1
-        }
-        i += 1
-      }
-    }
+    // in the IFD reflects the (possibly compressed) on-disk size
+    val pix = Tiff.chunky(r, 0, 0, r.width, r.height)
     // LZW pairs with horizontal differencing (predictor tag 317 = 2, the
     // GDAL default LZW profile) on 8-bit samples — plain LZW EXPANDS on
     // photographic data; differencing restores locality. Wider dtypes
     // difference at the sample level; keep those predictor-free here.
     val usePredictor = codecTag == 5 && bps == 8
     val strip: Array[Byte] = codecTag match {
-      case 1 => pix.array()
-      case 7 => jpegEncode(pix.array(), r.width, r.height, spp)
+      case 1 => pix
+      case 7 => jpegEncode(pix, r.width, r.height, spp)
       case 5 =>
-        val bytes = pix.array()
         if (usePredictor) {
           val rowBytes = r.width * spp
           var row = 0
@@ -94,116 +59,34 @@ object GeoTiffWriter {
             val base = row * rowBytes
             var i = rowBytes - 1
             while (i >= spp) {
-              bytes(base + i) = (bytes(base + i) - bytes(base + i - spp)).toByte
+              pix(base + i) = (pix(base + i) - pix(base + i - spp)).toByte
               i -= 1
             }
             row += 1
           }
         }
-        lzwEncode(bytes)
-      case 8 =>
-        val d = new java.util.zip.Deflater()
-        d.setInput(pix.array()); d.finish()
-        val buf = new Array[Byte](pixelBytes + 64)
-        val out = new java.io.ByteArrayOutputStream()
-        while (!d.finished()) out.write(buf, 0, d.deflate(buf))
-        d.end()
-        out.toByteArray
+        lzwEncode(pix)
+      case 8 => Tiff.deflate(pix)
       case 32773 =>
         // TIFF 6.0 §9: each row packed separately (never across rows)
-        val rowBytes = r.width * spp * bytesPerSample
-        val out = new java.io.ByteArrayOutputStream(pixelBytes / 2 + 64)
-        val bytes = pix.array()
+        val rowBytes = r.width * spp * bps / 8
+        val out = new java.io.ByteArrayOutputStream(pix.length / 2 + 64)
         var row = 0
         while (row < r.height) {
-          packBitsRow(bytes, row * rowBytes, rowBytes, out)
+          packBitsRow(pix, row * rowBytes, rowBytes, out)
           row += 1
         }
         out.toByteArray
     }
 
-    val nodataStr = r.nodata.map(nd =>
-      if (nd == nd.toLong) nd.toLong.toString else nd.toString)
-    val bandNamesXml =
-      "<GDALMetadata>\n  <Item name=\"band_names\" domain=\"rastile\">[" +
-        r.bandNames.mkString(", ") + "]</Item>\n</GDALMetadata>\n"
-
-    final case class Entry(tag: Int, ttype: Int, count: Int, payload: Array[Byte])
-    def shorts(vs: Int*): Array[Byte] = {
-      val b = ByteBuffer.allocate(2 * vs.length).order(ByteOrder.LITTLE_ENDIAN)
-      vs.foreach(v => b.putShort(v.toShort)); b.array()
-    }
-    def longs(vs: Long*): Array[Byte] = {
-      val b = ByteBuffer.allocate(4 * vs.length).order(ByteOrder.LITTLE_ENDIAN)
-      vs.foreach(v => b.putInt(v.toInt)); b.array()
-    }
-    def dbls(vs: Double*): Array[Byte] = {
-      val b = ByteBuffer.allocate(8 * vs.length).order(ByteOrder.LITTLE_ENDIAN)
-      vs.foreach(b.putDouble); b.array()
-    }
-    def ascii(s: String): Array[Byte] = (s + "\u0000").getBytes("ISO-8859-1")
-
-    // GeoKeys: model type (1=projected / 2=geographic), raster type = area,
-    // EPSG in 3072 (projected) or 2048 (geographic)
-    val geographic = r.crs == 4326
-    val geoKeys: Seq[Int] = Seq(
-      1, 1, 0, 3, // version, rev, minor, numKeys
-      1024, 0, 1, if (geographic) 2 else 1,
-      1025, 0, 1, 1) ++
-      (if (geographic) Seq(2048, 0, 1, r.crs) else Seq(3072, 0, 1, r.crs))
-
-    val entries = (Seq.empty[Entry] ++ Seq(
-      Entry(256, 3, 1, shorts(r.width)),
-      Entry(257, 3, 1, shorts(r.height)),
-      Entry(258, 3, spp, shorts(Seq.fill(spp)(bps): _*)),
-      Entry(259, 3, 1, shorts(codecTag)),
-      Entry(262, 3, 1, shorts(if (spp >= 3) 2 else 1)),
-      Entry(273, 4, 1, longs(0L)), // strip offset patched below
-      Entry(277, 3, 1, shorts(spp)),
-      Entry(278, 3, 1, shorts(r.height)), // single strip
-      Entry(279, 4, 1, longs(strip.length.toLong)),
-      Entry(284, 3, 1, shorts(1)), // chunky
-      Entry(339, 3, spp, shorts(Seq.fill(spp)(sampleFormat): _*))) ++
-      (if (usePredictor) Seq(Entry(317, 3, 1, shorts(2))) else Nil) ++ (Seq(
-      Entry(33550, 12, 3, dbls(r.affine.a, -r.affine.e, 0.0)),
-      Entry(33922, 12, 6, dbls(0, 0, 0, r.affine.c, r.affine.f, 0)),
-      Entry(34735, 3, geoKeys.length, shorts(geoKeys: _*)),
-      Entry(42112, 2, bandNamesXml.length + 1, ascii(bandNamesXml))) ++
-      nodataStr.map(s => Entry(42113, 2, s.length + 1, ascii(s))).toSeq))
-      .sortBy(_.tag)
-
-    val ifdOff = 8
-    val ifdSize = 2 + 12 * entries.length + 4
-    var dataOff = ifdOff + ifdSize
-    val external = scala.collection.mutable.ArrayBuffer.empty[(Int, Array[Byte])]
-    val valueFields = entries.map { e =>
-      if (e.payload.length <= 4) e.payload.padTo(4, 0.toByte)
-      else {
-        val at = dataOff
-        external += at -> e.payload
-        dataOff += e.payload.length
-        longs(at.toLong)
-      }
-    }
-    val stripOff = dataOff
-    val total = stripOff + strip.length
-
-    val out = ByteBuffer.allocate(total).order(ByteOrder.LITTLE_ENDIAN)
-    out.put(0, 'I'.toByte); out.put(1, 'I'.toByte)
-    out.putShort(2, 42); out.putInt(4, ifdOff)
-    out.putShort(ifdOff, entries.length.toShort)
-    entries.zipWithIndex.foreach { case (e, i) =>
-      val at = ifdOff + 2 + 12 * i
-      out.putShort(at, e.tag.toShort)
-      out.putShort(at + 2, e.ttype.toShort)
-      out.putInt(at + 4, e.count)
-      val v = if (e.tag == 273) longs(stripOff.toLong) else valueFields(i)
-      System.arraycopy(v, 0, out.array(), at + 8, 4)
-    }
-    out.putInt(ifdOff + 2 + 12 * entries.length, 0) // next IFD = none
-    external.foreach { case (at, d) => System.arraycopy(d, 0, out.array(), at, d.length) }
-    System.arraycopy(strip, 0, out.array(), stripOff, strip.length)
-    Files.write(Paths.get(path), out.array())
+    val entries = Seq(
+      Tiff.shorts(256, r.width),
+      Tiff.shorts(257, r.height),
+      Tiff.shorts(259, codecTag),
+      Tiff.shorts(278, r.height)) ++ // single strip
+      (if (usePredictor) Seq(Tiff.shorts(317, 2)) else Nil) ++
+      Tiff.sampleEntries(r) ++ Tiff.geoEntries(r)
+    Tiff.write(path, Seq(Tiff.Ifd(entries, Seq(strip), tiled = false)), dataOrder = Seq(0))
   }
 
   /** New-style-JPEG strip payload: ONE complete max-quality JFIF stream

@@ -48,11 +48,11 @@ object IncrementalDedup {
   /** [[append]] plus the checkpointed new-signature handle, so a streaming
     * caller can free exactly the blocks this append pinned once its sink
     * write completes — a global releaseAll would also kill any OTHER
-    * query's live checkpoints on a shared session. */
-  /** Replay idempotence + the two-layer disjointness guard (first-write-
-    * wins, matching exact-dedup's keep-min semantics; an UPDATE workflow
-    * would instead rollback + recommit) live in [[IncrementalAppend]],
-    * shared with the embedding job. */
+    * query's live checkpoints on a shared session. Replay idempotence +
+    * the two-layer disjointness guard (first-write-wins, matching
+    * exact-dedup's keep-min semantics; an UPDATE workflow would instead
+    * rollback + recommit) live in [[IncrementalAppend]], shared with the
+    * embedding job. */
   private[jobs] def appendWithHandle(
       spark: SparkSession, newDocs: DataFrame, lakeRoot: String,
       batchId: Option[Long]): (DataFrame, DataFrame, Boolean) =

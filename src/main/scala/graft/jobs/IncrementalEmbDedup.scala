@@ -70,9 +70,9 @@ object IncrementalEmbDedup {
 
   /** [[append]] plus the checkpointed new-cell handle, so a streaming
     * caller can free exactly the blocks this append pinned (a global
-    * releaseAll would kill other queries' live checkpoints). */
-  /** Replay idempotence + the two-layer disjointness guard (first-write-
-    * wins) live in [[IncrementalAppend]], shared with the text job. */
+    * releaseAll would kill other queries' live checkpoints). Replay
+    * idempotence + the two-layer disjointness guard (first-write-wins)
+    * live in [[IncrementalAppend]], shared with the text job. */
   private[jobs] def appendWithHandle(
       spark: SparkSession, newVecs: DataFrame, lakeRoot: String,
       batchId: Option[Long]): (DataFrame, DataFrame, Boolean) =

@@ -51,15 +51,9 @@ object TrainingDataJob {
     * held-out benchmark (doc_id, text). Returns the final sharded corpus
     * (doc_id, text, h, split, shard) as committed to the store stage; the
     * caller points the training reader at `storeDir` (hive `split=/shard=`
-    * layout, written once — a resumed rerun does not rewrite it).
-    *
-    * `broadcastEval = false` drops the broadcast hint on the eval gram
-    * set for an eval corpus too large to ship to every executor (the same
-    * escape the q60 docs name; the q65 Bloom sketch is the fully unbounded
-    * path). */
+    * layout, written once — a resumed rerun does not rewrite it). */
   def run(spark: SparkSession, docs: DataFrame, evalDocs: DataFrame,
-          lakeRoot: String, storeDir: String,
-          broadcastEval: Boolean = true): DataFrame = {
+          lakeRoot: String, storeDir: String): DataFrame = {
     val lake = new LakeTable(lakeRoot)
     val Seq(sQuality, sExact, sNear, sDecon, sStore) = stageNames
 
@@ -107,7 +101,7 @@ object TrainingDataJob {
     // (QualityQueries.kgramHashes) exploded ONCE into a semi-join — the
     // pipeline only needs WHICH docs leak, so no per-doc rollup.
     val decon = StageRunner.stage(spark, lake, sDecon) {
-      decontaminated(near, evalDocs, broadcastEval) // shared with appendBatch
+      decontaminated(near, evalDocs) // shared with appendBatch
     }
 
     // 5. shuffle-shard store — q79 assignment, written hive-partitioned
@@ -169,8 +163,7 @@ object TrainingDataJob {
     * match), dedup pairwise-minimally, decontaminate, and write the
     * initial `split=/shard=` store. */
   def initIncremental(spark: SparkSession, docs: DataFrame, evalDocs: DataFrame,
-                      lakeRoot: String, storeDir: String,
-                      broadcastEval: Boolean = true): DataFrame = {
+                      lakeRoot: String, storeDir: String): DataFrame = {
     val gated = QualityQueries.scoreDocs(docs.dropDuplicates("doc_id"))
       .where(col("keep")).select(col("doc_id"), col("text"))
     // an all-rejected corpus would commit an EMPTY sig store whose later
@@ -190,7 +183,7 @@ object TrainingDataJob {
     // ride this checkpoint instead of re-running gate+pairs+decontamination
     // per caller action — callers release via the standard releaseAll
     val clean = org.apache.spark.sql.GraftCheckpoints.local(
-      decontaminated(kept, evalDocs, broadcastEval))
+      decontaminated(kept, evalDocs))
     writeStoreBatch(clean, storeDir, marker = Some("_batch_init"))
   }
 
@@ -206,8 +199,7 @@ object TrainingDataJob {
     * append via a `_batch_<id>` marker file. */
   def appendBatch(spark: SparkSession, newDocs: DataFrame, evalDocs: DataFrame,
                   lakeRoot: String, storeDir: String,
-                  batchId: Option[Long] = None,
-                  broadcastEval: Boolean = true): DataFrame = {
+                  batchId: Option[Long] = None): DataFrame = {
     val gated = QualityQueries.scoreDocs(newDocs.dropDuplicates("doc_id"))
       .where(col("keep")).select(col("doc_id"), col("text"))
     // pin the PRE-append store ids (lake.read resolves the manifest now,
@@ -241,7 +233,7 @@ object TrainingDataJob {
     // (the pair plan reads them); the returned frame rides this checkpoint
     // — callers release via the standard harness releaseAll
     val clean = org.apache.spark.sql.GraftCheckpoints.local(
-      decontaminated(kept, evalDocs, broadcastEval))
+      decontaminated(kept, evalDocs))
     org.apache.spark.sql.GraftCheckpoints.release(pairs)
     org.apache.spark.sql.GraftCheckpoints.release(sigHandle)
     // no marker without a batch id: two DISTINCT unmarked batches must
@@ -250,14 +242,12 @@ object TrainingDataJob {
     writeStoreBatch(clean, storeDir, marker = batchId.map(id => s"_batch_$id"))
   }
 
-  private def decontaminated(docs: DataFrame, evalDocs: DataFrame,
-                             broadcastEval: Boolean): DataFrame = {
+  private def decontaminated(docs: DataFrame, evalDocs: DataFrame): DataFrame = {
     val k = QualityQueries.DecontK
     val evalGrams = QualityQueries.kgramHashes(evalDocs, k)
       .select(col("h")).distinct()
-    val evalSide = if (broadcastEval) broadcast(evalGrams) else evalGrams
     val hit = QualityQueries.kgramHashes(docs, k)
-      .join(evalSide, Seq("h"), "left_semi")
+      .join(broadcast(evalGrams), Seq("h"), "left_semi")
       .select(col("doc_id")).distinct()
     docs.join(hit, Seq("doc_id"), "left_anti")
   }

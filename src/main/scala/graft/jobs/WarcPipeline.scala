@@ -103,24 +103,22 @@ object WarcPipeline {
     * [[defaultEvalSlice]] is globally consistent by construction. */
   def initFromDump(spark: SparkSession, warcDir: String,
                    lakeRoot: String, storeDir: String,
-                   broadcastEval: Boolean = true,
                    wideIdentity: Boolean = false): DataFrame = {
     val ing = ingest(spark, warcDir, wideIdentity)
       .select(col("doc_id"), col("text")).trackedCheckpoint
     try TrainingDataJob.initIncremental(spark, ing, defaultEvalSlice(ing),
-      lakeRoot, storeDir, broadcastEval)
+      lakeRoot, storeDir)
     finally org.apache.spark.sql.GraftCheckpoints.release(ing)
   }
 
   def appendDump(spark: SparkSession, warcDir: String,
                  lakeRoot: String, storeDir: String,
                  batchId: Option[Long] = None,
-                 broadcastEval: Boolean = true,
                  wideIdentity: Boolean = false): DataFrame = {
     val ing = ingest(spark, warcDir, wideIdentity)
       .select(col("doc_id"), col("text")).trackedCheckpoint
     try TrainingDataJob.appendBatch(spark, ing, defaultEvalSlice(ing),
-      lakeRoot, storeDir, batchId, broadcastEval)
+      lakeRoot, storeDir, batchId)
     finally org.apache.spark.sql.GraftCheckpoints.release(ing)
   }
 
@@ -128,21 +126,16 @@ object WarcPipeline {
     * and the decontamination eval slice both read the materialized parse,
     * so the dominant binaryFile+extract cost is never paid twice), split
     * off the eval slice, run the resumable pipeline into `storeDir`.
-    * `broadcastEval = false` is the pass-through for an eval corpus too
-    * large to ship to every executor (TrainingDataJob's documented
-    * escape — the default 1/EvalMod slice of a 100 TB dump is exactly
-    * that case). Returns the sharded survivors. */
+    * Returns the sharded survivors. */
   def runFromDump(spark: SparkSession, warcDir: String,
                   lakeRoot: String, storeDir: String,
                   evalDocs: Option[DataFrame] = None,
-                  broadcastEval: Boolean = true,
                   wideIdentity: Boolean = false): DataFrame = {
     val ingested = ingest(spark, warcDir, wideIdentity)
       .select(col("doc_id"), col("text")).trackedCheckpoint
     try {
       val eval = evalDocs.getOrElse(defaultEvalSlice(ingested))
-      TrainingDataJob.run(spark, ingested, eval, lakeRoot, storeDir,
-        broadcastEval)
+      TrainingDataJob.run(spark, ingested, eval, lakeRoot, storeDir)
     } finally GraftCheckpoints.release(ingested)
   }
 }

@@ -229,6 +229,17 @@ object GraphQueries {
 
   val HostGraphTopK = 200
 
+  /** The q111/q113 host→host weighted matrix (pre-checkpoint plan hook;
+    * ONE definition so the quotient graph and host-rank cannot drift). */
+  private[graft] def hostMatrixOf(spark: SparkSession, sfDir: String,
+                                  n: Long): DataFrame =
+    edges(spark, sfDir, n)
+      .select(TextQueries.hostCol(col("src")).as("hsrc"),
+        TextQueries.hostCol(col("dst")).as("hdst"))
+      .where(col("hsrc") =!= col("hdst"))
+      .groupBy(col("hsrc"), col("hdst"))
+      .agg(count(lit(1)).as("n_links"))
+
   /** q111 host quotient graph — graph COARSENING: the page-level edge
     * table rolled up to weighted host→host edges, with per-edge
     * reciprocity (how many links run back). This is the granularity a
@@ -245,17 +256,6 @@ object GraphQueries {
     * the AGGREGATED host matrix (hosts² ≪ edges — `trackedCheckpoint`-
     * materialized, both the output leg and the reversed leg consume it);
     * top-K ends in TakeOrderedAndProject, never a global sort. */
-  /** The q111/q113 host→host weighted matrix (pre-checkpoint plan hook;
-    * ONE definition so the quotient graph and host-rank cannot drift). */
-  private[graft] def hostMatrixOf(spark: SparkSession, sfDir: String,
-                                  n: Long): DataFrame =
-    edges(spark, sfDir, n)
-      .select(TextQueries.hostCol(col("src")).as("hsrc"),
-        TextQueries.hostCol(col("dst")).as("hdst"))
-      .where(col("hsrc") =!= col("hdst"))
-      .groupBy(col("hsrc"), col("hdst"))
-      .agg(count(lit(1)).as("n_links"))
-
   def hostGraph(spark: SparkSession, sfDir: String): DataFrame = {
     val n = docs(spark, sfDir).count() // one scalar: the node count
     val m = hostMatrixOf(spark, sfDir, n).trackedCheckpoint

@@ -89,8 +89,8 @@ object Png {
 
 /** Persisted raster artifact — the role GeoRaster2.save plays for a COG
   * (georaster.py:977-1050): parquet chunk tables per overview level +
-  * an atomically-committed JSON manifest carrying grid/bands/dtype/nodata/
-  * tags, reopenable into the same raster. Level k is the 2^k-factor
+  * an atomically-committed JSON manifest carrying grid/bands/dtype/nodata,
+  * reopenable into the same raster. Level k is the 2^k-factor
   * overview; factors follow `_calc_overviews_factors`
   * (util/raster_utils.py:17-25): halve while max(w,h) > blocksize.
   * Overview resampling = cubic (the reference's default). Chunk rows are
@@ -116,8 +116,7 @@ object RasterArtifact {
     out.result()
   }
 
-  private def manifestJson(r: MRaster, levels: Seq[Int],
-                           tags: Map[String, String]): String = {
+  private def manifestJson(r: MRaster, levels: Seq[Int]): String = {
     val a = r.affine
     val bands = r.bandNames.map(b => "\"" + b + "\"").mkString("[", ",", "]")
     val lv = (1 +: levels).mkString("[", ",", "]")
@@ -131,8 +130,7 @@ object RasterArtifact {
   /** save: chunks of the base level + each overview as one parquet table
     * (level column), Morton-ordered within files; manifest last (the commit
     * point — a crashed writer leaves no readable artifact). */
-  def save(spark: SparkSession, r: MRaster, path: String,
-           tags: Map[String, String] = Map.empty): Unit = {
+  def save(spark: SparkSession, r: MRaster, path: String): Unit = {
     import spark.implicits._
     val factors = overviewFactors(r)
     val levels: Seq[(Int, MRaster)] = (1, r) +: factors.map { f =>
@@ -153,7 +151,7 @@ object RasterArtifact {
       .write.mode("overwrite").parquet(s"$path/chunks")
     val tmp = Paths.get(s"$path/_manifest.json.tmp")
     Files.createDirectories(tmp.getParent)
-    Files.write(tmp, manifestJson(r, factors, tags).getBytes(StandardCharsets.UTF_8))
+    Files.write(tmp, manifestJson(r, factors).getBytes(StandardCharsets.UTF_8))
     Files.move(tmp, Paths.get(s"$path/_manifest.json"),
       StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
   }

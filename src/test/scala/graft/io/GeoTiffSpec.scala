@@ -1,14 +1,46 @@
 package graft.io
 
+import java.nio.file.{Files, Paths}
+
+import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.SpanSugar._
+
+import graft.raster.{Affine, MRaster}
 
 /** GeoTiffIO against the reference's OWN raster fixtures — the files
   * telluric's GeoRaster2.open reads through rasterio
   * (`/root/reference/tests/test_georaster.py:290,772,806`). Pixel goldens
   * extracted by direct strip-byte indexing of the uncompressed fixture. */
-class GeoTiffSpec extends AnyFunSuite {
+class GeoTiffSpec extends AnyFunSuite with TimeLimits {
 
   private val refRaster = "/root/reference/tests/data/raster"
+  private implicit val signaler: Signaler = ThreadSignaler
+
+  /** 3-band raster, every 11th pixel nodata. Band names "ra, g, b" put
+    * GDAL_NODATA at an odd offset when external values are not padded. */
+  private def synth(w: Int, h: Int, dtype: String, nodata: Option[Double]): MRaster = {
+    val nd = nodata.isDefined
+    val shift = if (dtype == "int16") 100 else 0 // signed samples too
+    val img = Array.tabulate(3)(b => Array.tabulate(w * h) { i =>
+      if (nd && i % 11 == 0) nodata.get else ((i * 7 + b * 13) % 200 - shift).toDouble
+    })
+    MRaster(img, Array.tabulate(w * h)(i => nd && i % 11 == 0), w, h,
+      Affine.northUp(12.5, 41.0, 0.001, 0.001), 3857, Seq("ra", "g", "b"), dtype, nodata)
+  }
+
+  /** (entry position, tag, type, count, value field) of every entry in
+    * every IFD of a little-endian TIFF, walked without the reader. */
+  private def rawEntries(bytes: Array[Byte]): Seq[(Int, Int, Int, Long, Long)] = {
+    def u16(o: Int): Int = (bytes(o) & 0xff) | ((bytes(o + 1) & 0xff) << 8)
+    def u32(o: Int): Long = u16(o) | (u16(o + 2).toLong << 16)
+    Iterator.iterate(u32(4).toInt)(off => u32(off + 2 + 12 * u16(off)).toInt)
+      .takeWhile(_ != 0).take(64).toSeq
+      .flatMap(off => (0 until u16(off)).map { i =>
+        val e = off + 2 + 12 * i
+        (e, u16(e), u16(e + 2), u32(e + 4), u32(e + 8))
+      })
+  }
 
   test("rgb.tif: dims, dtype, CRS, affine, nodata, GDAL band names") {
     val r = GeoTiffIO.read(s"$refRaster/rgb.tif")
@@ -266,6 +298,98 @@ class GeoTiffSpec extends AnyFunSuite {
       // any other exception type fails the test
     }
     assert(parsed > 0, "no prefix parsed — sweep is vacuous") // full file at least
+  }
+
+  test("every codec round-trips a synthesized raster (offline twin of the rgb.tif round trips)") {
+    val dir = Files.createTempDirectory("gtcodec")
+    val i16 = synth(37, 23, "int16", Some(-9999.0))
+    for (c <- Seq("none", "deflate", "lzw", "packbits")) {
+      val p = s"$dir/$c.tif"
+      GeoTiffWriter.write(i16, p, c)
+      val back = GeoTiffIO.read(p)
+      assert(back.dtype === "int16" && back.crs === 3857 && back.nodata === Some(-9999.0), c)
+      assert(back.bandNames === i16.bandNames && back.affine === i16.affine, c)
+      (0 until 3).foreach(b => assert(back.image(b).sameElements(i16.image(b)), s"$c band $b"))
+      assert(back.mask.sameElements(i16.mask), c)
+    }
+    // JPEG is lossy: a smooth ramp, checked within tolerance
+    val u8 = synth(37, 23, "uint8", None).copy(image = Array.tabulate(3)(b =>
+      Array.tabulate(37 * 23)(i => (i % 37 * 4 + i / 37 * 3 + b * 10).toDouble)))
+    GeoTiffWriter.write(u8, s"$dir/jpeg.tif", "jpeg")
+    val jb = GeoTiffIO.read(s"$dir/jpeg.tif")
+    assert(jb.numBands === 3 && jb.affine === u8.affine && jb.bandNames === u8.bandNames)
+    (0 until 3).foreach { b =>
+      val errs = jb.image(b).zip(u8.image(b)).map { case (x, y) => math.abs(x - y) }
+      assert(errs.sum / errs.length <= 6.0, s"jpeg band $b mean error")
+    }
+  }
+
+  test("both writers: ASCII values end in NUL, external values start on even offsets") {
+    val dir = Files.createTempDirectory("gtconf")
+    val i16 = synth(37, 23, "int16", Some(-9999.0))
+    val strips = Seq("none", "deflate", "lzw", "packbits").map { c =>
+      val p = s"$dir/i16_$c.tif"; GeoTiffWriter.write(i16, p, c); p
+    }
+    val jpeg = s"$dir/u8_jpeg.tif"
+    GeoTiffWriter.write(synth(37, 23, "uint8", None), jpeg, "jpeg")
+    val cog = s"$dir/cog.tif"
+    CogWriter.write(i16, cog, 16) // main + 2 overviews + 3 mask IFDs
+    val typeSize = Map(2 -> 1, 3 -> 2, 4 -> 4, 12 -> 8)
+    for (p <- strips :+ jpeg :+ cog) {
+      val bytes = Files.readAllBytes(Paths.get(p))
+      val entries = rawEntries(bytes)
+      assert(entries.exists(_._3 == 2), s"$p has no ASCII value")
+      entries.foreach { case (e, tag, ttype, count, value) =>
+        val external = typeSize(ttype) * count > 4
+        if (external) assert(value % 2 == 0, s"$p: tag $tag value at odd offset $value")
+        if (ttype == 2) {
+          val last = ((if (external) value else e + 8L) + count - 1).toInt
+          assert(bytes(last) == 0, s"$p: ASCII tag $tag ends in byte ${bytes(last)}, not NUL")
+        }
+      }
+    }
+  }
+
+  test("every prefix of a synthesized GeoTIFF and COG parses or fails the contract") {
+    // offline twin of the rgb.tif prefix sweep: read and ifdSummary throw
+    // IllegalArgumentException, validate returns errors
+    val dir = Files.createTempDirectory("gtprefix")
+    val r = synth(19, 13, "int16", Some(-9999.0))
+    val files = Seq("none", "deflate").map { c =>
+      val p = s"$dir/strip_$c.tif"; GeoTiffWriter.write(r, p, c); p
+    } :+ { val p = s"$dir/cog.tif"; CogWriter.write(r, p, 8); p }
+    val tmp = s"$dir/prefix.tif"
+    for (src <- files) {
+      val full = Files.readAllBytes(Paths.get(src))
+      assert(GeoTiffIO.read(src).image(0).sameElements(r.image(0)), src)
+      assert(CogValidator.ifdSummary(src).length === (if (src.endsWith("cog.tif")) 6 else 1))
+      for (n <- 0 until full.length) {
+        Files.write(Paths.get(tmp), full.take(n))
+        val parsed =
+          try { CogValidator.ifdSummary(tmp); true }
+          catch { case _: IllegalArgumentException => false }
+        try GeoTiffIO.read(tmp)
+        catch { case _: IllegalArgumentException => () }
+        if (!parsed)
+          assert(CogValidator.validate(tmp).nonEmpty, s"$src cut at $n: unreadable IFDs, no error")
+      }
+    }
+  }
+
+  test("a self-looping next-IFD offset is reported by validate and ends every chain walk") {
+    val p = Files.createTempDirectory("gtloop").resolve("loop.tif")
+    GeoTiffWriter.write(synth(19, 13, "int16", Some(-9999.0)), p.toString)
+    val bytes = Files.readAllBytes(p)
+    val n = (bytes(8) & 0xff) | ((bytes(9) & 0xff) << 8)
+    java.nio.ByteBuffer.wrap(bytes).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      .putInt(8 + 2 + 12 * n, 8) // the only IFD's next pointer → itself
+    Files.write(p, bytes)
+    failAfter(20.seconds) {
+      val errors = CogValidator.validate(p.toString)
+      assert(errors.exists(_.contains("loops")), errors)
+      assert(CogValidator.ifdSummary(p.toString).length === 1)
+      assert(GeoTiffIO.read(p.toString).width === 19)
+    }
   }
 
   test("truncated DEFLATE tif fails the contract instead of hanging the inflater") {

@@ -463,7 +463,6 @@ class Jp2RoundTripSpec extends AnyFunSuite {
         val resBands = new Array[Seq[(Int, BandBlocks)]](nl + 1)
         var r = nl
         while (r >= 1) {
-          val nb = nl - r + 1
           val cw = cu1 - cu0; val ch = cv1 - cv0
           fwd2d(cur, cw, ch, cu0, cv0)
           val llx0 = ceilShift(cu0, 1); val llx1 = ceilShift(cu1, 1)

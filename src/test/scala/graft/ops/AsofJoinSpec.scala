@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.sql.SparkTestBase
-import org.apache.spark.sql.functions._
 
 /** AS-OF join semantics on crafted events (q51's operator): latest view at
   * or BEFORE each click, per user; same-instant view matches (<=); clicks

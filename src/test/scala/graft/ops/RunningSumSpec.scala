@@ -10,7 +10,6 @@ import org.apache.spark.sql.expressions.Window
 class RunningSumSpec extends SparkTestBase {
 
   test("withRunningSum ≡ global window cumsum, across >1 partition") {
-    import spark.implicits._
     val df = spark.range(10000).toDF("id")
       .withColumn("v", pmod(col("id") * 37L, lit(101L)))
       .repartition(8) // scrambled input placement
@@ -35,7 +34,6 @@ class RunningSumSpec extends SparkTestBase {
   }
 
   test("withOrdinal ≡ global row_number, with NO window operator in the plan") {
-    import spark.implicits._
     val df = spark.range(20000).toDF("id")
       .withColumn("k", pmod(col("id") * 131L, lit(7919L)))
       .repartition(16)
@@ -52,7 +50,6 @@ class RunningSumSpec extends SparkTestBase {
   }
 
   test("range shuffle is evaluated ONCE across the offsets action and the window action (VERDICT r2 #3)") {
-    import spark.implicits._
     val n = 5000L
     val acc = spark.sparkContext.longAccumulator("ord_input_rows")
     val bump = udf { (id: Long) => acc.add(1L); id % 101L }

@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.sql.SparkTestBase
-import org.apache.spark.sql.functions._
 
 /** q89 corpus card: one map-side feature pass + one rollup exchange, and
   * the report recomputes from the per-doc q73 frame it aggregates. */

@@ -77,7 +77,7 @@ class RasterArtifactSpec extends SparkTestBase {
   test("artifact: open(save(r)) ≡ r — data, mask, grid, meta (metamorphic)") {
     val r = rgb(600, 400) // big enough for two overview levels (600→300→150)
     val dir = java.nio.file.Files.createTempDirectory("cog").toString + "/art"
-    RasterArtifact.save(spark, r, dir, tags = Map("source" -> "spec"))
+    RasterArtifact.save(spark, r, dir)
     val back = RasterArtifact.open(spark, dir)
     assert(back.width === r.width && back.height === r.height)
     assert(back.affine === r.affine && back.crs === r.crs)

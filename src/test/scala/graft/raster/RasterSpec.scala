@@ -298,7 +298,7 @@ class RasterSpec extends AnyFunSuite {
     val mask = Array(true, false, false, false,
                      true, false, false, false,
                      true, false, false, false)
-    val affine = Affine(1, 0, 0, 0, -1.0001, 3.0 * 1.0001) // scale(1,-1.0001)*translate(0,-3)
+    // affine = scale(1,-1.0001)*translate(0,-3)
     val r = MRaster(Array(data, data.clone(), data.clone()), mask, 4, 3,
       Affine(1, 0, 0, 0, -1.0001, 3.0003), 4326, Seq("1", "2", "3"), "uint8", None)
     // window inside the unmasked region → nothing masked

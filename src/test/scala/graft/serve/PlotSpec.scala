@@ -3,7 +3,6 @@ package graft.serve
 import graft.core.Geom
 import graft.ops.FeatureCollection
 import graft.sql.SparkTestBase
-import org.apache.spark.sql.functions._
 
 /** Plotting surface parity (plotting.py): head-200 rule, envelope
   * fit_bounds in (lat, lon) order, per-feature style injection, empty

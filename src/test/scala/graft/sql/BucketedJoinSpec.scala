@@ -24,10 +24,6 @@ class BucketedJoinSpec extends SparkTestBase {
 
     val ta = spark.table("cells_a")
     val tb = spark.table("cells_b")
-    val joined = ta.join(tb.withColumnRenamed("pid", "pid_b")
-        .withColumnRenamed("lon", "lon_b").withColumnRenamed("lat", "lat_b"),
-      "cell")
-      .groupBy("cell").agg(count(lit(1)).as("pairs"))
     // force a sort-merge join so the bucketing (not a broadcast) carries it
     val smjJoined = ta.hint("merge")
       .join(tb.withColumnRenamed("pid", "pid_b")

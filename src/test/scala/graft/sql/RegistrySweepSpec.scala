@@ -1,7 +1,6 @@
 package graft.sql
 
 import graft.core.Geom
-import org.apache.spark.sql.functions._
 
 /** Table-driven sweep over the registered function surface — the analogue
   * of the reference's parametrized delegated-op sweeps
@@ -9,7 +8,6 @@ import org.apache.spark.sql.functions._
   * function in [[GraftFunctions.all]] must resolve through the session
   * extensions and evaluate on a representative input without throwing. */
 class RegistrySweepSpec extends SparkTestBase {
-  import spark.implicits._
 
   private val poly = Geom.toWkb(Geom.polygonFromBounds(0, 0, 2, 2))
   private val poly2 = Geom.toWkb(Geom.polygonFromBounds(1, 1, 3, 3))

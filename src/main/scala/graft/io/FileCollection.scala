@@ -22,7 +22,7 @@ object FileCollection {
       GeoJsonIO.readFeatureCollection(spark, path)
     else if (lower.endsWith(".geojsonl") || lower.endsWith(".ndjson"))
       GeoJsonIO.readFeatureLines(spark, path)
-    else if (lower.endsWith(".parquet")) spark.read.parquet(path)
+    else if (lower.endsWith(".parquet")) Parquet.read(spark, path)
     else throw new IllegalArgumentException(
       s"unknown collection format for '$path' (expected .shp/.json/.geojson/.geojsonl/.parquet)")
   }

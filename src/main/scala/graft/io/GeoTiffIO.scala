@@ -75,7 +75,7 @@ object GeoTiffIO {
         true
       case _ => false
     }
-    if (!decodedNatively) decodeViaImageIO(bytes, w, h, spp, image)
+    if (!decodedNatively) decodeViaImageIO(path, bytes, w, h, spp, image)
 
     // ---- geo-referencing
     val affine = Tiff.affineOf(buf, tags)
@@ -280,10 +280,20 @@ object GeoTiffIO {
   }
 
   /** fallback pixel decode via the JDK TIFF ImageIO plugin (LZW, PackBits,
-    * JPEG-in-TIFF). Geo tags still come from the manual IFD parse. */
-  private def decodeViaImageIO(bytes: Array[Byte], w: Int, h: Int, spp: Int,
-                               image: Array[Array[Double]]): Unit = {
-    val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
+    * JPEG-in-TIFF). Geo tags still come from the manual IFD parse. The
+    * plugin reports a truncated strip as an IOException (EOFException,
+    * IIOException); only that call is guarded, so a missing file's
+    * NoSuchFileException from `readImpl` still surfaces as itself. */
+  private def decodeViaImageIO(path: String, bytes: Array[Byte], w: Int, h: Int,
+                               spp: Int, image: Array[Array[Double]]): Unit = {
+    val img =
+      try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
+      catch {
+        case e: java.io.IOException =>
+          throw new IllegalArgumentException(
+            s"truncated or corrupt TIFF '$path' (${e.getClass.getSimpleName}" +
+              s" while decoding)", e)
+      }
     require(img != null, "unsupported TIFF compression (no JDK codec)")
     val raster = img.getRaster
     var y = 0

@@ -77,8 +77,8 @@ object ShapefileIO {
   }
 
   /** geometry stream of the .shp; None = null shape. Uses the .shx index
-    * when present (authoritative record offsets), else a sequential walk. */
-  /** Truncated/corrupt .shp|.shx fails with IllegalArgumentException
+    * when present (authoritative record offsets), else a sequential walk.
+    * Truncated/corrupt .shp|.shx fails with IllegalArgumentException
     * naming the file — the decode loops index the mapped bytes directly,
     * so the error contract is enforced at this boundary (same posture as
     * [[GeoTiffIO.read]]). */
@@ -181,8 +181,8 @@ object ShapefileIO {
     }
   }
 
-  /** DBF → (fields, rows of parsed values). Deleted records ('*') skipped. */
-  /** Same boundary error contract as [[readShp]] for the .dbf side. */
+  /** DBF → (fields, rows of parsed values). Deleted records ('*') skipped.
+    * Same boundary error contract as [[readShp]] for the .dbf side. */
   def readDbf(prefix: String): (Seq[DbfField], IndexedSeq[Seq[Any]]) =
     try readDbfImpl(prefix)
     catch {

@@ -1,5 +1,6 @@
 package graft.jobs
 
+import graft.io.Parquet
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -65,7 +66,7 @@ object TrainingStoreReader {
   def shardDocs(spark: SparkSession, storeDir: String, split: String,
                 shard: Int, epochSeed: Long): DataFrame =
     Ordinals.withOrdinal(
-      spark.read.parquet(storeDir)
+      Parquet.read(spark, storeDir)
         .where(col("split") === split && col("shard") === shard),
       "ord", orderKey(epochSeed), col("doc_id"))
 

@@ -1,5 +1,6 @@
 package graft.lake
 
+import graft.io.Parquet
 import org.apache.spark.sql.{DataFrame, GraftLineage, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructType}
@@ -47,8 +48,8 @@ class LakeTable(val root: String) {
            schema: Option[StructType] = None): DataFrame = {
     val rels = manifest(stage).map(dataRelPaths).filter(_.nonEmpty)
       .getOrElse(Seq("data"))
-    schema.fold(spark.read)(spark.read.schema)
-      .parquet(rels.map(r => s"${stageDir(stage)}/$r"): _*)
+    val paths = rels.map(r => s"${stageDir(stage)}/$r")
+    schema.fold(Parquet.read(spark, paths: _*))(Parquet.read(spark, _, paths: _*))
   }
 
   /** The current snapshot's lineage, one row per write task that wrote
@@ -97,7 +98,7 @@ class LakeTable(val root: String) {
     val rels = dataRelPaths(m)
     if (rels.isEmpty)
       throw new IllegalArgumentException(s"snapshot v$version has no data_path")
-    spark.read.parquet(rels.map(r => s"${stageDir(stage)}/$r"): _*)
+    Parquet.read(spark, rels.map(r => s"${stageDir(stage)}/$r"): _*)
   }
 
   /** Re-point the current manifest at an older snapshot (atomic move, same

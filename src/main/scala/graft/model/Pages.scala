@@ -1,5 +1,6 @@
 package graft.model
 
+import graft.io.Parquet
 import org.apache.spark.sql.{DataFrame, SparkSession, GraftRegistrar}
 import org.apache.spark.sql.functions._
 
@@ -58,7 +59,7 @@ object Pages {
 
   def documentsPages(spark: SparkSession, sfDir: String): DataFrame = {
     GraftRegistrar.ensure(spark)
-    spark.read.parquet(s"$sfDir/documents.parquet")
+    Parquet.read(spark, s"$sfDir/documents.parquet")
       .withColumn("url", concat(lit(DocUrlPrefix), col("doc_id").cast("string")))
       .withColumn("warc_epoch",
         lit(DocEpochBase) + pmod(col("doc_id") * DocEpochMul, lit(DocEpochMod)))
@@ -71,7 +72,7 @@ object Pages {
     * it codegen-tight and parquet-pruneable). */
   def volumePages(spark: SparkSession, sfDir: String): DataFrame = {
     GraftRegistrar.ensure(spark)
-    spark.read.parquet(s"$sfDir/lineitem.parquet")
+    Parquet.read(spark, s"$sfDir/lineitem.parquet")
       .select((col("l_orderkey") * 8 + col("l_linenumber")).as("pid"))
       .withColumn("h1", pmod(col("pid") * M1, lit(P)))
       .withColumn("h2", pmod(col("pid") * M2 + A2, lit(P)))

@@ -2,8 +2,10 @@ package graft.ops
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.types.{DataType, LongType}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 import graft.sql.GraftUnary
 
@@ -128,14 +130,8 @@ object TextOps {
   def permB(j: Int): Long = (j * graft.model.Pages.M2 + graft.model.Pages.A2) % MinhashP
 
   /** band keys: array of 32 "s_{4k},..,s_{4k+3}" strings over the packed
-    * signature array (slice is 1-based). */
-  def bandKeys(sigs: Column): Column =
-    // codegen'd element_at/concat_ws instead of a per-band interpreted
-    // transform lambda (CodegenFallback) — same comma-joined key strings
-    array((0 until Bands).map { k =>
-      concat_ws(",", (0 until BandRows).map(r =>
-        element_at(sigs, k * BandRows + r + 1).cast("string")): _*)
-    }: _*)
+    * signature array — the [[BandKeys]] primitive kernel. */
+  def bandKeys(sigs: Column): Column = call_function("band_keys", sigs)
 
   /** matching-signature count between two packed signature arrays —
     * n_match/128 estimates Jaccard. The [[graft.sql.SigMatches]]
@@ -257,6 +253,52 @@ case class MinHash128(child: Expression) extends GraftUnary {
   }
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   override def prettyName: String = "minhash128"
+}
+
+/** band_keys(sigs): the LSH band keys of a packed signature array — for
+  * band k the decimal values of elements 4k..4k+3 joined by ",", null
+  * elements skipped (the `concat_ws` rule), so every key is byte-identical
+  * to the `array(concat_ws(",", cast(element_at(sigs, i) as string)…))`
+  * tree it replaces. That tree was ~450 static nodes per row; this is one
+  * loop over Bands × BandRows. A signature shorter than Bands × BandRows
+  * fails, like the ANSI `element_at` did: a short key would silently
+  * change the candidate set. */
+case class BandKeys(child: Expression) extends GraftUnary {
+  import TextOps._
+  override def dataType: DataType = ArrayType(StringType, containsNull = false)
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
+    case t => TypeCheckResult.TypeCheckFailure(s"band_keys expects array<bigint>, got $t")
+  }
+
+  def compute(v: Any): Any = {
+    val sigs = v.asInstanceOf[ArrayData]
+    val n = sigs.numElements()
+    if (n < Bands * BandRows)
+      throw new IllegalArgumentException(
+        s"band_keys expects a signature of at least ${Bands * BandRows} elements, got $n")
+    val keys = new Array[Any](Bands)
+    val sb = new java.lang.StringBuilder(BandRows * 11)
+    var k = 0
+    while (k < Bands) {
+      sb.setLength(0)
+      var r = 0
+      while (r < BandRows) {
+        val i = k * BandRows + r
+        if (!sigs.isNullAt(i)) {
+          if (sb.length > 0) sb.append(',')
+          sb.append(sigs.getLong(i))
+        }
+        r += 1
+      }
+      keys(k) = UTF8String.fromString(sb.toString)
+      k += 1
+    }
+    new GenericArrayData(keys)
+  }
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+  override def prettyName: String = "band_keys"
 }
 
 /** simhash64(text): 64-bit SimHash over whitespace tokens; per-token hash =

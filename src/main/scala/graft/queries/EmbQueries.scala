@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.io.Parquet
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.GraftCheckpoints.TrackedDataFrame
 import org.apache.spark.sql.functions._
@@ -76,7 +77,7 @@ object EmbQueries {
   /** Brute-force cosine top-k: probes (vec_id < NumProbes) broadcast against
     * all vectors; rank by exact cosine desc, vec_id asc. */
   def knnCosine(spark: SparkSession, sfDir: String): DataFrame = {
-    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    val emb = Parquet.read(spark, s"$sfDir/embeddings.parquet")
       .withColumn("norm", sqrt(dotCols(col("embedding"), col("embedding"))))
     val probes = emb.where(col("vec_id") < NumProbes)
       .select(col("vec_id").as("qid"), col("embedding").as("qemb"), col("norm").as("qnorm"))
@@ -94,7 +95,7 @@ object EmbQueries {
     * plane dots project to a column FIRST so the 8-plane kernel runs once
     * per row; the bit-pack then reads the materialized array. */
   def lshBuckets(spark: SparkSession, sfDir: String): DataFrame = {
-    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    val emb = Parquet.read(spark, s"$sfDir/embeddings.parquet")
     emb.select(col("vec_id"), planeDots(col("embedding"), 0, LshBits).as("d"))
       .select(col("vec_id"), signBits(col("d"), LshBits).as("bucket"))
       .groupBy(col("bucket"))
@@ -116,7 +117,7 @@ object EmbQueries {
     * has NO ≥0.95-cosine pairs and the near-dup gate is vacuous. Both
     * families are pure deterministic arithmetic, mirrored in the oracle. */
   def dedupInput(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    val base = Parquet.read(spark, s"$sfDir/embeddings.parquet")
       .select(col("vec_id"), col("embedding"))
     val marked = base.where(pmod(col("vec_id"), lit(97L)) === 0)
     val exact = marked.select((col("vec_id") + 10000000L).as("vec_id"), col("embedding"))
@@ -138,7 +139,7 @@ object EmbQueries {
     * expensive map stage at 10^9 vectors). Embedding arrays never enter
     * this frame; callers that need them rejoin by vec_id. */
   def bucketed(spark: SparkSession, sfDir: String): DataFrame =
-    bucketedOf(spark.read.parquet(s"$sfDir/embeddings.parquet"))
+    bucketedOf(Parquet.read(spark, s"$sfDir/embeddings.parquet"))
 
   def bucketedOf(embIn: DataFrame): DataFrame = {
     // two-step projection: the per-table 16-plane kernel lands in its own
@@ -168,7 +169,7 @@ object EmbQueries {
     * query touches nprobe/cells of the data — here the same plan runs as
     * one assignment pass + a cell equi-join, never a full cross join. */
   def ivfAnn(spark: SparkSession, sfDir: String): DataFrame = {
-    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    val emb = Parquet.read(spark, s"$sfDir/embeddings.parquet")
       .withColumn("norm", sqrt(dotCols(col("embedding"), col("embedding"))))
     val (assignIds, centroids) = ivfTrained(spark, sfDir)
 
@@ -295,7 +296,7 @@ object EmbQueries {
       GraftCheckpoints.release(c)
       a
     }
-    (assign, spark.read.parquet(cDir.getAbsolutePath))
+    (assign, Parquet.read(spark, cDir.getAbsolutePath))
   }
 
   /** Stage directories of the trained quantizer (spec hook — the key folds
@@ -311,7 +312,7 @@ object EmbQueries {
     * tracked checkpoints. */
   private def ivfTrain(spark: SparkSession, sfDir: String): (DataFrame, DataFrame) = {
     import org.apache.spark.sql.GraftCheckpoints
-    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    val emb = Parquet.read(spark, s"$sfDir/embeddings.parquet")
 
     // --- seed assignment (max dot with the fixed directions) ...
     val seedDots = emb.select(col("vec_id"), col("embedding"),
@@ -397,7 +398,7 @@ object EmbQueries {
   /** (vec_id, embedding, norm, cell): every vector assigned to its best
     * seed cell (max dot, ties → lowest cell id). */
   def seedAssigned(spark: SparkSession, sfDir: String): DataFrame = {
-    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    val emb = Parquet.read(spark, s"$sfDir/embeddings.parquet")
       .withColumn("norm", sqrt(dotCols(col("embedding"), col("embedding"))))
     val seedDots = emb.select(col("vec_id"), col("embedding"), col("norm"),
       posexplode(planeDots(col("embedding"), IvfSeedOffset, IvfCells))
@@ -410,7 +411,7 @@ object EmbQueries {
 
   /** nprobe best seed cells per probe vector. */
   def probeCells(spark: SparkSession, sfDir: String): DataFrame = {
-    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    val emb = Parquet.read(spark, s"$sfDir/embeddings.parquet")
       .withColumn("norm", sqrt(dotCols(col("embedding"), col("embedding"))))
     val dots = emb.where(col("vec_id") < NumProbes)
       .select(col("vec_id").as("qid"), col("embedding").as("qemb"),
@@ -553,7 +554,7 @@ object EmbQueries {
     * (CLAUDE.md rule); every double op is mirrored in order so the codes
     * are bit-identical. The gate outputs per-vector integer code stats. */
   def int8Quantize(spark: SparkSession, sfDir: String): DataFrame = {
-    val dims = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    val dims = Parquet.read(spark, s"$sfDir/embeddings.parquet")
       .select(col("vec_id"), posexplode(col("embedding")).as(Seq("d0", "xf")))
       .select(col("vec_id"), (col("d0") + 1).as("d"), col("xf").cast("double").as("x"))
     val rng = dims.groupBy(col("d"))
@@ -648,7 +649,7 @@ object EmbQueries {
     * baseline exactly as q20 is for exact cosine — at scale the projected
     * vectors feed the same IVF store layout (q42). */
   def jlProject(spark: SparkSession, sfDir: String): DataFrame = {
-    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    val emb = Parquet.read(spark, s"$sfDir/embeddings.parquet")
     jlTopK(emb, col("vec_id") < NumProbes).orderBy(col("qid"), col("rank"))
   }
 }
@@ -919,7 +920,7 @@ object EmbOracles {
 object RelQueries {
 
   def windowTopK(spark: SparkSession, sfDir: String): DataFrame = {
-    val orders = spark.read.parquet(s"$sfDir/orders.parquet")
+    val orders = Parquet.read(spark, s"$sfDir/orders.parquet")
     val w = Window.partitionBy(col("o_custkey"))
       .orderBy(col("o_totalprice").desc, col("o_orderkey"))
     orders.where(col("o_custkey") <= 100)
@@ -932,10 +933,10 @@ object RelQueries {
   /** customer ⋈ orders ⋈ nation: the small sides broadcast; quantity sums
     * stay integral (exact). */
   def multiJoinAgg(spark: SparkSession, sfDir: String): DataFrame = {
-    val orders = spark.read.parquet(s"$sfDir/orders.parquet")
-    val customer = spark.read.parquet(s"$sfDir/customer.parquet")
-    val nation = spark.read.parquet(s"$sfDir/nation.parquet")
-    val lineitem = spark.read.parquet(s"$sfDir/lineitem.parquet")
+    val orders = Parquet.read(spark, s"$sfDir/orders.parquet")
+    val customer = Parquet.read(spark, s"$sfDir/customer.parquet")
+    val nation = Parquet.read(spark, s"$sfDir/nation.parquet")
+    val lineitem = Parquet.read(spark, s"$sfDir/lineitem.parquet")
     lineitem
       .join(orders, col("l_orderkey") === col("o_orderkey"))
       .join(broadcast(customer), col("o_custkey") === col("c_custkey"))
@@ -950,7 +951,7 @@ object RelQueries {
   /** Sessionization: 30-minute-gap sessions per user via lag window —
     * the stateful/stream-shaped op over the events table. */
   def sessionize(spark: SparkSession, sfDir: String): DataFrame = {
-    val events = spark.read.parquet(s"$sfDir/events.parquet")
+    val events = Parquet.read(spark, s"$sfDir/events.parquet")
     val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
     events.where(col("user_id") < 50)
       .withColumn("prev_ts", lag(col("ts"), 1).over(w))
@@ -970,7 +971,7 @@ object RelQueries {
     * "smallest value with cume_dist ≥ p" convention) byte-exactly. Plan:
     * single hash-partitioned sort-based aggregate on event_type. */
   def percentiles(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(s"$sfDir/events.parquet")
+    Parquet.read(spark, s"$sfDir/events.parquet")
       .withColumn("cents", round(col("value") * 100).cast("bigint"))
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"),

@@ -456,8 +456,6 @@ object GraphOracles {
        |ORDER BY r DESC, host""".stripMargin
   }
 
-  /** q88 mirror: DuckDB builds the same anchor-bearing pages and must
-    * extract the identical edge set with ITS regex engine. */
   /** The DuckDB twin of [[GraphQueries.anchorPages]] (single definition;
     * change them together): the `nn` + `l` CTEs synthesizing the same
     * pages with `textSql` (a SQL expression over doc_id) as the anchor
@@ -481,6 +479,8 @@ object GraphOracles {
        |  FROM documents, nn)"""
   }
 
+  /** q88 mirror: DuckDB builds the same anchor-bearing pages and must
+    * extract the identical edge set with ITS regex engine. */
   val linkExtract: String = {
     s"""WITH ${anchorPagesSql("'x'")},
        |h AS (SELECT src, unnest(regexp_extract_all(html2, '<a href=''([^'']+)''', 1)) AS href

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.io.Parquet
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model.{Pages, PolygonLayer}
@@ -98,7 +99,7 @@ object JoinQueries {
     * algorithm-independent cross-check. */
   def asofJoin(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val ev = spark.read.parquet(s"$sfDir/events.parquet")
+    val ev = Parquet.read(spark, s"$sfDir/events.parquet")
       .withColumn("ts", col("ts").cast("timestamp")) // NTZ → UTC instant
     val views = ev.where(col("event_type") === "view")
       .groupBy(col("user_id"), col("ts"))

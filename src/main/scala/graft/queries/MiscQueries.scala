@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.io.Parquet
 import org.apache.spark.sql.{DataFrame, SparkSession, GraftRegistrar}
 import org.apache.spark.sql.functions._
 import graft.model.Pages
@@ -88,7 +89,7 @@ object MiscQueries {
     * DateType, unix_micros on TimestampType, int ordering on seconds-of-
     * day) so the parse itself faces the oracle. */
   def fionaDates(spark: SparkSession, sfDir: String): DataFrame = {
-    val recs = spark.read.parquet(s"$sfDir/orders.parquet")
+    val recs = Parquet.read(spark, s"$sfDir/orders.parquet")
       .select(col("o_orderkey").as("fid"), col("o_orderdate"))
       .withColumn("alarm_s", pmod(col("fid") * 7L, lit(86400L)))
       .select(col("fid"),

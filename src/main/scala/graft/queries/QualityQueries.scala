@@ -513,31 +513,6 @@ object QualityQueries {
   /** Shard-assignment derivation token for lake stage names. */
   def shardKey: String = s"n$NumShards-t$TestCut-v$ValCut-m$ShardMul-p$ShardMod"
 
-  /** q79: deterministic corpus shuffle + contamination-safe split + shard
-    * assignment — the step between the dedup/quality gates and the
-    * training-data writer. Split and shard are PURE FUNCTIONS of doc_id
-    * (split from the fixed md5's first byte, shard from an independent
-    * multiplicative hash), so a recrawl or rerun can never migrate a
-    * document across the train/val/test wall — the contamination-safety
-    * property an LLM eval pipeline depends on — and it holds precisely
-    * BECAUSE the hash is unseeded: a run-varying seed would re-draw the
-    * wall every run. Intra-shard order is the same fixed hash shuffle
-    * (ORDER BY md5 — decorrelates crawl order from
-    * training order), and the position comes from
-    * [[graft.ops.Ordinals.withGroupedOrdinal]]: a `row_number() OVER
-    * (PARTITION BY split, shard)` window would funnel 10^12 rows through
-    * 3×[[NumShards]] reducers; the grouped ordinal range-partitions on
-    * (group, hash) so every shard spans many partitions and the rank is a
-    * map-side projection over (P+G)-row driver offsets. The output rolls
-    * up per (split, shard): doc/char mass, each shard's head doc, and the
-    * order-sensitive checksum sum(pos·doc_id) that pins the EXACT shuffle
-    * order against the oracle's window ranking. */
-  /** The split/shard/shuffle-key derivation, factored so the BATCH query
-    * (q79) and the STREAMING training-store writer
-    * ([[graft.streaming.ShardStreams]]) evaluate the exact same
-    * expressions — the same single-source-of-truth pattern as
-    * `TextOps.canonicalUrl` across q69 and its streaming face. Adds
-    * columns (h, split, shard) to any frame with a `doc_id`. */
   /** The q79 split rule — SINGLE source for the assignment
     * ([[withShardAssignment]]), the q91 leakage audit ([[splitCol]]), and
     * both oracles ([[splitCaseSql]]); a rule change lands everywhere or
@@ -556,6 +531,12 @@ object QualityQueries {
        |     WHEN substr($hExpr, 1, 2) < '$ValCut' THEN 'val'
        |     ELSE 'train' END""".stripMargin
 
+  /** The split/shard/shuffle-key derivation, factored so the BATCH query
+    * (q79) and the STREAMING training-store writer
+    * ([[graft.streaming.ShardStreams]]) evaluate the exact same
+    * expressions — the same single-source-of-truth pattern as
+    * `TextOps.canonicalUrl` across q69 and its streaming face. Adds
+    * columns (h, split, shard) to any frame with a `doc_id`. */
   def withShardAssignment(df: DataFrame): DataFrame = {
     // wide (string, 128-bit) identities have no numeric form — shard from
     // 15 hex digits (60 bits) of the split hash instead; still a pure
@@ -575,6 +556,25 @@ object QualityQueries {
           lit(ShardMod)) % NumShards)
   }
 
+  /** q79: deterministic corpus shuffle + contamination-safe split + shard
+    * assignment — the step between the dedup/quality gates and the
+    * training-data writer. Split and shard are PURE FUNCTIONS of doc_id
+    * (split from the fixed md5's first byte, shard from an independent
+    * multiplicative hash), so a recrawl or rerun can never migrate a
+    * document across the train/val/test wall — the contamination-safety
+    * property an LLM eval pipeline depends on — and it holds precisely
+    * BECAUSE the hash is unseeded: a run-varying seed would re-draw the
+    * wall every run. Intra-shard order is the same fixed hash shuffle
+    * (ORDER BY md5 — decorrelates crawl order from
+    * training order), and the position comes from
+    * [[graft.ops.Ordinals.withGroupedOrdinal]]: a `row_number() OVER
+    * (PARTITION BY split, shard)` window would funnel 10^12 rows through
+    * 3×[[NumShards]] reducers; the grouped ordinal range-partitions on
+    * (group, hash) so every shard spans many partitions and the rank is a
+    * map-side projection over (P+G)-row driver offsets. The output rolls
+    * up per (split, shard): doc/char mass, each shard's head doc, and the
+    * order-sensitive checksum sum(pos·doc_id) that pins the EXACT shuffle
+    * order against the oracle's window ranking. */
   def shuffleShards(spark: SparkSession, sfDir: String): DataFrame = {
     val d = withShardAssignment(
       docs(spark, sfDir).select(col("doc_id"), col("n_chars")))
@@ -1093,6 +1093,14 @@ object QualityQueries {
   /** Epoch-bucket width: the derivation's year range in 8 slices. */
   val NoveltyBucketS: Long = graft.model.Pages.DocEpochMod / NoveltyEpochs
 
+  /** The q108 epoch-bucket derivation — ONE definition shared with the
+    * [[graft.jobs.IncrementalNovelty]] production face (and the spec's
+    * plan hook), so the gate query and the incremental store cannot
+    * drift. */
+  private[graft] def withEpochBucket(docs: DataFrame): DataFrame =
+    docs.withColumn("eb", expr(
+      s"(warc_epoch - ${graft.model.Pages.DocEpochBase}) div $NoveltyBucketS"))
+
   /** q108 crawl novelty curve — the content-growth report an incremental
     * crawl operation reads per crawl cycle: of the distinct 16-word
     * blocks ([[BlockW]], the q82 unit) appearing in each crawl-epoch
@@ -1115,14 +1123,6 @@ object QualityQueries {
     * pair table is the staged store an incremental crawl appends to
     * (the IncrementalDedup pattern); first-seen then needs no recompute
     * over history. */
-  /** The q108 epoch-bucket derivation — ONE definition shared with the
-    * [[graft.jobs.IncrementalNovelty]] production face (and the spec's
-    * plan hook), so the gate query and the incremental store cannot
-    * drift. */
-  private[graft] def withEpochBucket(docs: DataFrame): DataFrame =
-    docs.withColumn("eb", expr(
-      s"(warc_epoch - ${graft.model.Pages.DocEpochBase}) div $NoveltyBucketS"))
-
   def crawlNovelty(spark: SparkSession, sfDir: String): DataFrame = {
     val withEb = withEpochBucket(docs(spark, sfDir))
     val pairs = noveltyPairsOf(withEb).trackedCheckpoint
@@ -1158,21 +1158,6 @@ object QualityQueries {
   val DecontK = 5
   val EvalMod = 101
 
-  /** Benchmark decontamination: flag training documents sharing any
-    * [[DecontK]]-word gram with a held-out evaluation set (the standard
-    * n-gram-overlap decontamination pass run before every LLM training
-    * job). The "benchmark" here is the deterministic doc_id % [[EvalMod]]
-    * = 0 slice of the corpus.
-    *
-    * Plan shape (VERDICT r3 #2 — the previous shape globally
-    * `.distinct()`ed the N×L gram stream and then consumed it TWICE, a
-    * doubled full-stream exchange): the raw gram stream is exploded ONCE
-    * and faces exactly ONE exchange — the (doc_id, gram) pair-dedup
-    * aggregation (partial map-side, so the shuffle carries deduped pairs);
-    * totals + hits then come from a per-doc rollup whose exchange carries
-    * only per-doc partials. (A single groupBy with three distinct
-    * aggregates would instead plan via Expand: 3× the stream map-side and
-    * a wider exchange — see the note in [[decontaminate]].) */
   /** Raw (doc_id, gram-hash) stream — NOT deduplicated; distinctness is
     * the rollups' job. PLANTED contamination (mirrored in the oracle)
     * keeps the gates non-vacuous at every SF: a canary phrase shared by
@@ -1215,6 +1200,21 @@ object QualityQueries {
       .distinct()
       .trackedCheckpoint
 
+  /** Benchmark decontamination: flag training documents sharing any
+    * [[DecontK]]-word gram with a held-out evaluation set (the standard
+    * n-gram-overlap decontamination pass run before every LLM training
+    * job). The "benchmark" here is the deterministic doc_id % [[EvalMod]]
+    * = 0 slice of the corpus.
+    *
+    * Plan shape (VERDICT r3 #2 — the previous shape globally
+    * `.distinct()`ed the N×L gram stream and then consumed it TWICE, a
+    * doubled full-stream exchange): the raw gram stream is exploded ONCE
+    * and faces exactly ONE exchange — the (doc_id, gram) pair-dedup
+    * aggregation (partial map-side, so the shuffle carries deduped pairs);
+    * totals + hits then come from a per-doc rollup whose exchange carries
+    * only per-doc partials. (A single groupBy with three distinct
+    * aggregates would instead plan via Expand: 3× the stream map-side and
+    * a wider exchange — see the note in [[decontaminate]].) */
   def decontaminate(spark: SparkSession, sfDir: String): DataFrame = {
     val evalSet = evalGramSet(spark, sfDir)
     val train = decontGramStream(spark, sfDir)

@@ -5,8 +5,9 @@ import org.apache.spark.sql.DataFrame
 /** Process-shared, fingerprint-keyed parquet stage cache for derived tables
   * of an input file (the query-facing twin of a committed lake stage —
   * CorpusDedupJob stages the same tables through [[graft.lake.LakeTable]]).
-  * A stage directory name encodes the SOURCE fingerprint (path, size,
-  * mtime) plus every algorithm constant the caller folds into `key`, so a
+  * A stage directory name encodes the SOURCE path and fingerprint (the
+  * data-file listing of [[graft.io.Parquet.fingerprint]]) plus every
+  * algorithm constant the caller folds into `key`, so a
   * stale cache can never outlive a code or data change. Values must be
   * deterministic: a replay reads identical bytes and every gate hash is
   * unchanged. */
@@ -15,7 +16,7 @@ object StageCache {
   /** fingerprint-keyed cache directory for a derived table of `srcPath`. */
   def dir(srcPath: String, what: String, key: String): java.io.File = {
     val src = new java.io.File(srcPath)
-    val full = s"$what:${src.getCanonicalPath}:${src.length}:${src.lastModified}:$key"
+    val full = s"$what:${src.getCanonicalPath}:${graft.io.Parquet.fingerprint(src.getPath)}:$key"
     val fp = java.security.MessageDigest.getInstance("MD5")
       .digest(full.getBytes("UTF-8")).map("%02x".format(_)).mkString
     new java.io.File(
@@ -47,7 +48,7 @@ object StageCache {
         afterPublish(df)
       }
     }
-    spark.read.parquet(dir.getAbsolutePath)
+    graft.io.Parquet.read(spark, dir.getAbsolutePath)
   }
 
   /** Publish a stage-cache table ATOMICALLY: write to a process-unique

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.io.Parquet
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model.Pages
@@ -12,7 +13,7 @@ object StreamQueries {
     * EventStream.windowedCounts (unified batch/stream semantics). Money
     * kept integral (cents) so the oracle compares exactly. */
   def eventWindows(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(s"$sfDir/events.parquet")
+    Parquet.read(spark, s"$sfDir/events.parquet")
       .withColumn("ts", col("ts").cast("timestamp"))
       .groupBy(window(col("ts"), "15 minutes").as("w"), col("event_type"))
       .agg(count(lit(1)).as("n"),
@@ -38,7 +39,7 @@ object StreamQueries {
   /** JSON property access over the events props column
     * (features.py:144-151 property access, via JSON at scale). */
   def jsonProps(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(s"$sfDir/events.parquet")
+    Parquet.read(spark, s"$sfDir/events.parquet")
       .withColumn("k", get_json_object(col("props"), "$.k").cast("int"))
       .groupBy(pmod(col("k"), lit(10)).as("k_mod"))
       .agg(count(lit(1)).as("n"), min(col("event_id")).as("min_event"),
@@ -50,7 +51,7 @@ object StreamQueries {
     * spec-driven against this result): per click, the views of the same
     * user in the trailing 10-minute window, aggregated. */
   def intervalJoinCounts(spark: SparkSession, sfDir: String): DataFrame = {
-    val ev = spark.read.parquet(s"$sfDir/events.parquet")
+    val ev = Parquet.read(spark, s"$sfDir/events.parquet")
     graft.streaming.StatefulStreams.intervalJoin(
         ev.where(col("event_type") === "click"),
         ev.where(col("event_type") === "view"))

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.io.Parquet
 import org.apache.spark.sql.{Column, DataFrame, SparkSession, GraftRegistrar, GraftCheckpoints}
 import org.apache.spark.sql.GraftCheckpoints.TrackedDataFrame
 import org.apache.spark.sql.functions._
@@ -238,6 +239,13 @@ object TextQueries {
         col("tf0"), col("tf1"), col("tf2"), col("score"))
   }
 
+  /** statically tied to [[Bm25TopK]]: the lex leg's depth IS bm25Rank's
+    * internal limit, so an independent HybridK would silently desync the
+    * Spark leg (capped at Bm25TopK) from the oracle's LIMIT HybridK. */
+  val HybridK: Int = Bm25TopK
+  val HybridTop = 10
+  val RrfK0 = 60
+
   /** q85 hybrid retrieval: BM25 lexical top-[[HybridK]] fused with
     * embedding-cosine semantic top-[[HybridK]] (probe = vector 0, the
     * documents/embeddings tables share the 0..N id space) by Reciprocal
@@ -250,18 +258,11 @@ object TextQueries {
     * driver-bounded frame — so the full-outer fusion join touches 2K rows
     * no matter the corpus size; the only corpus-sized work is the two
     * scans the legs already own. */
-  /** statically tied to [[Bm25TopK]]: the lex leg's depth IS bm25Rank's
-    * internal limit, so an independent HybridK would silently desync the
-    * Spark leg (capped at Bm25TopK) from the oracle's LIMIT HybridK. */
-  val HybridK: Int = Bm25TopK
-  val HybridTop = 10
-  val RrfK0 = 60
-
   def hybridRank(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.queries.EmbQueries.dotCols
     val lex = bm25Rank(spark, sfDir)
       .select(col("doc_id"), col("rank").as("lex_rank"))
-    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    val emb = Parquet.read(spark, s"$sfDir/embeddings.parquet")
       .withColumn("norm", sqrt(dotCols(col("embedding"), col("embedding"))))
     val probe = emb.where(col("vec_id") === 0)
       .select(col("embedding").as("qemb"), col("norm").as("qnorm"))
@@ -577,9 +578,11 @@ object TextQueries {
       .select(col("a"), col("b"), col("n_match"))
 
   /** (doc_id, band, key): one row per doc and LSH band. */
-  private[graft] def bandRows(sigs: DataFrame): DataFrame =
+  private[graft] def bandRows(sigs: DataFrame): DataFrame = {
+    GraftRegistrar.ensure(sigs.sparkSession)
     sigs.select(col("doc_id"),
       posexplode(TextOps.bandKeys(col("sigs"))).as(Seq("band", "key")))
+  }
 
   /** Distinct candidate pairs (a < b) of docs sharing a band bucket — an
     * equi-join on (band, key), so only same-bucket rows meet and the

@@ -1,5 +1,6 @@
 package graft.raster
 
+import graft.io.Parquet
 import java.awt.image.BufferedImage
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 import javax.imageio.ImageIO
@@ -196,7 +197,7 @@ object RasterArtifact {
     val (w, h) =
       if (factor == 1) (m.width, m.height)
       else ((m.width + factor - 1) / factor, (m.height + factor - 1) / factor)
-    val rows = spark.read.parquet(s"$path/chunks")
+    val rows = Parquet.read(spark, s"$path/chunks")
       .where(org.apache.spark.sql.functions.col("factor") === factor)
       .collect()
     val img = Array.fill(m.bandNames.size)(new Array[Double](w * h))

@@ -106,6 +106,7 @@ object GraftFunctions {
     // text
     "simhash64" -> (a => graft.ops.SimHash64(a.head)),
     "minhash128" -> (a => graft.ops.MinHash128(a.head)),
+    "band_keys" -> (a => graft.ops.BandKeys(a.head)),
     "winnow_fp" -> (a => graft.ops.WinnowFp(a.head)),
     "nfc_normalize" -> (a => graft.ops.NfcNormalize(a.head)),
     // Spark ships Bloom sketches only as INTERNAL expressions (used by its

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.io.Parquet
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -29,7 +30,7 @@ object EventStream {
     * arrive (the streaming sibling of LakeTable stage resume). */
   def runAvailableNowToParquet(spark: SparkSession, inputDir: String,
                                outDir: String, checkpointDir: String): StreamingQuery = {
-    val schema = spark.read.parquet(inputDir).schema
+    val schema = Parquet.read(spark, inputDir).schema
     val stream = spark.readStream.schema(schema).parquet(inputDir)
     windowedCounts(stream)
       .writeStream
@@ -44,7 +45,7 @@ object EventStream {
   /** run incrementally over a parquet dir into an in-memory sink. */
   def runAvailableNow(spark: SparkSession, inputDir: String,
                       checkpointDir: String, queryName: String): StreamingQuery = {
-    val schema = spark.read.parquet(inputDir).schema
+    val schema = Parquet.read(spark, inputDir).schema
     val stream = spark.readStream.schema(schema).parquet(inputDir)
     windowedCounts(stream)
       .writeStream

@@ -355,13 +355,17 @@ class GeoTiffSpec extends AnyFunSuite with TimeLimits {
     // IllegalArgumentException, validate returns errors
     val dir = Files.createTempDirectory("gtprefix")
     val r = synth(19, 13, "int16", Some(-9999.0))
-    val files = Seq("none", "deflate").map { c =>
+    // lzw/packbits/jpeg decode through ImageIO, whose truncation errors are
+    // IOExceptions; JPEG is lossy, so its full file is not compared
+    val files = Seq("none", "deflate", "lzw", "packbits").map { c =>
       val p = s"$dir/strip_$c.tif"; GeoTiffWriter.write(r, p, c); p
     } :+ { val p = s"$dir/cog.tif"; CogWriter.write(r, p, 8); p }
+    val jpeg = s"$dir/strip_jpeg.tif"
+    GeoTiffWriter.write(synth(19, 13, "uint8", None), jpeg, "jpeg")
     val tmp = s"$dir/prefix.tif"
-    for (src <- files) {
+    for (src <- files :+ jpeg) {
       val full = Files.readAllBytes(Paths.get(src))
-      assert(GeoTiffIO.read(src).image(0).sameElements(r.image(0)), src)
+      if (src != jpeg) assert(GeoTiffIO.read(src).image(0).sameElements(r.image(0)), src)
       assert(CogValidator.ifdSummary(src).length === (if (src.endsWith("cog.tif")) 6 else 1))
       for (n <- 0 until full.length) {
         Files.write(Paths.get(tmp), full.take(n))

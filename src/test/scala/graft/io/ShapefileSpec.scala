@@ -149,4 +149,45 @@ class ShapefileSpec extends SparkTestBase {
       catch { case _: IllegalArgumentException => () }
     }
   }
+
+  test("truncated synthesized .shp/.dbf fail with the boundary contract (offline twin)") {
+    import java.nio.file.{Files, Paths}
+    val dir = Files.createTempDirectory("trunc_synth").toString
+    def sq(x0: Double, y0: Double, d: Double) =
+      Array(Pt(x0, y0), Pt(x0 + d, y0), Pt(x0 + d, y0 + d), Pt(x0, y0 + d), Pt(x0, y0))
+    val multi = GMultiPolygon(Array(
+      GPolygon(Array(sq(0, 0, 10), sq(4, 4, 2))), GPolygon(Array(sq(20, 0, 5)))))
+    val polys = Seq(
+      (Geom.toWkb(multi), "two-part", 7L, 1.5),
+      (Geom.toWkb(GPolygon(Array(sq(-8, -8, 3)))), "single", -3L, -0.25),
+      (null.asInstanceOf[Array[Byte]], null.asInstanceOf[String], 0L, 0.0))
+      .toDF("geom", "name", "n", "x")
+    val pts = Seq((Geom.toWkb(GPoint(2.5, 48.75)), "a"), (Geom.toWkb(GPoint(-1.0, 3.0)), "b"))
+      .toDF("geom", "name")
+    ShapefileIO.write(polys, s"$dir/polys")
+    ShapefileIO.write(pts, s"$dir/pts")
+    ShapefileIO.readShp(s"$dir/polys")(0) match {
+      case Some(GMultiPolygon(ps)) => assert(ps.map(_.rings.length).toSeq === Seq(2, 1))
+      case g => fail(s"the two-part polygon read back as $g")
+    }
+    assert(ShapefileIO.readDbf(s"$dir/pts")._2.length === 2)
+    val pre = s"$dir/t"
+    for (src <- Seq(s"$dir/polys", s"$dir/pts")) {
+      val shp = Files.readAllBytes(Paths.get(src + ".shp"))
+      val dbf = Files.readAllBytes(Paths.get(src + ".dbf"))
+      // truncated .shp with the intact .shx (its offsets point past the data)
+      Files.write(Paths.get(pre + ".shx"), Files.readAllBytes(Paths.get(src + ".shx")))
+      for (n <- 0 until shp.length) {
+        Files.write(Paths.get(pre + ".shp"), shp.take(n))
+        try ShapefileIO.readShp(pre)
+        catch { case _: IllegalArgumentException => () } // the contract
+      }
+      // truncated .dbf (field-descriptor walk + record slicing)
+      for (n <- 0 until dbf.length) {
+        Files.write(Paths.get(pre + ".dbf"), dbf.take(n))
+        try ShapefileIO.readDbf(pre)
+        catch { case _: IllegalArgumentException => () }
+      }
+    }
+  }
 }

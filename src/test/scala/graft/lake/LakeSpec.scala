@@ -157,29 +157,22 @@ class LakeSpec extends SparkTestBase {
     // one write of the plan + at most one scan of the committed files.
     val root = freshRoot("bytes")
     val lake = new LakeTable(root)
-    val bytesRead = new java.util.concurrent.atomic.AtomicLong(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (t.taskMetrics != null)
-          bytesRead.addAndGet(t.taskMetrics.inputMetrics.bytesRead)
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val (_, stats) = withJobStats {
       StageRunner.stage(spark, lake, "s1") {
         spark.range(200000).toDF("id")
           .withColumn("payload", md5(col("id").cast("string")))
           .repartition(4)
       }
-      Thread.sleep(500) // listener events are async
-      val dataSize = Files.walk(Paths.get(s"$root/s1/data_v1")).toArray
-        .map(_.asInstanceOf[java.nio.file.Path].toFile)
-        .filter(f => f.isFile && f.getName.endsWith(".parquet")).map(_.length).sum
-      assert(dataSize > 0)
-      // committed-scan ≤ ~1.2× the file size (footer re-reads allowed);
-      // the r1 code re-evaluated + re-read → ≥2× here
-      assert(bytesRead.get() <= (dataSize * 1.5).toLong,
-        s"commit read ${bytesRead.get()} bytes for a $dataSize-byte stage")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    val bytesRead = stats.bytesRead
+    val dataSize = Files.walk(Paths.get(s"$root/s1/data_v1")).toArray
+      .map(_.asInstanceOf[java.nio.file.Path].toFile)
+      .filter(f => f.isFile && f.getName.endsWith(".parquet")).map(_.length).sum
+    assert(dataSize > 0)
+    // committed-scan ≤ ~1.2× the file size (footer re-reads allowed);
+    // the r1 code re-evaluated + re-read → ≥2× here
+    assert(bytesRead <= (dataSize * 1.5).toLong,
+      s"commit read $bytesRead bytes for a $dataSize-byte stage")
   }
 
   /** xor of `xxhash64(<all columns>)` over a frame's rows. */
@@ -238,36 +231,16 @@ class LakeSpec extends SparkTestBase {
   test("a stage commit reads 0 bytes of committed data") {
     val root = freshRoot("zeroread")
     val lake = new LakeTable(root)
-    val sc = spark.sparkContext
-    val bytesRead = new java.util.concurrent.atomic.AtomicLong(0)
-    val markerJob = new java.util.concurrent.atomic.AtomicInteger(-1)
-    val drained = new java.util.concurrent.CountDownLatch(1)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (t.taskMetrics != null)
-          bytesRead.addAndGet(t.taskMetrics.inputMetrics.bytesRead)
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (Option(j.properties).exists(_.getProperty("lakespec.marker") != null))
-          markerJob.set(j.jobId)
-      override def onJobEnd(j: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
-        if (j.jobId == markerJob.get) drained.countDown()
-    }
-    sc.addSparkListener(listener)
-    try {
+    val (_, stats) = withJobStats {
       StageRunner.stage(spark, lake, "s1") {
         spark.range(200000).toDF("id")
           .withColumn("payload", md5(col("id").cast("string")))
           .repartition(4)
       }
-      // listener events arrive in order: once a marker job's end is seen,
-      // every task of the commit has been counted
-      sc.setLocalProperty("lakespec.marker", "1")
-      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty("lakespec.marker", null)
-      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      assert(lake.rowCount("s1").contains(200000L))
-      assert(bytesRead.get() === 0L,
-        s"the commit read ${bytesRead.get()} bytes back from what it wrote")
-    } finally sc.removeSparkListener(listener)
+    }
+    assert(lake.rowCount("s1").contains(200000L))
+    assert(stats.bytesRead === 0L,
+      s"the commit read ${stats.bytesRead} bytes back from what it wrote")
   }
 
   test("snapshot versioning: recommit → v2, time-travel readAt, atomic rollback") {

@@ -59,15 +59,8 @@ class RunningSumSpec extends SparkTestBase {
     // sketch + the P-row offsets collect; under AQE each materialized
     // query stage surfaces as its own job, so the bound is loose — the
     // EXACT no-recompute observable is the accumulator below
-    var jobs = 0
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs += 1
-    }
-    spark.sparkContext.addSparkListener(listener)
-    val got = Ordinals.withOrdinal(df, "rn", col("v"), col("id"))
-    Thread.sleep(1000) // listener bus is async; drain before reading
-    spark.sparkContext.removeSparkListener(listener)
+    val (got, stats) = withJobStats(Ordinals.withOrdinal(df, "rn", col("v"), col("id")))
+    val jobs = stats.jobs
     assert(jobs <= 6, s"withOrdinal call ran $jobs jobs")
 
     assert(got.count() === n)

@@ -87,6 +87,7 @@ class RegistrySweepSpec extends SparkTestBase {
         "sig_matches(array(1L, 2L, 3L), array(1L, 9L, 3L))",
       "simhash64" -> "simhash64('hello world of tiles')",
       "minhash128" -> "minhash128('hello world of tiles and shingles')",
+      "band_keys" -> "band_keys(minhash128('hello world of tiles and shingles'))",
       "winnow_fp" -> "winnow_fp('hello world of tiles and shingles')",
       "nfc_normalize" -> "nfc_normalize('é Å')",
       "tile_to_png" -> "tile_to_png(array(array(1.0d, 2.0d)), array(false, false), 2, 1)",

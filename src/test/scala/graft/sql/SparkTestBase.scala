@@ -23,9 +23,42 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
     }
     p +: kids.flatMap(allPlanNodes)
   }
+
+  /** `body`'s result with the jobs it started and the input bytes its tasks
+    * read. The listener bus is asynchronous, so a marker job runs after
+    * `body` and is awaited: events arrive in order, so once the marker's
+    * end is seen every event of `body` has been counted. */
+  protected def withJobStats[A](body: => A): (A, SparkTestBase.JobStats) = {
+    import org.apache.spark.scheduler._
+    val sc = spark.sparkContext
+    val marker = "graft.test.marker"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val bytesRead = new java.util.concurrent.atomic.AtomicLong(0)
+    val markerJob = new java.util.concurrent.atomic.AtomicInteger(-1)
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (Option(j.properties).exists(_.getProperty(marker) != null)) markerJob.set(j.jobId)
+        else { jobs.incrementAndGet(); () }
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
+        if (t.taskMetrics != null) { bytesRead.addAndGet(t.taskMetrics.inputMetrics.bytesRead); () }
+      override def onJobEnd(j: SparkListenerJobEnd): Unit =
+        if (j.jobId == markerJob.get) drained.countDown()
+    }
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      sc.setLocalProperty(marker, "1")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(marker, null)
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus not drained")
+      (out, SparkTestBase.JobStats(jobs.get, bytesRead.get))
+    } finally sc.removeSparkListener(listener)
+  }
 }
 
 object SparkTestBase {
+  final case class JobStats(jobs: Int, bytesRead: Long)
+
   lazy val session: SparkSession = {
     val wh = java.nio.file.Files.createTempDirectory("graft_wh").toString
     val s = GraftSession.builder("local[4]", shufflePartitions = 4)

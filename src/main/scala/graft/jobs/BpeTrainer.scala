@@ -55,7 +55,7 @@ object BpeTrainer {
   /** The one corpus pass: distinct-word frequencies, each word symbolized
     * as its characters + [[EndMark]]. */
   def initialWords(docs: DataFrame): DataFrame =
-    docs.select(explode(split(col("text"), " ")).as("word"))
+    docs.select(explode(graft.ops.TextOps.words(col("text"))).as("word"))
       .where(length(col("word")) > 0)
       .groupBy(col("word")).agg(count(lit(1)).as("freq"))
       .withColumn("syms", concat(

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -17,15 +17,58 @@ import graft.sql.GraftUnary
   * exactly (integer arithmetic + md5, no locale-dependent ops). */
 object TextOps {
 
-  /** Whitespace token count: regex split (codegen'd built-in). */
+  /** Whitespace token count: regex split (codegen'd built-in). Not
+    * [[words]]: its oracle mirrors the `\\s+` regex, not single spaces. */
   def tokenCount(text: Column): Column =
     size(split(trim(text), "\\s+"))
 
-  /** Adjacent-pairs (word-bigram) kernel shared by every bigram consumer
-    * (repetition quality, q81 collocations, q83 LM fluency): zip_with of
-    * the two shifted slices, so a 0/1-token array yields an EMPTY pair
-    * array — never `sequence(1, 0)`'s reversed range. The combiner shapes
-    * the per-pair output (string concat, struct, …). */
+  /** The one word tokenizer of every word-level text query: `text` split
+    * on single spaces, the `string_split(text, ' ')` every oracle mirrors.
+    * Each space separates two words, so double, leading and trailing
+    * spaces yield empty-string words and `""` is one empty word; null text
+    * is a null array. */
+  def words(text: Column): Column = split(text, " ")
+
+  /** Sliding `k`-word windows (stride 1) over the [[words]] of `d`'s
+    * `text`: one row per COMPLETE window, so a doc with fewer than `k`
+    * words (and null text) contributes nothing. Each row carries the
+    * `keep` columns, the doc's `n_words`, the window's 1-based start `p`,
+    * its words `w` and its text `gram` (the words joined by " "). One
+    * Filter and one Generate; outputs a caller does not read are pruned
+    * from the plan. */
+  def kgrams(d: DataFrame, k: Int, keep: String*): DataFrame =
+    windows(tokenized(d, keep).where(size(col(Words)) >= k), keep,
+      s"sequence(1, size($Words) - ${k - 1})", col("p"), k)
+
+  /** Fixed `w`-word blocks (stride `w`) over the [[words]] of `d`'s
+    * `text`; the last block may be partial, so every word is in exactly
+    * one block. Same output columns as [[kgrams]], `p` numbering blocks. */
+  def blocks(d: DataFrame, w: Int, keep: String*): DataFrame =
+    windows(tokenized(d, keep), keep,
+      s"sequence(1, (size($Words) + ${w - 1}) div $w)", (col("p") - 1) * w + 1, w)
+
+  private val Words = "_words"
+
+  private def tokenized(d: DataFrame, keep: Seq[String]): DataFrame =
+    d.select(keep.map(col) :+ words(col("text")).as(Words): _*)
+
+  /** position-explode + `slice` — codegen'd end to end, where a
+    * `transform(sequence, …)` lambda would build each doc's window array
+    * through interpreted HOF evaluation (CodegenFallback). */
+  private def windows(d: DataFrame, keep: Seq[String], starts: String,
+                      from: Column, width: Int): DataFrame = {
+    val carry = keep.map(col)
+    d.select(carry ++ Seq(size(col(Words)).as("n_words"),
+        explode(expr(starts)).as("p"), col(Words)): _*)
+      .select(carry ++ Seq(col("n_words"), col("p"),
+        slice(col(Words), from, lit(width)).as("w")): _*)
+      .withColumn("gram", array_join(col("w"), " "))
+  }
+
+  /** Adjacent-pairs kernel of a doc-bounded array (q47's per-doc bigrams,
+    * [[graft.jobs.BpeTrainer]]'s symbol pairs): zip_with of the two
+    * shifted slices, so a 0/1-element array yields an EMPTY pair array.
+    * The combiner shapes the per-pair output (string concat, struct, …). */
   def adjacentPairs(a: Column)(f: (Column, Column) => Column): Column =
     zip_with(
       org.apache.spark.sql.functions.slice(a, lit(1), size(a) - 1),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.GraftCheckpoints.TrackedDataFrame
 import org.apache.spark.sql.functions._
 import graft.model.Pages
+import graft.ops.TextOps.{blocks, kgrams, words}
 
 /** Corpus-quality / provenance operators of a training-data pipeline that
   * sit beyond the reference's own surface (builder prompt: "add the
@@ -46,7 +47,7 @@ object QualityQueries {
     val a = col("a")
     val bg = graft.ops.TextOps.adjacentPairs(a)((x, y) => concat_ws(" ", x, y))
     docs(spark, sfDir)
-      .select(col("doc_id"), split(col("text"), " ").as("a"))
+      .select(col("doc_id"), words(col("text")).as("a"))
       .where(size(col("a")) >= 2)
       .select(col("doc_id"),
         size(a).cast("long").as("n_words"),
@@ -84,20 +85,15 @@ object QualityQueries {
     * occurrences (with multiplicity) join their GLOBAL distinct-gram
     * frequency; per doc: total grams, grams whose text is corpus-unique,
     * grams shared with any other occurrence. Two shuffles: the global
-    * count on the gram hash, the per-doc re-aggregation on doc_id. */
-  def corpusNgramNovelty(spark: SparkSession, sfDir: String): DataFrame = {
-    // position-explode, then build each gram from the carried array: the
-    // previous `transform(sequence, …)` lambda materialized the full gram
-    // ARRAY per doc through interpreted HOF evaluation (CodegenFallback);
-    // explode(sequence) + element_at/concat stays codegen'd end to end
-    // (the q59 shape; same rows, same hashes)
-    val grams = docs(spark, sfDir)
-      .select(col("doc_id"), split(col("text"), " ").as("a"))
-      .select(col("doc_id"),
-        explode(expr("sequence(1, greatest(size(a) - 2, 0))")).as("g"), col("a"))
-      .select(col("doc_id"), md5(expr(
-        "concat(element_at(a, g), ' ', element_at(a, g + 1), ' ', element_at(a, g + 2))"))
-        .as("h"))
+    * count on the gram hash, the per-doc re-aggregation on doc_id. A doc
+    * of fewer than three words has no gram and no output row, as in the
+    * oracle's `generate_series(1, len(a) - 2)`. */
+  def corpusNgramNovelty(spark: SparkSession, sfDir: String): DataFrame =
+    corpusNgramNoveltyOf(docs(spark, sfDir))
+
+  /** q48 over any (doc_id, text) frame. */
+  private[graft] def corpusNgramNoveltyOf(d: DataFrame): DataFrame = {
+    val grams = kgramHashes(d, 3)
     // materialize the DISTINCT-gram rollup (bounded by vocabulary^3, far
     // below the N×L occurrence stream at corpus scale), recompute the
     // cheap explode for the probe side — occurrences are never persisted
@@ -249,7 +245,7 @@ object QualityQueries {
     * evaluate the exact same expressions. Map-side only. `carry` columns
     * ride through the projection untouched (q89's report dimensions). */
   def scoreDocs(d0: DataFrame, carry: Seq[String] = Nil): DataFrame = {
-    val a = split(col("text"), " ")
+    val a = words(col("text"))
     val stop = filter(a, x => x.isin(StopWords: _*))
     val cc = carry.map(col)
     val d = d0.select(Seq(col("doc_id"), col("text")) ++ cc ++ Seq(
@@ -303,7 +299,7 @@ object QualityQueries {
 
   def lengthHistogram(spark: SparkSession, sfDir: String): DataFrame =
     lengthHistogramOf(spark,
-      docs(spark, sfDir).select(size(split(col("text"), " "))
+      docs(spark, sfDir).select(size(words(col("text")))
         .cast("long").as("n_words")))
 
   /** the histogram over any (n_words) frame. The LAST bucket is an
@@ -702,13 +698,8 @@ object QualityQueries {
     * count is a partial-aggregated 16-byte-key rollup — the same plan. */
   def spanDedup(spark: SparkSession, sfDir: String): DataFrame = {
     val k = SpanK
-    val grams = docs(spark, sfDir)
-      .select(col("doc_id"), split(col("text"), " ").as("a"))
-      .where(size(col("a")) >= k)
-      .select(col("doc_id"), size(col("a")).as("n_words"),
-        explode(expr(s"sequence(1, size(a) - ${k - 1})")).as("p"), col("a"))
-      .select(col("doc_id"), col("n_words"), col("p"),
-        md5(expr(s"array_join(slice(a, p, $k), ' ')")).as("h"))
+    val grams = kgrams(docs(spark, sfDir), k, "doc_id")
+      .select(col("doc_id"), col("n_words"), col("p"), md5(col("gram")).as("h"))
     // deliberately NOT materialized: this frame is N×L rows (50× the
     // corpus at 10^12 docs) — persisting it would dwarf the 2nd explode
     // pass it saves. Only the AGGREGATED dup-hash set (small) is
@@ -786,13 +777,8 @@ object QualityQueries {
     * only to keep docs whose every block was a later-duplicate. */
   def lineDedup(spark: SparkSession, sfDir: String): DataFrame = {
     val w = BlockW
-    val blocks = docs(spark, sfDir)
-      .select(col("doc_id"), split(col("text"), " ").as("a"))
-      .select(col("doc_id"),
-        explode(expr(s"sequence(1, (size(a) + ${w - 1}) div $w)")).as("p"),
-        col("a"))
-      .select(col("doc_id"), col("p"),
-        expr(s"array_join(slice(a, (p - 1) * $w + 1, $w), ' ')").as("blk"))
+    val blks = blocks(docs(spark, sfDir), w, "doc_id")
+      .select(col("doc_id"), col("p"), col("gram").as("blk"))
       .withColumn("h", md5(col("blk")))
       // (doc_id, p) packed order-preserving into one DECIMAL(38,0) so the
       // argmin rollup below stays a fixed-width-min HashAggregate (a
@@ -803,15 +789,15 @@ object QualityQueries {
       .withColumn("pk",
         expr("CAST(doc_id AS DECIMAL(38,0)) * 4294967296 + p"))
     // first corpus-wide occurrence of each distinct block wins
-    val keeper = blocks.groupBy(col("h")).agg(min(col("pk")).as("kmin"))
-    val kept = blocks.join(keeper, Seq("h")).where(col("pk") === col("kmin"))
+    val keeper = blks.groupBy(col("h")).agg(min(col("pk")).as("kmin"))
+    val kept = blks.join(keeper, Seq("h")).where(col("pk") === col("kmin"))
     val rebuilt = kept.groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_kept"),
         expr("array_join(transform(array_sort(collect_list(struct(p, blk))), x -> x.blk), ' ')")
           .as("clean_text"))
     docs(spark, sfDir)
       .select(col("doc_id"),
-        expr(s"(size(split(text, ' ')) + ${w - 1}) div $w").as("n_blocks"))
+        call_function("div", size(words(col("text"))) + (w - 1), lit(w)).as("n_blocks"))
       .join(rebuilt, Seq("doc_id"), "left")
       .select(col("doc_id"), col("n_blocks"),
         coalesce(col("n_kept"), lit(0L)).as("n_kept"),
@@ -891,19 +877,15 @@ object QualityQueries {
     * exchanges (spec-gated in BoilerplateSpec). */
   private[graft] def boilerDfreqOf(d: DataFrame): DataFrame = {
     val w = BlockW
+    // each page's text behind its host's boilerplate block
     val pages = d.select(col("doc_id"),
       graft.queries.TextQueries.hostCol(col("doc_id")).as("host"),
       col("text"))
-      .withColumn("t2",
+      .withColumn("text",
         concat(col("host"), lit(BoilerTail), lit(" "), col("text")))
-    val blocks = pages
-      .select(col("host"), col("doc_id"), split(col("t2"), " ").as("a"))
-      .select(col("host"), col("doc_id"),
-        explode(expr(s"sequence(1, (size(a) + ${w - 1}) div $w)")).as("p"),
-        col("a"))
-      .select(col("host"), col("doc_id"),
-        expr(s"array_join(slice(a, (p - 1) * $w + 1, $w), ' ')").as("blk"))
-    val perDoc = blocks.groupBy(col("host"), col("doc_id"), col("blk"))
+    val perDoc = blocks(pages, w, "host", "doc_id")
+      .select(col("host"), col("doc_id"), col("gram").as("blk"))
+      .groupBy(col("host"), col("doc_id"), col("blk"))
       .agg(count(lit(1)).as("_r")).drop("_r")
     perDoc.groupBy(col("host"), col("blk"))
       .agg(count(lit(1)).as("df"))
@@ -1144,14 +1126,8 @@ object QualityQueries {
   /** The expensive pass of [[crawlNovelty]] PRE-checkpoint (plan hook):
     * ONE explode → (block-hash, epoch-bucket) pair-dedup. */
   private[graft] def noveltyPairsOf(withEb: DataFrame): DataFrame = {
-    val w = BlockW
-    withEb
-      .select(col("eb"), split(col("text"), " ").as("a"))
-      .select(col("eb"),
-        explode(expr(s"sequence(1, (size(a) + ${w - 1}) div $w)")).as("p"),
-        col("a"))
-      .select(col("eb"),
-        md5(expr(s"array_join(slice(a, (p - 1) * $w + 1, $w), ' ')")).as("h"))
+    blocks(withEb, BlockW, "eb")
+      .select(col("eb"), md5(col("gram")).as("h"))
       .groupBy(col("h"), col("eb")).agg(count(lit(1)).as("_r")).drop("_r")
   }
 
@@ -1172,20 +1148,12 @@ object QualityQueries {
           concat(col("text"), lit(canary))).otherwise(col("text"))), DecontK)
   }
 
-  /** (doc_id, md5(k-word gram)) stream of a (doc_id, text) frame — the ONE
-    * gram-derivation expression (q60/q64/q65 and the pipeline's
-    * decontamination stage share it; a tokenization change cannot diverge
-    * them). Explodes once; distinctness is the consumer's job. */
+  /** (doc_id, md5(k-word gram)) stream of a (doc_id, text) frame over
+    * [[graft.ops.TextOps.kgrams]] — q48, q60/q64/q65 and the pipeline's
+    * decontamination stage hash the same grams. Explodes once;
+    * distinctness is the consumer's job. */
   def kgramHashes(d: DataFrame, k: Int): DataFrame =
-    // position-explode + codegen'd slice/array_join (the q59 shape): the
-    // previous `transform(sequence, …)` lambda built the full gram ARRAY
-    // per doc through interpreted HOF evaluation. Same rows, same hashes.
-    d.select(col("doc_id"), split(col("text"), " ").as("a"))
-      .where(size(col("a")) >= k)
-      .select(col("doc_id"),
-        explode(expr(s"sequence(1, size(a) - ${k - 1})")).as("g"), col("a"))
-      .select(col("doc_id"),
-        md5(expr(s"array_join(slice(a, g, $k), ' ')")).as("h"))
+    kgrams(d, k, "doc_id").select(col("doc_id"), md5(col("gram")).as("h"))
 
   /** Distinct (eval_doc, h) eval gram set — a fixed-size benchmark
     * artifact (~10^6-10^7 grams — megabytes at any corpus scale), so the
@@ -1344,7 +1312,7 @@ object QualityQueries {
     * tokens ≪ token occurrences, and AQE broadcasts it when it fits. */
   def freqQuality(spark: SparkSession, sfDir: String): DataFrame = {
     val toks = docs(spark, sfDir)
-      .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
+      .select(col("doc_id"), explode(words(col("text"))).as("w"))
     // vocab (small, Zipf-bounded) is materialized; the N×L token stream is
     // recomputed for the probe rather than persisted
     val vocab = toks.groupBy(col("w")).agg(count(lit(1)).as("c"))
@@ -1422,26 +1390,18 @@ object QualityQueries {
   def lmFluency(spark: SparkSession, sfDir: String): DataFrame = {
     val base = docs(spark, sfDir)
     val isTarget = col("source").isin(DsirTargetSources: _*)
-    // position-explode + element_at (codegen'd) instead of exploding an
-    // interpreted zip_with struct array (the kgramHashes rewrite)
-    def bigrams(d: DataFrame): DataFrame = {
-      val keep = d.columns.filter(_ != "a").map(col)
-      d.where(size(col("a")) >= 2)
-        .select(keep :+ col("a") :+
-          explode(expr("sequence(1, size(a) - 1)")).as("p"): _*)
-        .select(keep :+ element_at(col("a"), col("p")).as("w1") :+
-          element_at(col("a"), col("p") + 1).as("w2"): _*)
-    }
+    def bigrams(d: DataFrame, keep: String*): DataFrame =
+      kgrams(d, 2, keep: _*).select(keep.map(col) :+
+        element_at(col("w"), 1).as("w1") :+ element_at(col("w"), 2).as("w2"): _*)
 
-    val tgt = base.where(isTarget).select(split(col("text"), " ").as("a"))
+    val tgt = base.where(isTarget)
     val cb = bigrams(tgt).groupBy(col("w1"), col("w2"))
       .agg(count(lit(1)).as("c12")).trackedCheckpoint
     val cu = cb.groupBy(col("w1")).agg(sum(col("c12")).as("c1"))
-    val vTot = tgt.select(explode(col("a")).as("w"))
+    val vTot = tgt.select(explode(words(col("text"))).as("w"))
       .agg(countDistinct(col("w")).cast("long").as("v"))
 
-    val rawB = bigrams(base.where(!isTarget)
-      .select(col("doc_id"), split(col("text"), " ").as("a")))
+    val rawB = bigrams(base.where(!isTarget), "doc_id")
     val d = rawB.join(cb, Seq("w1", "w2"), "left").join(cu, Seq("w1"), "left")
       .crossJoin(broadcast(vTot))
       .select(col("doc_id"),
@@ -1484,7 +1444,7 @@ object QualityQueries {
     * exactly one Generate, exactly one Exchange (the partial-agg groupBy). */
   private[graft] def dsirBucketCountsOf(d: DataFrame): DataFrame =
     d.select(col("doc_id"), col("source"),
-        explode(split(col("text"), " ")).as("tok"))
+        explode(words(col("text"))).as("tok"))
       .select(col("doc_id"), col("source"), dsirBucket(col("tok")).as("b"))
       .groupBy(col("doc_id"), col("source"), col("b"))
       .agg(count(lit(1)).as("n"))

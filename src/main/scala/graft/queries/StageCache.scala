@@ -40,8 +40,7 @@ object StageCache {
                    partitionCols: Seq[String] = Nil,
                    afterPublish: DataFrame => Unit = _ => ())
                   (build: => DataFrame): DataFrame = {
-    val lock = locks.computeIfAbsent(dir.getAbsolutePath, _ => new Object)
-    lock.synchronized {
+    locked(dir) {
       if (!isPublished(dir)) {
         val df = build
         publish(df, dir, partitionCols)
@@ -51,22 +50,40 @@ object StageCache {
     graft.io.Parquet.read(spark, dir.getAbsolutePath)
   }
 
-  /** Publish a stage-cache table ATOMICALLY: write to a process-unique
-    * sibling, rename into place (same filesystem → atomic), discard on
-    * lost races — a concurrent JVM can never observe a half-written dir.
+  /** [[getOrPublish]] for a stage that is not a parquet table: `write`
+    * fills an empty directory (only on the cold path) and the published
+    * `dir` is returned. */
+  def getOrPublishFiles(dir: java.io.File)(write: java.io.File => Unit): java.io.File = {
+    locked(dir) { publishWith(dir)(write) }
+    dir
+  }
+
+  private def locked(dir: java.io.File)(body: => Unit): Unit =
+    locks.computeIfAbsent(dir.getAbsolutePath, _ => new Object).synchronized(body)
+
+  /** Publish a stage-cache table ATOMICALLY (see [[publishWith]]).
     * `partitionCols`, when non-empty, lays the table out hive-partitioned
     * (one directory per key) so readers get FILE-level pruning on those
     * columns — the write-time-clustering contract of q66. */
   def publish(df: DataFrame, dir: java.io.File,
-              partitionCols: Seq[String] = Nil): Unit = {
+              partitionCols: Seq[String] = Nil): Unit =
+    publishWith(dir) { tmp =>
+      val w = df.write.mode("overwrite")
+      (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
+        .parquet(tmp.getAbsolutePath)
+    }
+
+  /** Publish `dir` ATOMICALLY: `write` fills a process-unique sibling, a
+    * `_SUCCESS` marker is added, and the sibling is renamed into place
+    * (same filesystem → atomic); a lost race discards it — a concurrent
+    * JVM can never observe a half-written dir. */
+  private def publishWith(dir: java.io.File)(write: java.io.File => Unit): Unit = {
     if (isPublished(dir)) return
     val tmp = new java.io.File(dir.getParentFile,
       dir.getName + ".tmp-" + java.lang.ProcessHandle.current().pid())
-    val w = df.write.mode("overwrite")
-    (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-      .parquet(tmp.getAbsolutePath)
-    // partitionBy drops the root _SUCCESS marker's siblings per dir; the
-    // root marker itself is still written, which is all isPublished needs
+    tmp.mkdirs()
+    write(tmp)
+    new java.io.File(tmp, "_SUCCESS").createNewFile()
     try {
       java.nio.file.Files.move(tmp.toPath, dir.toPath,
         java.nio.file.StandardCopyOption.ATOMIC_MOVE)

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.model.Pages
 import graft.ops.TextOps
+import graft.ops.TextOps.{kgrams, words}
 
 /** Text / dedup / relational-collection queries over the documents-derived
   * pages (the text-bearing slice of the input_hint table). */
@@ -35,11 +36,8 @@ object TextQueries {
     * the exact shape a 10⁵-file crawl dump wants. */
   val WarcFiles = 8
 
-  private val warcStageLock = new Object
-
   /** Stage the corpus as WARC files once per (input fingerprint, framing
-    * derivation); concurrent processes race safely on the atomic rename
-    * (same choreography as [[StageCache.publish]]). */
+    * derivation), published through [[StageCache.getOrPublishFiles]]. */
   def warcFixture(spark: SparkSession, sfDir: String): java.io.File = {
     // folds the documentsPages derivation (url prefix, epoch chain, html
     // framing) — the staged .warc.gz bytes bake those values in, so a
@@ -51,47 +49,29 @@ object TextQueries {
     // ingest pipeline now splits such payloads at the first blank line
     val dir = StageCache.dir(s"$sfDir/documents.parquet", "warc_fixture",
       s"gzmember:${Pages.DocDerivationKey}:iso:f$WarcFiles:ct=text/html:v1")
-    warcStageLock.synchronized {
-      if (!StageCache.isPublished(dir)) {
-        val tmp = new java.io.File(dir.getParentFile,
-          dir.getName + ".tmp-" + java.lang.ProcessHandle.current().pid())
-        tmp.mkdirs()
-        val tmpPath = tmp.getAbsolutePath
-        docs(spark, sfDir)
-          .select(col("doc_id"), col("url"), col("warc_epoch"), col("html"))
-          .repartition(WarcFiles, col("doc_id"))
-          .sortWithinPartitions(col("doc_id"))
-          .foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
-            if (it.hasNext) {
-              val pid = org.apache.spark.TaskContext.getPartitionId()
-              val fmt = java.time.format.DateTimeFormatter
-                .ofPattern("yyyy-MM-dd'T'HH:mm:ss'Z'")
-                .withZone(java.time.ZoneOffset.UTC)
-              val f = new java.io.File(tmpPath, f"part-$pid%05d.warc.gz")
-              graft.io.WarcIO.writeLocal(it.map { r =>
-                val docId = r.getLong(0)
-                ("response", s"<urn:graft:$docId>", r.getString(1),
-                  fmt.format(java.time.Instant.ofEpochSecond(r.getLong(2))),
-                  "text/html",
-                  r.getAs[Array[Byte]](3))
-              }, f)
-            }
+    StageCache.getOrPublishFiles(dir) { tmp =>
+      val tmpPath = tmp.getAbsolutePath
+      docs(spark, sfDir)
+        .select(col("doc_id"), col("url"), col("warc_epoch"), col("html"))
+        .repartition(WarcFiles, col("doc_id"))
+        .sortWithinPartitions(col("doc_id"))
+        .foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
+          if (it.hasNext) {
+            val pid = org.apache.spark.TaskContext.getPartitionId()
+            val fmt = java.time.format.DateTimeFormatter
+              .ofPattern("yyyy-MM-dd'T'HH:mm:ss'Z'")
+              .withZone(java.time.ZoneOffset.UTC)
+            val f = new java.io.File(tmpPath, f"part-$pid%05d.warc.gz")
+            graft.io.WarcIO.writeLocal(it.map { r =>
+              val docId = r.getLong(0)
+              ("response", s"<urn:graft:$docId>", r.getString(1),
+                fmt.format(java.time.Instant.ofEpochSecond(r.getLong(2))),
+                "text/html",
+                r.getAs[Array[Byte]](3))
+            }, f)
           }
-        new java.io.FileOutputStream(new java.io.File(tmp, "_SUCCESS")).close()
-        try java.nio.file.Files.move(tmp.toPath, dir.toPath,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        catch {
-          case _: java.nio.file.FileAlreadyExistsException |
-               _: java.nio.file.FileSystemException =>
-            // another process published first — deterministic bytes, drop ours
-            def rm(f: java.io.File): Unit = {
-              Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-            }
-            rm(tmp)
         }
-      }
     }
-    dir
   }
 
   def warcIngest(spark: SparkSession, sfDir: String): DataFrame = {
@@ -201,7 +181,7 @@ object TextQueries {
 
   def bm25Rank(spark: SparkSession, sfDir: String): DataFrame = {
     val toks = docs(spark, sfDir)
-      .select(col("doc_id"), split(col("text"), " ").as("a"))
+      .select(col("doc_id"), words(col("text")).as("a"))
     // persisted: tf feeds BOTH the stats aggregate and the scoring side of
     // the crossJoin — without it Spark plans two independent corpus
     // scans + tokenize passes. tf is (doc_id, dl, tf0..tf2): tiny to
@@ -299,11 +279,7 @@ object TextQueries {
     * AFTER the limit, over K rows. Ties break on the gram string so the
     * result is deterministic under the oracle. */
   def heavyHitters(spark: SparkSession, sfDir: String): DataFrame = {
-    val grams = docs(spark, sfDir)
-      .select(split(col("text"), " ").as("a"))
-      .where(size(col("a")) >= 3)
-      .select(explode(expr("sequence(1, size(a) - 2)")).as("p"), col("a"))
-      .select(expr("array_join(slice(a, p, 3), ' ')").as("g"))
+    val grams = kgrams(docs(spark, sfDir), 3).select(col("gram").as("g"))
     grams.groupBy(col("g")).agg(count(lit(1)).as("c"))
       .orderBy(col("c").desc, col("g")).limit(HeavyK)
       .withColumn("rank", row_number().over(Window.orderBy(col("c").desc, col("g"))))
@@ -374,7 +350,7 @@ object TextQueries {
     // unigram: sequence(1, 2·1−1) = [1]).
     val n = size(col("a"))
     val q = col("p") - n
-    d.select(split(col("text"), " ").as("a"))
+    d.select(words(col("text")).as("a"))
       .select(explode(expr("sequence(1, 2 * size(a) - 1)")).as("p"), col("a"))
       .select(
         when(col("p") <= n, lit(1)).otherwise(lit(2)).as("kind"),
@@ -407,14 +383,7 @@ object TextQueries {
     * oracle runs (sketch error can only admit extra candidates, which the
     * refine removes). */
   def cmHeavy(spark: SparkSession, sfDir: String): DataFrame = {
-    // position-explode + element_at (codegen'd) — the kgramHashes rewrite;
-    // `size ≥ 2` reproduces the empty-pair-array drop of adjacentPairs
-    val grams = docs(spark, sfDir)
-      .select(split(col("text"), " ").as("a"))
-      .where(size(col("a")) >= 2)
-      .select(explode(expr("sequence(1, size(a) - 1)")).as("p"), col("a"))
-      .select(concat_ws(" ", element_at(col("a"), col("p")),
-        element_at(col("a"), col("p") + 1)).as("g"))
+    val grams = kgrams(docs(spark, sfDir), 2).select(col("gram").as("g"))
     // bounded driver collect: ONE 32 KB model artifact, never data rows
     val sk = grams.agg(call_function("cm_sketch_agg", col("g")))
       .collect()(0).getAs[Array[Byte]](0)
@@ -445,7 +414,7 @@ object TextQueries {
 
   /** (term, doc_id, tf, bkt) postings from a documents frame. */
   def postingsOf(d: DataFrame): DataFrame =
-    d.select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
+    d.select(col("doc_id"), explode(words(col("text"))).as("term"))
       .groupBy(col("term"), col("doc_id")).agg(count(lit(1)).as("tf"))
       .withColumn("bkt",
         pmod(xxhash64(col("term")), lit(PostingBuckets)).cast("int"))
@@ -1045,7 +1014,7 @@ object TextQueries {
     * (lang, term, doc) pair-dedup (the stream's first exchange) →
     * (lang, term) df rollup over the deduped pairs. */
   private[graft] def termDfOf(d: DataFrame): DataFrame =
-    d.select(col("lang"), explode(split(col("text"), " ")).as("term"),
+    d.select(col("lang"), explode(words(col("text"))).as("term"),
         col("doc_id"))
       .distinct()
       .groupBy(col("lang"), col("term"))
@@ -1139,7 +1108,7 @@ object TextQueries {
     * rollup aggregates the vocabulary-sized count table into ≤64 rows. */
   def vocabSpectrum(spark: SparkSession, sfDir: String): DataFrame =
     docs(spark, sfDir)
-      .select(explode(split(col("text"), " ")).as("term"))
+      .select(explode(words(col("text"))).as("term"))
       .groupBy(col("term")).agg(count(lit(1)).as("cnt"))
       .withColumn("bucket", length(bin(col("cnt"))))
       .groupBy(col("bucket"))
@@ -1203,7 +1172,7 @@ object TextQueries {
     * agg — the corpus stream's only Generate and only corpus-sized
     * exchange. */
   private[graft] def docTfOf(d: DataFrame): DataFrame =
-    d.select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
+    d.select(col("doc_id"), explode(words(col("text"))).as("term"))
       .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
 }
 

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.ops.TextOps.words
 import graft.queries.QualityQueries
 
 /** Streaming / apply face of q80's DSIR selection — the production split
@@ -16,7 +17,7 @@ import graft.queries.QualityQueries
   *    literal array baked into the plan (the q65 Bloom-literal pattern:
   *    a scalar-bounded driver collect, never data rows), so scoring needs
   *    no join, no shuffle, and ZERO streaming state;
-  *  - the per-doc score is one `aggregate(transform(split(text)))`
+  *  - the per-doc score is one `aggregate(transform(words(text)))`
   *    expression over the same bucket derivation as training
   *    ([[QualityQueries.dsirBucket]] — single source of truth, the
   *    q69/q79 pattern), codegen-friendly and watermark-free;
@@ -53,7 +54,7 @@ object DsirStreams {
   private def scoreCol(text: Column, frozen: Array[Long]): Column = {
     val w = array(frozen.map(lit): _*)
     aggregate(
-      transform(split(text, " "), tok =>
+      transform(words(text), tok =>
         element_at(w, QualityQueries.dsirBucket(tok).cast("int") + 1)),
       lit(0L), (acc, x) => acc + x)
   }
@@ -65,6 +66,6 @@ object DsirStreams {
     * `(score * 1000) DIV n_tokens` exactly. */
   def scored(docs: DataFrame, frozen: Array[Long]): DataFrame =
     docs.withColumn("score", scoreCol(col("text"), frozen))
-      .withColumn("n_tokens", size(split(col("text"), " ")).cast("long"))
+      .withColumn("n_tokens", size(words(col("text"))).cast("long"))
       .withColumn("score_per_kt", expr("(score * 1000) DIV n_tokens"))
 }

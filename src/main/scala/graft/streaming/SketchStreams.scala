@@ -8,6 +8,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import org.apache.spark.sql.GraftRegistrar
 
+import graft.ops.TextOps.words
 import graft.sql.CmSketch
 
 /** Streaming face of the q84 Count-Min vehicle: a continuously-arriving
@@ -91,7 +92,7 @@ object SketchStreams {
     * column) into `store`, one partial sketch per micro-batch. */
   def wordSketchSink(docs: DataFrame, store: SketchStore,
                      checkpointDir: String): StreamingQuery =
-    docs.select(explode(split(col("text"), " ")).as("w"))
+    docs.select(explode(words(col("text"))).as("w"))
       .writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())

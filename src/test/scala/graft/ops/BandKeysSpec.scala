@@ -44,17 +44,6 @@ class BandKeysSpec extends SparkTestBase {
     } :+ Seq.fill(len)(null) :+ Seq.fill(len)(java.lang.Long.valueOf(Long.MinValue))
   }
 
-  private def withCodegen[A](factoryMode: String, wholeStage: Boolean)(body: => A): A = {
-    val keys = Seq("spark.sql.codegen.factoryMode", "spark.sql.codegen.wholeStage")
-    val saved = keys.map(k => k -> spark.conf.getOption(k))
-    spark.conf.set(keys(0), factoryMode)
-    spark.conf.set(keys(1), wholeStage.toString)
-    try body finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   test("band_keys ≡ the element_at/concat_ws tree, codegen and interpreted") {
     GraftRegistrar.ensure(spark)
     // 128-long signatures, plus longer ones (the tree reads the first 128)

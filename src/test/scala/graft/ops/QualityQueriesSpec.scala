@@ -45,6 +45,27 @@ class QualityQueriesSpec extends SparkTestBase {
     assert(r(4L)._3 == 0 && r(4L)._2 == r(4L)._1) // fully novel
   }
 
+  test("corpus 3-gram novelty: docs of fewer than three words contribute no gram") {
+    import spark.implicits._
+    val texts = Seq(null, "", "one", "one two", "one  two", "a b c", "a b c d e", "x a b c")
+    val d = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+    val got = QualityQueries.corpusNgramNoveltyOf(d).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
+    // reference: every complete stride-1 window of the space-split words
+    val grams = texts.zipWithIndex.flatMap { case (t, i) =>
+      Option(t).toSeq.flatMap(_.split(" ", -1).sliding(3).filter(_.length == 3)
+        .map(g => i.toLong -> g.mkString(" ")))
+    }
+    val global = grams.groupBy(_._2).map { case (g, occ) => g -> occ.size }
+    val want = grams.groupBy(_._1).toSeq.sortBy(_._1).map { case (id, gs) =>
+      (id, gs.size.toLong, gs.count(g => global(g._2) == 1).toLong,
+        gs.count(g => global(g._2) > 1).toLong)
+    }
+    assert(want.map(_._1) === Seq(4L, 5L, 6L, 7L)) // "one  two" is three words
+    assert(got === want)
+    org.apache.spark.sql.GraftCheckpoints.releaseAll()
+  }
+
   test("parse_url recovers constructed host/path/query per tld") {
     val r = QualityQueries.urlParse(spark, dir).collect()
       .map(x => x.getString(0) -> x).toMap

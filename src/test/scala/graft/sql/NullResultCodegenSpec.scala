@@ -30,11 +30,7 @@ class NullResultCodegenSpec extends SparkTestBase {
 
   private def run(factoryMode: String, wholeStage: Boolean): Seq[Seq[Any]] = {
     GraftRegistrar.ensure(spark)
-    val keys = Seq("spark.sql.codegen.factoryMode", "spark.sql.codegen.wholeStage")
-    val saved = keys.map(k => k -> spark.conf.getOption(k))
-    spark.conf.set(keys(0), factoryMode)
-    spark.conf.set(keys(1), wholeStage.toString)
-    try {
+    withCodegen(factoryMode, wholeStage) {
       input.select(col("id"),
           call_function("vec_dot", col("a"), col("b")).as("dot"),
           call_function("jl_project", col("a"), col("s")).as("jl"),
@@ -48,9 +44,6 @@ class NullResultCodegenSpec extends SparkTestBase {
           case a: scala.collection.Seq[_] => a.toList
           case v => v
         })
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 

@@ -264,8 +264,14 @@ object TextOps {
   * oracle). One md5 per shingle, 128 multiply-mods per shingle — a single
   * custom Expression beats 128 separate higher-order-function columns by
   * hashing each shingle once. Character positions use SQL substring
-  * semantics (UTF8String.substringSQL) so the DuckDB mirror is exact on
-  * multi-byte text. */
+  * semantics (`UTF8String.substringSQL(p, 8)`) so the DuckDB mirror is
+  * exact on multi-byte text: one walk over the bytes records where each
+  * character starts by UTF8String's own length rule
+  * (`numBytesForFirstByte`: a lead byte claims its sequence length, any
+  * other byte is one character), and each window is hashed in place from
+  * those offsets, so the pass is linear in document length (a
+  * `substringSQL` call walks from byte 0). A lead byte whose sequence runs
+  * past the end of the text takes only the bytes that remain. */
 case class MinHash128(child: Expression) extends GraftUnary {
   import TextOps._
   override def dataType: DataType =
@@ -273,20 +279,36 @@ case class MinHash128(child: Expression) extends GraftUnary {
   private lazy val as: Array[Long] = Array.tabulate(NumPerms)(permA)
   private lazy val bs: Array[Long] = Array.tabulate(NumPerms)(permB)
   def compute(v: Any): Any = {
-    val text = v.asInstanceOf[UTF8String]
-    val last = math.max(text.numChars() - (ShingleWidth - 1), 1)
+    val bytes = v.asInstanceOf[UTF8String].getBytes
+    val n = bytes.length
+    // starts(c) = byte offset of char c; starts(nChars) = end of text
+    val starts = new Array[Int](n + 1)
+    var nChars = 0
+    var i = 0
+    while (i < n) {
+      starts(nChars) = i
+      nChars += 1
+      i += UTF8String.numBytesForFirstByte(bytes(i))
+    }
+    starts(nChars) = n
+    val last = math.max(nChars - (ShingleWidth - 1), 1)
     val md = java.security.MessageDigest.getInstance("MD5")
+    val d = new Array[Byte](md.getDigestLength)
+    val a = as
+    val b = bs
     val sigs = Array.fill(NumPerms)(Long.MaxValue)
-    var p = 1
-    while (p <= last) {
-      val d = md.digest(text.substringSQL(p, ShingleWidth).getBytes)
+    var p = 0 // 0-based first char of the window
+    while (p < last) {
+      val from = starts(p)
+      md.update(bytes, from, starts(math.min(p + ShingleWidth, nChars)) - from)
+      md.digest(d, 0, d.length)
       var h = 0L
-      var i = 0
-      while (i < 8) { h = (h << 8) | (d(i) & 0xFFL); i += 1 }
+      var k = 0
+      while (k < 8) { h = (h << 8) | (d(k) & 0xFFL); k += 1 }
       val hp = (h >>> 4) % MinhashP // top 15 nibbles = 60 bits, positive
       var j = 0
       while (j < NumPerms) {
-        val s = (as(j) * hp + bs(j)) % MinhashP
+        val s = (a(j) * hp + b(j)) % MinhashP
         if (s < sigs(j)) sigs(j) = s
         j += 1
       }

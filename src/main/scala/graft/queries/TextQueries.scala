@@ -441,10 +441,11 @@ object TextQueries {
   }
 
   /** The 128-perm signature table for an sfDir input, staged ONCE per
-    * input fingerprint (same pattern as [[minhashLabels]]): q17/q18/q46
-    * all consume signatures, and a sweep used to run the expensive
-    * MinHash pass once per query. CorpusDedupJob stages exactly this
-    * table in its lake; here the stage cache is the query-facing twin.
+    * input fingerprint (same pattern as [[minhashLabels]]): q17 and the
+    * [[lshCandidates]] build consume signatures, and a sweep used to run
+    * the expensive MinHash pass once per query. CorpusDedupJob stages
+    * exactly this table in its lake; here the stage cache is the
+    * query-facing twin.
     * Values are deterministic, so every gate hash is unchanged. */
   private[graft] def sigsDf(spark: SparkSession, sfDir: String): DataFrame =
     StageCache.getOrPublish(spark, stageCacheDir(sfDir, "minhash_sigs")) {
@@ -488,10 +489,25 @@ object TextQueries {
   /** MinHash LSH near-dup PAIRS: 32 bands × 4 rows banding (posexplode →
     * equi-join on (band, key) → cross-band pair dedup → exact signature
     * refine ≥ 90/128). Candidate volume is O(N·bands·bucket_size), never
-    * O(N²): the join key is the band hash, so only same-bucket rows meet. */
+    * O(N²): the join key is the band hash, so only same-bucket rows meet.
+    * The candidates and signatures are staged ([[lshCandidates]],
+    * [[sigsDf]]), so a warm run is the refine joins over parquet. */
   def minhashPairs(spark: SparkSession, sfDir: String): DataFrame =
-    pairsFromSigs(sigsDf(spark, sfDir)) // staged sigs: parquet-backed
+    refine(lshCandidates(spark, sfDir), sigsDf(spark, sfDir))
       .orderBy(col("a"), col("b"))
+
+  /** The banded-LSH candidate pairs (a < b) of the staged signatures,
+    * staged ONCE per input fingerprint next to them and under the same
+    * key: the set is a pure function of the signatures and the banding
+    * constants, and q18/q46/q91/q92/q95/q115 and the q36/q55/q77 label
+    * build all refine it. Staging it takes the band explode and the
+    * (band, key) self-join off every warm path. No other sfDir query may
+    * call [[candidatePairs]] (`LshStageSpec` greps `src/main`). */
+  private[graft] def lshCandidates(spark: SparkSession, sfDir: String): DataFrame =
+    StageCache.getOrPublish(spark, stageCacheDir(sfDir, "lsh_candidates")) {
+      val sigs = sigsDf(spark, sfDir)
+      candidatePairs(bandRows(sigs), bandRows(sigs))
+    }
 
   def minhashPairsOf(spark: SparkSession, d: DataFrame): DataFrame =
     minhashPairsWithSigs(spark, d)._1
@@ -530,11 +546,11 @@ object TextQueries {
   }
 
   /** Banded candidates + exact refine over an already-materialized
-    * signature table (in-memory checkpoint or committed stage) —
-    * UNORDERED; gate queries sort, jobs don't need to. The gate queries,
-    * the label fixed point and the staged jobs all call this, so
-    * banding/threshold changes cannot silently diverge the
-    * byte-equality-coupled paths. */
+    * signature table (in-memory checkpoint or lake stage) — UNORDERED;
+    * jobs don't need an order. The lake jobs and the in-memory label
+    * fixed point call this; the sfDir queries refine the staged
+    * [[lshCandidates]] through the same [[refine]], so banding/threshold
+    * changes cannot silently diverge the byte-equality-coupled paths. */
   private[graft] def pairsFromSigs(sigs: DataFrame): DataFrame =
     pairsFromSigs(sigs, sigs)
 
@@ -542,7 +558,12 @@ object TextQueries {
     * subset of `sigs`): the incremental append probes with its new docs
     * only, the full pipeline probes with the whole table. */
   private[graft] def pairsFromSigs(probe: DataFrame, sigs: DataFrame): DataFrame =
-    signatureMatches(candidatePairs(bandRows(probe), bandRows(sigs)), sigs)
+    refine(candidatePairs(bandRows(probe), bandRows(sigs)), sigs)
+
+  /** The candidate pairs whose signatures agree in at least
+    * [[TextOps.MatchThreshold]] positions, with `n_match`. */
+  private def refine(cand: DataFrame, sigs: DataFrame): DataFrame =
+    signatureMatches(cand, sigs)
       .where(col("n_match") >= TextOps.MatchThreshold)
       .select(col("a"), col("b"), col("n_match"))
 
@@ -614,9 +635,9 @@ object TextQueries {
   def minhashLabels(spark: SparkSession, sfDir: String): DataFrame =
     StageCache.getOrPublish(spark, stageCacheDir(sfDir, "minhash_labels"),
       afterPublish = GraftCheckpoints.release) {
-      // cold path builds on the STAGED signature table, so a sweep runs
-      // the MinHash pass at most once across q17/q18/q36/q46/q55
-      labelsFromPairs(spark, pairsFromSigs(sigsDf(spark, sfDir)), None)
+      // cold path builds on the STAGED signatures and candidates, so a
+      // sweep runs the MinHash pass and the band self-join at most once
+      labelsFromPairs(spark, refine(lshCandidates(spark, sfDir), sigsDf(spark, sfDir)), None)
     }
 
   def minhashLabelsOf(spark: SparkSession, d: DataFrame): DataFrame = {
@@ -730,35 +751,21 @@ object TextQueries {
       .orderBy(col("a"), col("b"))
   }
 
-  private def shingleOverlap(spark: SparkSession, sfDir: String): DataFrame = {
-    val sigs = sigsDf(spark, sfDir)
-    shingleOverlapFrom(spark, sfDir, candidatePairs(bandRows(sigs), bandRows(sigs)))
-  }
-
-  /** (a, b, common, na, nb) shingle overlap over a banded-LSH candidate
-    * frame — the shared engine of q46 (Jaccard), q92 (containment) and
-    * q115. Candidates have NO n_match threshold applied (Jaccard decides). */
-  private[graft] def shingleOverlapFrom(spark: SparkSession, sfDir: String,
-                                        cand: DataFrame): DataFrame = {
-    // shingle sets are computed ONLY for LSH-shortlisted docs: the
-    // broadcast semi-join lands BEFORE the shingle explode, so the md5
-    // pass runs over the few hundred candidates, not the whole corpus
-    // (~100× less explode/hash/distinct work; counts for non-candidates
-    // are never used by the output, so values are unchanged). STAGED once
-    // per input fingerprint next to the signatures (VERDICT r3 #5: the
-    // explode+md5+distinct pass used to be recomputed per run) — the
-    // candidate set is fully determined by the staged signatures and the
-    // banding constants already in the key, so the bytes are
-    // deterministic and every gate hash is unchanged. Warm path: the LSH
-    // candidate join plus three joins over parquet.
-    val shc = StageCache.getOrPublish(spark,
-        stageCacheDir(sfDir, "jaccard_shingles")) {
-      // ONE-TIME cold build: materialize a local candidate handle so the
-      // two union branches below read rows, not two more band self-joins
-      // (the warm path stays lazy)
-      val candCk = cand.trackedCheckpoint
-      val candDocs = candCk.select(col("a").as("doc_id"))
-        .union(candCk.select(col("b").as("doc_id"))).distinct()
+  /** Each LSH-shortlisted doc's DISTINCT 8-gram shingle-hash set
+    * `(doc_id, hs)`, staged once per input fingerprint next to the
+    * signatures (VERDICT r3 #5: the explode+md5 pass used to be recomputed
+    * per run). Sets are computed ONLY for the docs of [[lshCandidates]]:
+    * the broadcast semi-join lands BEFORE the shingle explode, so the md5
+    * pass runs over the few hundred candidates, not the whole corpus
+    * (counts for non-candidates are never used by the output). `hs` is
+    * sorted, so a rebuild writes the same values; the candidate set is
+    * fully determined by the staged signatures and the banding constants
+    * already in the key, so every gate hash is unchanged. */
+  private[graft] def shingleSets(spark: SparkSession, sfDir: String): DataFrame =
+    StageCache.getOrPublish(spark, stageCacheDir(sfDir, "shingle_sets")) {
+      val cand = lshCandidates(spark, sfDir)
+      val candDocs = cand.select(col("a").as("doc_id"))
+        .union(cand.select(col("b").as("doc_id"))).distinct()
       docs(spark, sfDir)
         .join(candDocs.hint("broadcast"), Seq("doc_id"), "left_semi")
         .select(col("doc_id"),
@@ -766,22 +773,25 @@ object TextQueries {
         .select(col("doc_id"),
           (conv(substring(md5(expr("substring(text, p, 8)")), 1, 15), 16, 10)
             .cast("bigint") % lit(TextOps.MinhashP)).as("h"))
-        .distinct()
+        .groupBy(col("doc_id")).agg(array_sort(collect_set(col("h"))).as("hs"))
     }
-    // per-candidate-doc shingle SET in ONE exchange (the same doc_id
-    // aggregation the separate `counts` frame already paid), then the
-    // pair overlap is a codegen'd array_intersect over the two ≤L-element
-    // sets — the previous shape shuffled the exploded (b, h) stream into
-    // an equi-join plus a (a, b) count exchange, i.e. two corpus-sliver
-    // exchanges more, to compute the same integers. `shc` is distinct per
-    // (doc_id, h) by construction, so set size ≡ the old count(*) and
-    // |A∩B| ≡ the old join-count; zero-overlap pairs now surface with
-    // common = 0 where the inner join dropped them — every consumer
-    // filters on a common-positive predicate, so outputs are unchanged
-    // (gated by ShingleContainmentSpec's exhaustive all-pairs
-    // recomputation and the q46/q92/q115 oracle rows).
-    val sets = shc.groupBy(col("doc_id")).agg(collect_set(col("h")).as("hs"))
-    cand
+
+  /** (a, b, common, na, nb) shingle overlap of every [[lshCandidates]]
+    * pair — the shared engine of q46 (Jaccard), q92 (containment) and
+    * q115. Candidates have NO n_match threshold applied (Jaccard decides).
+    * Candidates and shingle sets both come from this input's stages, so
+    * they always describe the same docs. Warm path: the staged candidate
+    * pairs joined twice with the staged shingle sets, three parquet reads
+    * and no explode, band join or aggregation. The pair overlap is a
+    * codegen'd array_intersect over the two ≤L-element sets; set size ≡
+    * the distinct shingle count. Zero-overlap pairs surface with
+    * common = 0 — every gate consumer filters on a common-positive
+    * predicate, and q115 counts every candidate (gated by
+    * ShingleContainmentSpec's exhaustive all-pairs recomputation and the
+    * q46/q92/q115 oracle rows). */
+  private[graft] def shingleOverlapFrom(spark: SparkSession, sfDir: String): DataFrame = {
+    val sets = shingleSets(spark, sfDir)
+    lshCandidates(spark, sfDir)
       .join(sets.select(col("doc_id").as("a"), col("hs").as("ha")), Seq("a"))
       .join(sets.select(col("doc_id").as("b"), col("hs").as("hb")), Seq("b"))
       .select(col("a"), col("b"),
@@ -795,10 +805,11 @@ object TextQueries {
     * then |A∩B| / |A∪B| over each doc's DISTINCT 8-gram shingle-hash SET.
     * Kept integer-exact — the gate outputs (common, nA, nB) and filters
     * J ≥ 0.5 as 3·common ≥ nA+nB, so no float ever faces the oracle. At
-    * scale: candidates are O(N·bands) from the LSH equi-join, the shingle
-    * join is an equi-join on (hash), both shuffle-partitioned. */
+    * scale: candidates are O(N·bands) from the staged LSH equi-join, and
+    * the overlap is an array_intersect of two staged shingle sets
+    * ([[shingleOverlapFrom]]). */
   def ngramJaccard(spark: SparkSession, sfDir: String): DataFrame =
-    shingleOverlap(spark, sfDir)
+    shingleOverlapFrom(spark, sfDir)
       .where(col("common") * 3 >= col("na") + col("nb")) // J ≥ 0.5, integer-exact
       .select(col("a"), col("b"), col("common"), col("na"), col("nb"))
       .orderBy(col("a"), col("b"))
@@ -841,7 +852,7 @@ object TextQueries {
   }
 
   def shingleContainment(spark: SparkSession, sfDir: String): DataFrame =
-    shingleOverlap(spark, sfDir)
+    shingleOverlapFrom(spark, sfDir)
       .withColumn("cont_bp", expr("common * 10000 div least(na, nb)"))
       .where(col("cont_bp") >= ContainmentBp)
       .select(col("a"), col("b"), col("common"), col("na"), col("nb"),
@@ -877,25 +888,21 @@ object TextQueries {
     * exhaustive spec.) A release runs this before trusting the
     * signature-only path at full scale.
     *
-    * Scale shape: the banded candidate frame is built ONCE
-    * ([[candidatePairs]]) and BOTH verdicts are evaluated as flags on
-    * one pass over it; the signature and shingle inputs are staged
-    * tables shared with q17/q46; every join and the one-row rollup run
-    * over pair-table-sized frames only. */
+    * Scale shape: the banded candidates are READ from their stage
+    * ([[lshCandidates]], shared with q18/q46/q92) and BOTH verdicts are
+    * evaluated as flags on one pass over them; the signature and shingle
+    * inputs are staged tables shared with q17/q46; every join and the
+    * one-row rollup run over pair-table-sized frames only. */
   def dedupEval(spark: SparkSession, sfDir: String): DataFrame = {
-    // ONE candidate build feeds both refines (the shared heavy step —
-    // running each leg's public query would execute it twice), and both
-    // verdicts are evaluated as FLAGS on one pass over the candidate
+    // both verdicts are evaluated as FLAGS on one pass over the candidate
     // pairs (optimization round: the previous shape materialized each
     // leg's surviving pairs separately and full-outer-joined them — one
     // extra pair-frame shuffle plus duplicated candidate-join chains to
     // compute the same three counts; a pair is "in" a leg iff its flag
     // holds, so the flag sums are the leg counts by construction).
-    val sigs = sigsDf(spark, sfDir)
-    val cand = candidatePairs(bandRows(sigs), bandRows(sigs))
-    // every cand pair survives with common/na/nb: the shingle build's
-    // greatest(length(text) - 7, 1) gives every doc ≥ 1 shingle row
-    signatureMatches(shingleOverlapFrom(spark, sfDir, cand), sigs)
+    // Every candidate survives with common/na/nb: the shingle build's
+    // greatest(length(text) - 7, 1) gives every doc ≥ 1 shingle.
+    signatureMatches(shingleOverlapFrom(spark, sfDir), sigsDf(spark, sfDir))
       .select((col("n_match") >= TextOps.MatchThreshold).as("lsh"),
         (col("common") * 3 >= col("na") + col("nb")).as("ex"))
       .agg(sum(when(col("lsh"), 1L).otherwise(0L)).as("n_lsh"),

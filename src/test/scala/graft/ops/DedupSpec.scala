@@ -57,7 +57,7 @@ class DedupSpec extends SparkTestBase {
     val cand = TextQueries.candidatePairs(TextQueries.bandRows(sigs), TextQueries.bandRows(sigs))
     val n = cand.count()
     assert(n > 0, "fixture must produce LSH candidates")
-    assert(TextQueries.shingleOverlapFrom(spark, sf, cand).count() === n)
+    assert(TextQueries.shingleOverlapFrom(spark, sf).count() === n)
     org.apache.spark.sql.GraftCheckpoints.releaseAll()
   }
 

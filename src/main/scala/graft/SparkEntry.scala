@@ -295,25 +295,19 @@ object Queries {
       .orderBy(col("x"), col("y"), col("lang"))
   }
 
-  /** The headline PIP join: pages points × broadcast polygon layer,
-    * bbox pre-filter + exact ray-cast refine (SURVEY.md §2.4). The polygon
-    * side is tiny → broadcast hash join, zero shuffle on the probe side;
-    * per-polygon aggregation is the only exchange. */
-  def pipJoin(spark: SparkSession, sfDir: String): DataFrame = {
-    val pages = Pages.volumePages(spark, sfDir)
-    val polys = PolygonLayer.toDF(spark)
-    pages.join(
-        broadcast(polys),
-        col("lon") >= col("xmin") && col("lon") <= col("xmax") &&
-          col("lat") >= col("ymin") && col("lat") <= col("ymax") &&
-          G.st_contains_xy(col("poly"), col("lon"), col("lat")))
+  /** The headline PIP join: pages points ⋈ polygon layer through
+    * [[graft.ops.SpatialJoin]]. The small layer's z8 cover is broadcast →
+    * `BroadcastHashJoin` on the cell with the bbox + ray-cast refine, zero
+    * probe-side shuffle; per-polygon aggregation is the only exchange. */
+  def pipJoin(spark: SparkSession, sfDir: String): DataFrame =
+    graft.ops.SpatialJoin.pointsInPolygons(Pages.volumePages(spark, sfDir),
+        PolygonLayer.toDF(spark))
       .groupBy(col("poly_id"))
       .agg(count(lit(1)).as("n"),
         min(col("pid")).as("min_pid"),
         max(col("pid")).as("max_pid"),
         sum(when(col("is_hot"), 1L).otherwise(0L)).as("n_hot"))
       .orderBy(col("poly_id"))
-  }
 
   /** dissolve-by-property with envelope aggregate (collections.py:210-220
     * dissolve + the envelopes_union shortcut, vectors.py:359-381). */

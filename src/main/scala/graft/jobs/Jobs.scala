@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.lake.{LakeTable, StageRunner}
 import graft.model.{Pages, PolygonLayer}
+import graft.ops.SpatialJoin
 import graft.sql.{functions => G}
 
 /** The headline checkpointed jobs (north rule): every stage commits data +
@@ -13,25 +14,8 @@ import graft.sql.{functions => G}
   * committed stage. */
 object SpatialJoinJob {
 
-  /** polygon-side row budget under which we broadcast; above it we run the
-    * salted cell-equi shuffle plan (adaptive broadcast-vs-shuffle
-    * selection; AQE remains the runtime second line). */
-  val BroadcastRowThreshold = 100000L
-  val SaltBuckets = 8
-
-  /** The salted cell-equi shuffle join: `pages` (pid + z12 `cell`) salt by
-    * hash(pid) and each polygon z8 cover cell (`cell8`) is replicated into
-    * every salt bucket by an explode (no NLJ), so a hot cell spreads over
-    * SaltBuckets tasks; shuffle_hash pins the non-broadcast path.
-    * Candidates only — each caller applies its own exact refine. */
-  private[graft] def saltedCellJoin(pages: DataFrame, polyCells: DataFrame): DataFrame =
-    pages
-      .withColumn("cell8", G.tile_parent(col("cell"), lit(4)))
-      .withColumn("salt", pmod(hash(col("pid")), lit(SaltBuckets)).cast("int"))
-      .join(polyCells
-        .withColumn("salt", explode(array((0 until SaltBuckets).map(s => lit(s)): _*)))
-        .hint("shuffle_hash"), Seq("cell8", "salt"))
-
+  /** s1 attaches z12 cells, s2 joins the pages with the polygon layer
+    * through [[SpatialJoin]], s3 aggregates per polygon. */
   def run(spark: SparkSession, sfDir: String, lakeRoot: String): DataFrame = {
     val lake = new LakeTable(lakeRoot)
 
@@ -42,24 +26,9 @@ object SpatialJoinJob {
           G.st_tile(col("lon"), col("lat"), 12).as("cell"))
     }
 
-    val polys = PolygonLayer.toDF(spark)
-
     val joined = StageRunner.stage(spark, lake, "s2_pip_join") {
-      // the layer's row count is known on the driver: no job to count it
-      if (PolygonLayer.polys.size <= BroadcastRowThreshold) {
-        // broadcast plan: zero shuffle on the probe side
-        pages.join(broadcast(polys),
-          col("lon") >= col("xmin") && col("lon") <= col("xmax") &&
-            col("lat") >= col("ymin") && col("lat") <= col("ymax") &&
-            G.st_contains_xy(col("poly"), col("lon"), col("lat")))
-          .select(col("pid"), col("poly_id"), col("is_hot"))
-      } else {
-        // salted shuffle plan over the polygons' z8 cover cells
-        saltedCellJoin(pages, polys.select(col("poly_id"), col("poly"),
-            G.tiles_for(col("poly"), array(lit(8))).as(Seq("cell8", "x", "y", "z"))))
-          .where(G.st_contains_xy(col("poly"), col("lon"), col("lat")))
-          .select(col("pid"), col("poly_id"), col("is_hot"))
-      }
+      SpatialJoin.pointsInPolygons(pages, PolygonLayer.toDF(spark))
+        .select(col("pid"), col("poly_id"), col("is_hot"))
     }
 
     StageRunner.stage(spark, lake, "s3_agg") {

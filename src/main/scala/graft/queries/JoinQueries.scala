@@ -4,25 +4,19 @@ import graft.io.Parquet
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model.{Pages, PolygonLayer}
-import graft.sql.{functions => G}
+import graft.ops.SpatialJoin
 
 /** Anti-join and range-join coverage (SURVEY.md §2.4 join taxonomy). */
 object JoinQueries {
 
-  /** pages NOT inside any polygon: broadcast LEFT ANTI with the PIP
-    * predicate — the "outside all regions" filter. */
-  def antiJoin(spark: SparkSession, sfDir: String): DataFrame = {
-    val pages = Pages.volumePages(spark, sfDir)
-    val polys = PolygonLayer.toDF(spark)
-    pages.join(broadcast(polys),
-        col("lon") >= col("xmin") && col("lon") <= col("xmax") &&
-          col("lat") >= col("ymin") && col("lat") <= col("ymax") &&
-          G.st_contains_xy(col("poly"), col("lon"), col("lat")),
-        "left_anti")
+  /** pages NOT inside any polygon — the "outside all regions" filter: a
+    * `left_anti` [[SpatialJoin]] against the broadcast z8 cover. */
+  def antiJoin(spark: SparkSession, sfDir: String): DataFrame =
+    SpatialJoin.pointsInPolygons(Pages.volumePages(spark, sfDir),
+        PolygonLayer.toDF(spark), "left_anti")
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("n"), min(col("pid")).as("min_pid"))
       .orderBy(col("lang"))
-  }
 
   /** latitude bands (interval table) ⋈ pages on lat BETWEEN lo AND hi —
     * the non-equi range join; bands are half-open to keep it a partition. */
@@ -64,28 +58,16 @@ object JoinQueries {
         (col("cx") + col("w") + 0.0000005).as("xmax"),
         (col("cy") + col("w") + 0.0000005).as("ymax"))
 
-  /** The SHUFFLE spatial join plan under the oracle (VERDICT r1 #6): a
-    * 20k-box layer is far beyond broadcast-NLJ territory, so the plan is
-    * [[graft.jobs.SpatialJoinJob.saltedCellJoin]] over the boxes' z8 cover
-    * cells, with the exact box refine after the join. Its shuffle_hash
-    * hint pins the non-broadcast path so the gate hashes the scale plan,
-    * not the small-layer one. */
-  def shufflePip(spark: SparkSession, sfDir: String): DataFrame = {
-    val pages = Pages.volumePages(spark, sfDir)
-      .select(col("pid"), col("lon"), col("lat"),
-        G.st_tile(col("lon"), col("lat"), 12).as("cell"))
-    val polyCells = shuffleLayer(spark)
-      .select(col("poly_id"), col("xmin"), col("ymin"), col("xmax"), col("ymax"),
-        G.tiles_for(G.st_makebbox(col("xmin"), col("ymin"), col("xmax"), col("ymax")),
-          array(lit(8))).as(Seq("cell8", "x", "y", "z")))
-    graft.jobs.SpatialJoinJob.saltedCellJoin(pages, polyCells)
-      .where(col("lon") >= col("xmin") && col("lon") <= col("xmax") &&
-        col("lat") >= col("ymin") && col("lat") <= col("ymax"))
+  /** The 20k-box spatial join under the oracle (VERDICT r1 #6): a
+    * [[SpatialJoin]] with the exact box test. Its 33 636 z8 cover rows fit
+    * the broadcast threshold: a `BroadcastHashJoin` on the cell, of the
+    * smaller side; with broadcast off, a cell-keyed shuffle join. */
+  def shufflePip(spark: SparkSession, sfDir: String): DataFrame =
+    SpatialJoin.pointsInBoxes(Pages.volumePages(spark, sfDir), shuffleLayer(spark))
       .groupBy(col("poly_id"))
       .agg(count(lit(1)).as("n"), min(col("pid")).as("min_pid"),
         max(col("pid")).as("max_pid"))
       .orderBy(col("poly_id"))
-  }
 
   /** AS-OF join: each click matched to the LATEST view of the same user at
     * or before the click instant. The scale-correct distributed plan is NOT
@@ -153,10 +135,9 @@ object JoinOracles {
        |GROUP BY band ORDER BY band""".stripMargin
   }
 
-  /** the cell-equi salted plan reduces to a plain box-containment join —
-    * cover-cell membership is implied by containment, and salt replication
-    * introduces no duplicates (each page matches exactly its own
-    * (cell8, salt) replica). */
+  /** the cell-equi plan reduces to a plain box-containment join: the
+    * closed z8 cover holds the cell of every point in the box, and each
+    * (page, box) pair meets in exactly one cover row (the page's own). */
   val shufflePip: String =
     s"""WITH pages AS (${volumeCte("lineitem")}),
        |polys AS (

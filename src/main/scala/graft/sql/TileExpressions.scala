@@ -62,12 +62,14 @@ case class TileZ(child: Expression) extends GraftUnary {
 }
 
 /** tile_parent(cell, dz) — coarser-zoom ancestor (overview pyramid walk,
-  * util/raster_utils.py:17-25 factors). */
+  * util/raster_utils.py:17-25 factors). A `dz` outside `[0, z]` has no
+  * ancestor and throws `IllegalArgumentException`. */
 case class TileParent(left: Expression, right: Expression) extends GraftBinary {
   override def dataType: DataType = LongType
   def compute(cell: Any, dz: Any): Any = {
     val t = TileId.unpack(cell.asInstanceOf[Long])
     val d = dz.asInstanceOf[Int]
+    require(d >= 0 && d <= t.z, s"tile_parent: dz $d outside [0, ${t.z}] for a z${t.z} cell")
     TileId.pack(t.x >> d, t.y >> d, t.z - d)
   }
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.ops.SpatialJoin
 import graft.sql.{functions => G}
 
 /** Streaming faces of the spatial operators: the same declarative plans the
@@ -10,27 +11,23 @@ object GeoStreams {
 
   /** Stream-static spatial ENRICHMENT: a (possibly streaming) pages frame
     * carrying point geometry (`lon`/`lat` doubles, `epoch` seconds,
-    * `is_hot`) joins the BROADCAST polygon layer — bbox short-circuit +
-    * exact ray-cast, the q02 join — and rolls up per-polygon counts over
-    * tumbling event-time windows.
+    * `is_hot`) joins the polygon layer through [[SpatialJoin]] — the q02
+    * join — and rolls up per-polygon counts over tumbling event-time windows.
     *
-    * Scale/state story: the stream-static inner join is STATELESS (static
-    * side broadcast once per trigger; the stream side never shuffles before
-    * the join); the only stateful operator is the windowed aggregation,
-    * bounded by the watermark horizon × |polys| — this is the canonical
-    * "geofenced live counts" topology at any executor count. The same call
-    * runs in batch (watermark is a no-op there), which is the oracle-gated
-    * face (q62). */
+    * Scale/state story: the stream-static inner join is STATELESS (the
+    * layer's z8 cover is broadcast once per trigger while it fits the
+    * broadcast threshold, and the stream side never shuffles before the
+    * join); the only stateful operator is the windowed aggregation, bounded
+    * by the watermark horizon × |polys| — the canonical "geofenced live
+    * counts" topology at any executor count. The same call runs in batch
+    * (watermark is a no-op there), which is the oracle-gated face (q62). */
   def spatialEnrich(pages: DataFrame, polys: DataFrame,
                     win: String = "1 hour",
                     watermarkDelay: String = "1 minute"): DataFrame = {
     val p = pages
       .withColumn("ts", timestamp_seconds(col("epoch")))
       .withWatermark("ts", watermarkDelay)
-    p.join(broadcast(polys),
-        col("lon") >= col("xmin") && col("lon") <= col("xmax") &&
-          col("lat") >= col("ymin") && col("lat") <= col("ymax") &&
-          G.st_contains_xy(col("poly"), col("lon"), col("lat")))
+    SpatialJoin.pointsInPolygons(p, polys)
       .groupBy(window(col("ts"), win).as("w"), col("poly_id"))
       .agg(count(lit(1)).as("n"),
         sum(when(col("is_hot"), 1L).otherwise(0L)).as("n_hot"))

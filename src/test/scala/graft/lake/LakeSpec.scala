@@ -290,29 +290,14 @@ class LakeSpec extends SparkTestBase {
     assert(again.map(_.toSeq).toSeq === rows.map(_.toSeq).toSeq)
   }
 
-  test("salted shuffle plan produces identical rows to the broadcast plan") {
-    val root1 = freshRoot("bc")
-    val broadcastRows = SpatialJoinJob.run(spark, sf, root1)
-      .orderBy("poly_id").collect().map(_.toSeq).toSeq
-    // the job broadcasts its 6 polygons; drive its salted branch directly
-    val shuffled = {
-      import graft.model.{Pages, PolygonLayer}
-      import graft.sql.{functions => G}
-      val pages = Pages.volumePages(spark, sf)
-        .select(col("pid"), col("lon"), col("lat"), col("is_hot"),
-          G.st_tile(col("lon"), col("lat"), 12).as("cell"))
-      val polyCells = PolygonLayer.toDF(spark)
-        .select(col("poly_id"), col("poly"),
-          G.tiles_for(col("poly"), array(lit(8))).as(Seq("cell8", "x", "y", "z")))
-      SpatialJoinJob.saltedCellJoin(pages, polyCells)
-        .where(G.st_contains_xy(col("poly"), col("lon"), col("lat")))
-        .groupBy(col("poly_id"))
-        .agg(count(lit(1)).as("n"), min(col("pid")).as("min_pid"),
-          max(col("pid")).as("max_pid"),
-          sum(when(col("is_hot"), 1L).otherwise(0L)).as("n_hot"))
-        .orderBy(col("poly_id")).collect().map(_.toSeq).toSeq
-    }
-    assert(shuffled === broadcastRows)
+  test("spatial join job: shuffle plan (broadcast off) rows equal the broadcast plan's") {
+    def rows(root: String) =
+      SpatialJoinJob.run(spark, sf, root).orderBy("poly_id").collect().map(_.toSeq).toSeq
+    val broadcastRows = rows(freshRoot("bc"))
+    val shuffledRows =
+      withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1")(rows(freshRoot("shuffled")))
+    assert(broadcastRows.length === 6)
+    assert(shuffledRows === broadcastRows)
   }
 
   test("iterative kNN job matches the exact oracle ranking") {

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   *  - min-propagation components recover planted clusters
   *  - SimHash Hamming-ball pigeonhole guarantee (dist ≤ 3 ⇒ found)
   *  - embedding LSH bucket cap bounds candidates on a skewed fixture */
-class DedupSpec extends SparkTestBase {
+class DedupSpec extends SparkTestBase with graft.queries.TempStageCleanup {
   import spark.implicits._
 
   /** words-of-nonsense corpus: cluster c has `dups` members differing in one
@@ -52,7 +52,8 @@ class DedupSpec extends SparkTestBase {
     // dedupEval counts n_lsh over shingleOverlapFrom's output, so a
     // candidate dropped there (a doc with no shingle row) would silently
     // undercount it
-    val sf = "/root/testdata/sf0.001"
+    // a fresh copy: every stage this suite builds belongs to a temp input
+    val sf = documentsCopy("/root/testdata/sf0.001")
     val sigs = TextQueries.sigsDf(spark, sf)
     val cand = TextQueries.candidatePairs(TextQueries.bandRows(sigs), TextQueries.bandRows(sigs))
     val n = cand.count()
@@ -69,7 +70,7 @@ class DedupSpec extends SparkTestBase {
       2L -> (base.mkString(" ") + " x2"),
       3L -> (base.mkString(" ") + " x3"),
       9L -> (0 until 60).map(i => s"z$i").mkString(" ")).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("mhg").toString
+    val dir = tempInput("mhg").toString
     docs.withColumn("lang", lit("en")).withColumn("source", lit("t"))
       .withColumn("n_chars", length(col("text")))
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -80,7 +81,7 @@ class DedupSpec extends SparkTestBase {
   }
 
   test("simhash hamming-ball: dist<=3 pairs always share a 16-bit chunk (pigeonhole)") {
-    val dir = java.nio.file.Files.createTempDirectory("shn").toString
+    val dir = tempInput("shn").toString
     // identical docs → dist 0; one-token-swap docs → small dist
     val base = (0 until 80).map(i => s"tok${i % 13}_$i").mkString(" ")
     Seq(1L -> base, 2L -> base, 3L -> (base + " extra extra2"),
@@ -99,7 +100,7 @@ class DedupSpec extends SparkTestBase {
 
   test("embedding LSH bucket cap bounds the self-join on a skewed fixture") {
     import graft.queries.EmbQueries
-    val dir = java.nio.file.Files.createTempDirectory("emb").toString
+    val dir = tempInput("emb").toString
     // 3000 IDENTICAL vectors (one mega-bucket in every table) + 50 distinct
     val hot = (0 until 3000).map(i => (i.toLong, Array.fill(EmbQueries.Dim)(1.0f)))
     val cold = (0 until 50).map { i =>

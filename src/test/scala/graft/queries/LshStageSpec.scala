@@ -1,6 +1,6 @@
 package graft.queries
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
@@ -15,17 +15,10 @@ import graft.sql.SparkTestBase
   * (`shingle_sets`): each equals a fresh computation, a rebuild reads back
   * the same rows, an empty candidate set still publishes its schema, and
   * the warm near-dup queries run no band explode and no band join. Every
-  * test stages a fresh copy of the input, so its stages are built here. */
-class LshStageSpec extends SparkTestBase {
+  * test stages a fresh copy of the input, so its stages are built here
+  * (and removed after the suite). */
+class LshStageSpec extends SparkTestBase with TempStageCleanup {
   private val sf = "/root/testdata/sf0.001"
-
-  /** A fresh input dir holding a copy of `sf`'s documents table. */
-  private def freshCopy(): String = {
-    val dir = Files.createTempDirectory("lsh_stage")
-    Files.copy(Paths.get(s"$sf/documents.parquet"), dir.resolve("documents.parquet"),
-      StandardCopyOption.COPY_ATTRIBUTES)
-    dir.toString
-  }
 
   private def sorted(df: DataFrame): Seq[Row] =
     df.collect().toSeq.sortBy(_.toString)
@@ -34,7 +27,7 @@ class LshStageSpec extends SparkTestBase {
     df.collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toSeq).toMap
 
   test("the staged candidates equal a fresh band self-join over the staged sigs") {
-    val in = freshCopy()
+    val in = documentsCopy(sf)
     val staged = TextQueries.lshCandidates(spark, in)
     assert(staged.schema.fieldNames.toSeq === Seq("a", "b"))
     val sigs = TextQueries.sigsDf(spark, in)
@@ -45,7 +38,7 @@ class LshStageSpec extends SparkTestBase {
   }
 
   test("the staged shingle sets equal the collect_set of the exploded shingles") {
-    val in = freshCopy()
+    val in = documentsCopy(sf)
     val staged = sets(TextQueries.shingleSets(spark, in))
     val cand = TextQueries.lshCandidates(spark, in)
     val candDocs = cand.select(col("a").as("doc_id")).union(cand.select(col("b").as("doc_id")))
@@ -66,7 +59,7 @@ class LshStageSpec extends SparkTestBase {
   }
 
   test("a second cold build in another input dir reads back identical rows") {
-    val (in1, in2) = (freshCopy(), freshCopy())
+    val (in1, in2) = (documentsCopy(sf), documentsCopy(sf))
     def stages(in: String) =
       (sorted(TextQueries.lshCandidates(spark, in)), sorted(TextQueries.shingleOverlapFrom(spark, in)))
     val first = stages(in1)
@@ -79,7 +72,7 @@ class LshStageSpec extends SparkTestBase {
 
   test("an all-noise corpus publishes an empty (a, b) stage with its schema") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("lsh_noise").toString
+    val dir = tempInput("lsh_noise").toString
     def words(seed: Long): String = (0 until 60).map { i =>
       val x = (seed * 1000003L + i) * 2654435761L
       s"w${java.lang.Long.remainderUnsigned(x ^ (x >>> 17), 997)}"
@@ -102,7 +95,7 @@ class LshStageSpec extends SparkTestBase {
   }
 
   test("warm q18/q46/q92/q115 run no Generate and no join on band") {
-    val in = freshCopy()
+    val in = documentsCopy(sf)
     val queries = Seq[(String, (org.apache.spark.sql.SparkSession, String) => DataFrame)](
       "q18" -> TextQueries.minhashPairs, "q46" -> TextQueries.ngramJaccard,
       "q92" -> TextQueries.shingleContainment, "q115" -> TextQueries.dedupEval)

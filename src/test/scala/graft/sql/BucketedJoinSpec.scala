@@ -2,6 +2,8 @@ package graft.sql
 
 import graft.model.Pages
 import graft.sql.{functions => G}
+import org.apache.spark.sql.execution.{GenerateExec, SparkPlan}
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec, ShuffledHashJoinExec, SortMergeJoinExec}
 import org.apache.spark.sql.functions._
 
 /** Bucketing evidence (SURVEY.md §4 partitioning/shuffle): two layers
@@ -44,24 +46,39 @@ class BucketedJoinSpec extends SparkTestBase {
     spark.sql("DROP TABLE cells_b")
   }
 
-  test("q40 shuffle PIP: no BroadcastNestedLoopJoin; salted cell-equi shuffle plan (VERDICT r1 #6)") {
-    val q = graft.queries.JoinQueries.shufflePip(spark, "/root/testdata/sf0.001")
+  test("q40 PIP: cell-keyed join, broadcast or shuffled; no nested loop or salt") {
+    val sf = "/root/testdata/sf0.001"
     // collect() executes THIS DataFrame's QueryExecution (count() would
     // build a separate one and leave this plan unfinalized)
-    val rows = q.collect().length
-    val plan = q.queryExecution.executedPlan.toString
-    assert(!plan.contains("BroadcastNestedLoopJoin"), plan.take(800))
-    assert(plan.contains("ShuffledHashJoin") || plan.contains("SortMergeJoin"),
-      plan.take(800))
-    assert(rows > 0)
+    def run(): (Seq[org.apache.spark.sql.Row], Seq[SparkPlan]) = {
+      val q = graft.queries.JoinQueries.shufflePip(spark, sf)
+      val rows = q.collect().toSeq
+      (rows, allPlanNodes(q.queryExecution.executedPlan))
+    }
+    val (rows, plan) = run()
+    assert(rows.nonEmpty)
+    assert(!plan.exists(_.isInstanceOf[BroadcastNestedLoopJoinExec]), plan.head)
+    val bhj = plan.collect { case j: BroadcastHashJoinExec => j }
+    assert(bhj.size === 1 && bhj.head.leftKeys.size === 1, plan.head)
+    // the cover's two range explodes only: no explode of a literal salt array
+    val gens = plan.collect { case g: GenerateExec => g }
+    assert(gens.size === 2 && gens.forall(!_.generator.children.exists(_.foldable)), plan.head)
+
+    val (shuffledRows, shuffled) =
+      withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1")(run())
+    assert(!shuffled.exists(_.isInstanceOf[BroadcastNestedLoopJoinExec]), shuffled.head)
+    assert(!shuffled.exists(_.isInstanceOf[BroadcastHashJoinExec]), shuffled.head)
+    assert(shuffled.exists(p => p.isInstanceOf[ShuffledHashJoinExec] || p.isInstanceOf[SortMergeJoinExec]),
+      shuffled.head)
+    assert(shuffledRows === rows)
   }
 
   test("round-2 query plans: every join is keyed — no cartesian, no nested-loop") {
-    // q62 is excluded by design: its PIP join against the 6-row broadcast
-    // polygon layer is an intentional BroadcastNestedLoopJoin (like q02)
+    // with the spatial joins of round 1 (q02, q32) and q62, which share
+    // the cell-keyed SpatialJoin
     val sf = "/root/testdata/sf0.001"
-    for (name <- Seq("q59_span_dedup", "q60_decontaminate", "q61_freq_quality",
-        "q63_percentiles", "q64_contamination_report")) {
+    for (name <- Seq("q02_pip_join", "q32_anti_join", "q59_span_dedup", "q60_decontaminate",
+        "q61_freq_quality", "q62_stream_enrich", "q63_percentiles", "q64_contamination_report")) {
       val q = graft.SparkEntry.queries(name)(spark, sf)
       q.collect() // executes this QueryExecution so AQE finalizes it
       val plan = q.queryExecution.executedPlan.toString

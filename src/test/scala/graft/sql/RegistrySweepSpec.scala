@@ -1,6 +1,6 @@
 package graft.sql
 
-import graft.core.Geom
+import graft.core.{Geom, Mercator}
 
 /** Table-driven sweep over the registered function surface — the analogue
   * of the reference's parametrized delegated-op sweeps
@@ -125,6 +125,29 @@ class RegistrySweepSpec extends SparkTestBase {
     for (fn <- Seq("st_x", "st_area", "st_envelope", "st_isempty", "st_asgeojson")) {
       val r = spark.sql(s"SELECT $fn(CAST(NULL AS BINARY)) IS NULL").collect().head
       assert(r.getBoolean(0), fn)
+    }
+  }
+
+  /** hostile inputs: `tile_parent` with a `dz` outside `[0, z]` fails
+    * loudly (no key with a negative zoom, no shift by `dz & 63`), compiled
+    * and interpreted alike. The inputs come from `range`, not literals, so
+    * the call is evaluated by the tasks, not folded by the optimizer. */
+  for ((mode, ws) <- Seq(("CODEGEN_ONLY", true), ("NO_CODEGEN", false))) {
+    test(s"tile_parent rejects dz outside [0, z] ($mode)") {
+      import org.apache.spark.sql.functions.col
+      def parent(dz: Int) = withCodegen(mode, ws) {
+        spark.range(1).select(graft.sql.functions.tile_parent(
+          graft.sql.functions.st_tile(col("id") + 1.0, col("id") + 2.0, 12),
+          (col("id") + dz).cast("int"))).head().getLong(0)
+      }
+      assert(parent(12) === Mercator.TileId.pack(0, 0, 0))
+      assert(parent(4) === Mercator.tileAtPacked(1.0, 2.0, 8))
+      for (dz <- Seq(13, -1, 64)) {
+        val e = intercept[Exception](parent(dz))
+        val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+        assert(causes.exists(c => c.isInstanceOf[IllegalArgumentException] &&
+          c.getMessage.contains(s"dz $dz outside [0, 12]")), s"dz $dz: $e")
+      }
     }
   }
 }

@@ -24,20 +24,24 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
     p +: kids.flatMap(allPlanNodes)
   }
 
-  /** `body` evaluated with `spark.sql.codegen.factoryMode` and
-    * `spark.sql.codegen.wholeStage` set, both restored afterwards — run a
-    * check once compiled (`CODEGEN_ONLY`, whole-stage) and once interpreted
-    * (`NO_CODEGEN`, no whole-stage). */
-  protected def withCodegen[A](factoryMode: String, wholeStage: Boolean)(body: => A): A = {
-    val keys = Seq("spark.sql.codegen.factoryMode", "spark.sql.codegen.wholeStage")
-    val saved = keys.map(k => k -> spark.conf.getOption(k))
-    spark.conf.set(keys(0), factoryMode)
-    spark.conf.set(keys(1), wholeStage.toString)
+  /** `body` evaluated with the session confs `kvs` set, each restored
+    * afterwards. */
+  protected def withConf[A](kvs: (String, String)*)(body: => A): A = {
+    val saved = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
     try body finally saved.foreach {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None) => spark.conf.unset(k)
     }
   }
+
+  /** `body` evaluated with `spark.sql.codegen.factoryMode` and
+    * `spark.sql.codegen.wholeStage` set, both restored afterwards — run a
+    * check once compiled (`CODEGEN_ONLY`, whole-stage) and once interpreted
+    * (`NO_CODEGEN`, no whole-stage). */
+  protected def withCodegen[A](factoryMode: String, wholeStage: Boolean)(body: => A): A =
+    withConf("spark.sql.codegen.factoryMode" -> factoryMode,
+      "spark.sql.codegen.wholeStage" -> wholeStage.toString)(body)
 
   /** `body`'s result with the jobs it started and the input bytes its tasks
     * read. The listener bus is asynchronous, so a marker job runs after

@@ -286,32 +286,44 @@ object Geom {
       case PointT => GPoint(buf.getDouble, buf.getDouble)
       case LineT  => GLineString(readPts(buf))
       case PolyT =>
-        val n = buf.getInt
+        val n = readCount(buf, 4, "rings")
         GPolygon(Array.fill(n)(readPts(buf)))
       case MPointT =>
-        val n = buf.getInt
+        val n = readCount(buf, 21, "points")
         GMultiPoint(Array.fill(n) {
           readWkb(buf) match { case GPoint(x, y) => Pt(x, y); case _ => sys.error("bad wkb") }
         })
       case MLineT =>
-        val n = buf.getInt
+        val n = readCount(buf, 9, "linestrings")
         GMultiLineString(Array.fill(n) {
           readWkb(buf) match { case GLineString(p) => p; case _ => sys.error("bad wkb") }
         })
       case MPolyT =>
-        val n = buf.getInt
+        val n = readCount(buf, 9, "polygons")
         GMultiPolygon(Array.fill(n) {
           readWkb(buf) match { case p: GPolygon => p; case _ => sys.error("bad wkb") }
         })
       case CollT =>
-        val n = buf.getInt
+        val n = readCount(buf, 9, "geometries")
         GCollection(Array.fill(n)(readWkb(buf)))
       case t => sys.error(s"unsupported wkb type $t")
     }
   }
 
-  private def readPts(buf: ByteBuffer): Array[Pt] = {
+  /** A WKB element count, checked before anything is sized from it: each
+    * of the `n` elements takes at least `minBytes` of what is left, so a
+    * negative or oversized count throws instead of yielding an empty
+    * geometry or an array the JVM cannot allocate. */
+  private def readCount(buf: ByteBuffer, minBytes: Int, what: String): Int = {
     val n = buf.getInt
+    if (n < 0 || n > buf.remaining / minBytes)
+      throw new IllegalArgumentException(
+        s"bad wkb: count of $n $what with ${buf.remaining} bytes left")
+    n
+  }
+
+  private def readPts(buf: ByteBuffer): Array[Pt] = {
+    val n = readCount(buf, 16, "points")
     val out = new Array[Pt](n)
     var i = 0
     while (i < n) { out(i) = Pt(buf.getDouble, buf.getDouble); i += 1 }

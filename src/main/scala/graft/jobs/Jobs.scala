@@ -14,16 +14,17 @@ import graft.sql.{functions => G}
   * committed stage. */
 object SpatialJoinJob {
 
-  /** s1 attaches z12 cells, s2 joins the pages with the polygon layer
-    * through [[SpatialJoin]], s3 aggregates per polygon. */
+  /** s1 commits the pages' points (under its old name `s1_attach_cells`,
+    * which committed lakes and stage metrics know), s2 joins them with the
+    * polygon layer through [[SpatialJoin]], which keys the points itself,
+    * s3 aggregates per polygon. */
   def run(spark: SparkSession, sfDir: String, lakeRoot: String): DataFrame = {
     val lake = new LakeTable(lakeRoot)
 
     val pages = StageRunner.stage(spark, lake, "s1_attach_cells",
       Map("input" -> sfDir)) {
       Pages.volumePages(spark, sfDir)
-        .select(col("pid"), col("lon"), col("lat"), col("is_hot"),
-          G.st_tile(col("lon"), col("lat"), 12).as("cell"))
+        .select(col("pid"), col("lon"), col("lat"), col("is_hot"))
     }
 
     val joined = StageRunner.stage(spark, lake, "s2_pip_join") {

@@ -316,7 +316,6 @@ case class MinHash128(child: Expression) extends GraftUnary {
     }
     org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(sigs)
   }
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   override def prettyName: String = "minhash128"
 }
 
@@ -362,7 +361,6 @@ case class BandKeys(child: Expression) extends GraftUnary {
     }
     new GenericArrayData(keys)
   }
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   override def prettyName: String = "band_keys"
 }
 
@@ -393,7 +391,6 @@ case class SimHash64(child: Expression) extends GraftUnary {
     while (j < 64) { if (votes(j) > 0) out |= (1L << j); j += 1 }
     out
   }
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   override def prettyName: String = "simhash64"
 }
 
@@ -442,7 +439,6 @@ case class WinnowFp(child: Expression) extends GraftUnary {
     val out = sel.toArray.sorted.map(p => ((p + 1).toLong << 32) | hs(p))
     org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(out)
   }
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   override def prettyName: String = "winnow_fp"
 }
 
@@ -558,6 +554,5 @@ case class NfcNormalize(child: Expression) extends GraftUnary {
     UTF8String.fromString(
       java.text.Normalizer.normalize(s, java.text.Normalizer.Form.NFC))
   }
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   override def prettyName: String = "nfc_normalize"
 }

@@ -240,34 +240,29 @@ case class TileToPng(first: org.apache.spark.sql.catalyst.expressions.Expression
                      second: org.apache.spark.sql.catalyst.expressions.Expression,
                      third: org.apache.spark.sql.catalyst.expressions.Expression,
                      fourth: org.apache.spark.sql.catalyst.expressions.Expression)
-    extends org.apache.spark.sql.catalyst.expressions.QuaternaryExpression
-    with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-    with Serializable {
-  import org.apache.spark.sql.catalyst.expressions.Expression
+    extends graft.sql.GraftQuaternary {
   import org.apache.spark.sql.catalyst.util.ArrayData
   import org.apache.spark.sql.types._
 
-  override def nullIntolerant: Boolean = true
   override def dataType: DataType = BinaryType
 
-  override protected def nullSafeEval(b: Any, m: Any, wv: Any, hv: Any): Any = {
+  def compute(b: Any, m: Any, wv: Any, hv: Any): Any = {
     val bandsArr = b.asInstanceOf[ArrayData]
     val maskArr = m.asInstanceOf[ArrayData]
     val w = wv.asInstanceOf[Int]
     val h = hv.asInstanceOf[Int]
     val bands = (0 until bandsArr.numElements()).map { k =>
+      require(!bandsArr.isNullAt(k), s"tile_to_png: band $k is null")
       bandsArr.getArray(k).toDoubleArray()
     }.toArray
     val mask = maskArr.toBooleanArray()
-    require(bands.forall(_.length == w * h) && mask.length == w * h,
-      s"tile_to_png: band/mask length must be w*h = ${w * h}")
+    val n = w.toLong * h
+    require(bands.forall(_.length == n) && mask.length == n,
+      s"tile_to_png: band/mask length must be w*h = $n")
     val r = MRaster(bands, mask, w, h, Affine.northUp(0, h, 1, 1), 3857,
       bands.indices.map(_.toString), "uint8", None)
     Png.toPng(r)
   }
 
-  override protected def withNewChildrenInternal(
-      a: Expression, b: Expression, c: Expression, d: Expression): Expression =
-    copy(first = a, second = b, third = c, fourth = d)
   override def prettyName: String = "tile_to_png"
 }

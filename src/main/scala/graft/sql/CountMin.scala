@@ -116,8 +116,5 @@ case class CmEst(left: Expression, right: Expression) extends GraftBinary {
   override def compute(a: Any, b: Any): Any =
     CmSketch.estimate(grid, a.asInstanceOf[UTF8String].getBytes)
 
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
   override def prettyName: String = "cm_est"
 }

@@ -4,7 +4,6 @@ import graft.core.Geom
 import graft.core.Geom.{Geometry => GGeometry, GPoint, GPolygon, GMultiPolygon}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import org.locationtech.jts.geom.{Geometry => JtsGeometry, GeometryFactory, PrecisionModel}
@@ -19,11 +18,11 @@ import org.locationtech.jts.simplify.TopologyPreservingSimplifier
   * GGeometry wire type is `BinaryType` holding little-endian ISO WKB
   * (interops with JTS and external tools; no UDT registration games).
   *
-  * Codegen: every expression generates a call on a reference object
-  * (`ctx.addReferenceObj`) rather than falling back, so operators stay
-  * inside WholeStageCodegen; foldable geometry arguments are parsed once
-  * per task and cached on the expression instance (the same idea as the
-  * reference's prepared geometries, `collections.py:146`).
+  * Codegen: every expression is a [[GraftKernel]], whose generated code
+  * calls the kernel on a reference object rather than falling back, so
+  * operators stay inside WholeStageCodegen; repeated container geometries
+  * are parsed once per thread ([[GeomSqlOps.parseCached]], the same idea
+  * as the reference's prepared geometries, `collections.py:146`).
   */
 object GeomSqlOps {
   // JTS bridge — one factory; WKB readers are not thread-safe → per-call.
@@ -69,85 +68,6 @@ object GeomSqlOps {
   def parseCached(wkb: Array[Byte]): GGeometry = geomCache.get().get(wkb)
 }
 
-/** Mixed into a kernel whose `compute` may return null for non-null
-  * inputs: its generated code takes `ev.isNull` from the result (a null
-  * unboxed or passed on as non-null would NPE or corrupt rows). */
-trait NullableResult extends Expression {
-  override def nullable: Boolean = true
-}
-
-/** Shared `doGenCode` body of the Graft base classes. */
-private[sql] object GraftCodegen {
-  def assign(ctx: CodegenContext, ev: ExprCode, e: Expression, call: String): String = {
-    val boxed = CodeGenerator.boxedType(e.dataType)
-    e match {
-      case _: NullableResult =>
-        val r = ctx.freshName("r")
-        s"""$boxed $r = ($boxed) $call;
-           |${ev.isNull} = $r == null;
-           |if (!${ev.isNull}) ${ev.value} = $r;""".stripMargin
-      case _ => s"${ev.value} = ($boxed) $call;"
-    }
-  }
-}
-
-/** Unary geometry-ish expression: compute on the unboxed child value. */
-abstract class GraftUnary extends UnaryExpression with Serializable {
-  override def nullIntolerant: Boolean = true
-  /** public so generated code can call it */
-  def compute(input: Any): Any
-  override def nullSafeEval(input: Any): Any = compute(input)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("graftExpr", this, classOf[GraftUnary].getName)
-    nullSafeCodeGen(ctx, ev, c => GraftCodegen.assign(ctx, ev, this,
-      s"$ref.compute($c)"))
-  }
-}
-
-abstract class GraftBinary extends BinaryExpression with Serializable {
-  override def nullIntolerant: Boolean = true
-  def compute(a: Any, b: Any): Any
-  override def nullSafeEval(a: Any, b: Any): Any = compute(a, b)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("graftExpr", this, classOf[GraftBinary].getName)
-    nullSafeCodeGen(ctx, ev, (a, b) => GraftCodegen.assign(ctx, ev, this,
-      s"$ref.compute($a, $b)"))
-  }
-}
-
-abstract class GraftTernary extends TernaryExpression with Serializable {
-  override def nullIntolerant: Boolean = true
-  def compute(a: Any, b: Any, c: Any): Any
-  override def nullSafeEval(a: Any, b: Any, c: Any): Any = compute(a, b, c)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("graftExpr", this, classOf[GraftTernary].getName)
-    nullSafeCodeGen(ctx, ev, (a, b, c) => GraftCodegen.assign(ctx, ev, this,
-      s"$ref.compute($a, $b, $c)"))
-  }
-}
-
-/** Caches the parsed form of a foldable geometry argument per instance. */
-trait FoldableGeomCache { self: Expression =>
-  @transient private var cachedBytes: Array[Byte] = _
-  @transient private var cachedGeom: GGeometry = _
-  protected def parsedGeom(wkb: Array[Byte]): GGeometry = {
-    if (cachedGeom == null || (cachedBytes ne wkb)) {
-      cachedGeom = Geom.fromWkb(wkb)
-      cachedBytes = wkb
-    }
-    cachedGeom
-  }
-  @transient private var cachedJtsBytes: Array[Byte] = _
-  @transient private var cachedJts: JtsGeometry = _
-  protected def parsedJts(wkb: Array[Byte]): JtsGeometry = {
-    if (cachedJts == null || (cachedJtsBytes ne wkb)) {
-      cachedJts = GeomSqlOps.readJts(wkb)
-      cachedJtsBytes = wkb
-    }
-    cachedJts
-  }
-}
-
 // ----------------------------------------------------------- constructors
 
 /** st_point(x, y) → WKB point. */
@@ -155,36 +75,23 @@ case class StPoint(left: Expression, right: Expression) extends GraftBinary {
   override def dataType: DataType = BinaryType
   def compute(a: Any, b: Any): Any =
     Geom.toWkb(GPoint(a.asInstanceOf[Double], b.asInstanceOf[Double]))
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
   override def prettyName: String = "st_point"
 }
 
 /** st_makebbox(xmin,ymin,xmax,ymax) → WKB rectangle polygon
   * (GeoVector.from_bounds, vectors.py:330-348). */
-case class StMakeBBox(children: Seq[Expression])
-    extends Expression
-    with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-    with Serializable {
+case class StMakeBBox(first: Expression, second: Expression, third: Expression,
+                      fourth: Expression) extends GraftQuaternary {
   override def dataType: DataType = BinaryType
-  override def nullable: Boolean = children.exists(_.nullable)
-  override def eval(input: InternalRow): Any = {
-    val vs = children.map(_.eval(input))
-    if (vs.contains(null)) null
-    else {
-      val Seq(a, b, c, d) = vs.map(_.asInstanceOf[Double])
-      Geom.toWkb(Geom.polygonFromBounds(a, b, c, d))
-    }
-  }
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): Expression = copy(children = newChildren)
+  def compute(a: Any, b: Any, c: Any, d: Any): Any =
+    Geom.toWkb(Geom.polygonFromBounds(a.asInstanceOf[Double], b.asInstanceOf[Double],
+      c.asInstanceOf[Double], d.asInstanceOf[Double]))
   override def prettyName: String = "st_makebbox"
 }
 
 case class StGeomFromGeoJson(child: Expression) extends GraftUnary {
   override def dataType: DataType = BinaryType
   def compute(v: Any): Any = Geom.toWkb(Geom.fromGeoJson(v.asInstanceOf[UTF8String].toString))
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   override def prettyName: String = "st_geomfromgeojson"
 }
 
@@ -192,7 +99,6 @@ case class StAsGeoJson(child: Expression) extends GraftUnary {
   override def dataType: DataType = StringType
   def compute(v: Any): Any =
     UTF8String.fromString(Geom.toGeoJson(Geom.fromWkb(v.asInstanceOf[Array[Byte]])))
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   override def prettyName: String = "st_asgeojson"
 }
 
@@ -200,7 +106,6 @@ case class StGeomFromText(child: Expression) extends GraftUnary {
   override def dataType: DataType = BinaryType
   def compute(v: Any): Any =
     GeomSqlOps.writeJts(new WKTReader().read(v.asInstanceOf[UTF8String].toString))
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   override def prettyName: String = "st_geomfromtext"
 }
 
@@ -208,7 +113,6 @@ case class StAsText(child: Expression) extends GraftUnary {
   override def dataType: DataType = StringType
   def compute(v: Any): Any =
     UTF8String.fromString(new WKTWriter().write(GeomSqlOps.readJts(v.asInstanceOf[Array[Byte]])))
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   override def prettyName: String = "st_astext"
 }
 
@@ -226,7 +130,6 @@ case class StX(child: Expression) extends GeomToDouble {
     case GPoint(x, _) => x
     case other => other.bbox.xmin
   }
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   override def prettyName: String = "st_x"
 }
 case class StY(child: Expression) extends GeomToDouble {
@@ -234,28 +137,23 @@ case class StY(child: Expression) extends GeomToDouble {
     case GPoint(_, y) => y
     case other => other.bbox.ymin
   }
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   override def prettyName: String = "st_y"
 }
 /** bounds accessors left/bottom/right/top (vectors.py:197-205). */
 case class StXMin(child: Expression) extends GeomToDouble {
   protected def fromGeom(g: GGeometry): Double = g.bbox.xmin
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   override def prettyName: String = "st_xmin"
 }
 case class StYMin(child: Expression) extends GeomToDouble {
   protected def fromGeom(g: GGeometry): Double = g.bbox.ymin
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   override def prettyName: String = "st_ymin"
 }
 case class StXMax(child: Expression) extends GeomToDouble {
   protected def fromGeom(g: GGeometry): Double = g.bbox.xmax
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   override def prettyName: String = "st_xmax"
 }
 case class StYMax(child: Expression) extends GeomToDouble {
   protected def fromGeom(g: GGeometry): Double = g.bbox.ymax
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   override def prettyName: String = "st_ymax"
 }
 
@@ -264,13 +162,11 @@ case class StYMax(child: Expression) extends GeomToDouble {
   * Eckert IV first — that variant is st_area_eck4). */
 case class StArea(child: Expression) extends GeomToDouble {
   protected def fromGeom(g: GGeometry): Double = Geom.planarArea(g)
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   override def prettyName: String = "st_area"
 }
 /** Equal-area m² matching telluric `area` (vectors.py:424-428). */
 case class StAreaEck4(child: Expression) extends GeomToDouble {
   protected def fromGeom(g: GGeometry): Double = Geom.areaEckertIV(g)
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   override def prettyName: String = "st_area_eck4"
 }
 
@@ -280,17 +176,14 @@ abstract class GeomPredicate extends GraftUnary {
 
 case class StIsEmpty(child: Expression) extends GeomPredicate {
   def compute(v: Any): Any = Geom.fromWkb(v.asInstanceOf[Array[Byte]]).isEmpty
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   override def prettyName: String = "st_isempty"
 }
 case class StIsValid(child: Expression) extends GeomPredicate {
   def compute(v: Any): Any = GeomSqlOps.readJts(v.asInstanceOf[Array[Byte]]).isValid
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   override def prettyName: String = "st_isvalid"
 }
 case class StIsSimple(child: Expression) extends GeomPredicate {
   def compute(v: Any): Any = GeomSqlOps.readJts(v.asInstanceOf[Array[Byte]]).isSimple
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   override def prettyName: String = "st_issimple"
 }
 
@@ -305,17 +198,14 @@ abstract class JtsUnaryOp extends GraftUnary {
 /** GEOM_PROPERTIES (vectors.py:26-32). */
 case class StBoundary(child: Expression) extends JtsUnaryOp {
   protected def op(g: JtsGeometry): JtsGeometry = g.getBoundary
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   override def prettyName: String = "st_boundary"
 }
 case class StCentroid(child: Expression) extends JtsUnaryOp {
   protected def op(g: JtsGeometry): JtsGeometry = g.getCentroid
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   override def prettyName: String = "st_centroid"
 }
 case class StConvexHull(child: Expression) extends JtsUnaryOp {
   protected def op(g: JtsGeometry): JtsGeometry = g.convexHull()
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   override def prettyName: String = "st_convexhull"
 }
 case class StEnvelope(child: Expression) extends GraftUnary {
@@ -324,7 +214,6 @@ case class StEnvelope(child: Expression) extends GraftUnary {
     val bb = Geom.fromWkb(v.asInstanceOf[Array[Byte]]).bbox
     Geom.toWkb(Geom.polygonFromBounds(bb.xmin, bb.ymin, bb.xmax, bb.ymax))
   }
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   override def prettyName: String = "st_envelope"
 }
 
@@ -346,8 +235,6 @@ case class StBuffer(first: Expression, second: Expression, third: Expression)
     val op = new org.locationtech.jts.operation.buffer.BufferOp(jts, params)
     GeomSqlOps.writeJts(op.getResultGeometry(d.asInstanceOf[Double]))
   }
-  override protected def withNewChildrenInternal(a: Expression, b: Expression, c: Expression): Expression =
-    copy(first = a, second = b, third = c)
   override def prettyName: String = "st_buffer"
 }
 
@@ -357,8 +244,6 @@ case class StSimplify(left: Expression, right: Expression) extends GraftBinary {
   def compute(g: Any, tol: Any): Any =
     GeomSqlOps.writeJts(TopologyPreservingSimplifier.simplify(
       GeomSqlOps.readJts(g.asInstanceOf[Array[Byte]]), tol.asInstanceOf[Double]))
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
   override def prettyName: String = "st_simplify"
 }
 
@@ -370,8 +255,6 @@ case class StTransform(first: Expression, second: Expression, third: Expression)
   def compute(g: Any, s: Any, d: Any): Any =
     Geom.toWkb(Geom.reproject(Geom.fromWkb(g.asInstanceOf[Array[Byte]]),
       s.asInstanceOf[Int], d.asInstanceOf[Int]))
-  override protected def withNewChildrenInternal(a: Expression, b: Expression, c: Expression): Expression =
-    copy(first = a, second = b, third = c)
   override def prettyName: String = "st_transform"
 }
 
@@ -380,7 +263,7 @@ case class StTransform(first: Expression, second: Expression, third: Expression)
 /** st_contains(geom, pt_or_geom): hot path is ray-casting PIP on our own
   * packed rings (north_rule); general geometry pairs delegate to JTS. */
 case class StContains(left: Expression, right: Expression)
-    extends GraftBinary with FoldableGeomCache {
+    extends GraftBinary {
   override def dataType: DataType = BooleanType
   def compute(a: Any, b: Any): Any = {
     val container = GeomSqlOps.parseCached(a.asInstanceOf[Array[Byte]])
@@ -391,8 +274,6 @@ case class StContains(left: Expression, right: Expression)
           .contains(GeomSqlOps.readJts(b.asInstanceOf[Array[Byte]]))
     }
   }
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
   override def prettyName: String = "st_contains"
 }
 
@@ -400,8 +281,6 @@ case class StWithin(left: Expression, right: Expression) extends GraftBinary {
   override def dataType: DataType = BooleanType
   def compute(a: Any, b: Any): Any =
     StContains(right, left).compute(b, a)
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
   override def prettyName: String = "st_within"
 }
 
@@ -418,7 +297,7 @@ abstract class JtsBinaryPredicate extends GraftBinary {
 /** st_intersects with a cheap bbox pre-test (GEOM_BINARY_PREDICATES,
   * vectors.py:53-67). */
 case class StIntersects(left: Expression, right: Expression)
-    extends GraftBinary with FoldableGeomCache {
+    extends GraftBinary {
   override def dataType: DataType = BooleanType
   def compute(a: Any, b: Any): Any = {
     val wa = a.asInstanceOf[Array[Byte]]
@@ -437,45 +316,31 @@ case class StIntersects(left: Expression, right: Expression)
       case _ => GeomSqlOps.readJts(wa).intersects(GeomSqlOps.readJts(wb))
     }
   }
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
   override def prettyName: String = "st_intersects"
 }
 
 case class StDisjoint(left: Expression, right: Expression) extends JtsBinaryPredicate {
   protected def test(a: JtsGeometry, b: JtsGeometry): Boolean = a.disjoint(b)
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
   override def prettyName: String = "st_disjoint"
 }
 case class StEquals(left: Expression, right: Expression) extends JtsBinaryPredicate {
   protected def test(a: JtsGeometry, b: JtsGeometry): Boolean = a.equalsTopo(b)
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
   override def prettyName: String = "st_equals"
 }
 case class StTouches(left: Expression, right: Expression) extends JtsBinaryPredicate {
   protected def test(a: JtsGeometry, b: JtsGeometry): Boolean = a.touches(b)
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
   override def prettyName: String = "st_touches"
 }
 case class StCrosses(left: Expression, right: Expression) extends JtsBinaryPredicate {
   protected def test(a: JtsGeometry, b: JtsGeometry): Boolean = a.crosses(b)
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
   override def prettyName: String = "st_crosses"
 }
 case class StOverlaps(left: Expression, right: Expression) extends JtsBinaryPredicate {
   protected def test(a: JtsGeometry, b: JtsGeometry): Boolean = a.overlaps(b)
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
   override def prettyName: String = "st_overlaps"
 }
 case class StCovers(left: Expression, right: Expression) extends JtsBinaryPredicate {
   protected def test(a: JtsGeometry, b: JtsGeometry): Boolean = a.covers(b)
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
   override def prettyName: String = "st_covers"
 }
 
@@ -487,8 +352,6 @@ case class StEqualsExact(first: Expression, second: Expression, third: Expressio
   def compute(a: Any, b: Any, tol: Any): Any =
     GeomSqlOps.readJts(a.asInstanceOf[Array[Byte]]).equalsExact(
       GeomSqlOps.readJts(b.asInstanceOf[Array[Byte]]), tol.asInstanceOf[Double])
-  override protected def withNewChildrenInternal(a: Expression, b: Expression, c: Expression): Expression =
-    copy(first = a, second = b, third = c)
   override def prettyName: String = "st_equals_exact"
 }
 
@@ -503,26 +366,18 @@ abstract class JtsBinaryOp extends GraftBinary {
 /** GEOM_BINARY_OPERATIONS (vectors.py:33-38). */
 case class StIntersection(left: Expression, right: Expression) extends JtsBinaryOp {
   protected def op(a: JtsGeometry, b: JtsGeometry): JtsGeometry = a.intersection(b)
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
   override def prettyName: String = "st_intersection"
 }
 case class StUnion(left: Expression, right: Expression) extends JtsBinaryOp {
   protected def op(a: JtsGeometry, b: JtsGeometry): JtsGeometry = a.union(b)
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
   override def prettyName: String = "st_union"
 }
 case class StDifference(left: Expression, right: Expression) extends JtsBinaryOp {
   protected def op(a: JtsGeometry, b: JtsGeometry): JtsGeometry = a.difference(b)
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
   override def prettyName: String = "st_difference"
 }
 case class StSymDifference(left: Expression, right: Expression) extends JtsBinaryOp {
   protected def op(a: JtsGeometry, b: JtsGeometry): JtsGeometry = a.symDifference(b)
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
   override def prettyName: String = "st_symdifference"
 }
 
@@ -539,13 +394,6 @@ case class StContainsXY(first: Expression, second: Expression, third: Expression
     * per-row evaluation allocates nothing (no autoboxing). */
   def computePrim(poly: Array[Byte], lon: Double, lat: Double): Boolean =
     Geom.contains(lon, lat, GeomSqlOps.parseCached(poly))
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("graftExpr", this, classOf[StContainsXY].getName)
-    nullSafeCodeGen(ctx, ev, (p, x, y) =>
-      s"${ev.value} = $ref.computePrim($p, $x, $y);")
-  }
-  override protected def withNewChildrenInternal(a: Expression, b: Expression, c: Expression): Expression =
-    copy(first = a, second = b, third = c)
   override def prettyName: String = "st_contains_xy"
 }
 
@@ -558,18 +406,15 @@ case class StContainsXY(first: Expression, second: Expression, third: Expression
   * trillion-row join evaluates per candidate pair. */
 case class StContainsRing(xs: Expression, ys: Expression,
                           lon: Expression, lat: Expression)
-    extends QuaternaryExpression with Serializable {
-  override def first: Expression = xs
-  override def second: Expression = ys
-  override def third: Expression = lon
-  override def fourth: Expression = lat
+    extends GraftQuaternary {
   override def dataType: DataType = BooleanType
-  override def nullIntolerant: Boolean = true
 
   def computePrim(xsD: org.apache.spark.sql.catalyst.util.ArrayData,
                   ysD: org.apache.spark.sql.catalyst.util.ArrayData,
                   px: Double, py: Double): Boolean = {
     val n = xsD.numElements()
+    if (ysD.numElements() != n) throw new IllegalArgumentException(
+      s"st_contains_ring: $n xs but ${ysD.numElements()} ys")
     var inside = false
     var i = 0
     var j = n - 1
@@ -587,19 +432,11 @@ case class StContainsRing(xs: Expression, ys: Expression,
     inside
   }
 
-  override protected def nullSafeEval(a: Any, b: Any, c: Any, d: Any): Any =
+  def compute(a: Any, b: Any, c: Any, d: Any): Any =
     computePrim(a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
       b.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
       c.asInstanceOf[Double], d.asInstanceOf[Double])
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("graftExpr", this, classOf[StContainsRing].getName)
-    nullSafeCodeGen(ctx, ev, (a, b, c, d) =>
-      s"${ev.value} = $ref.computePrim($a, $b, $c, $d);")
-  }
-  override protected def withNewChildrenInternal(
-      a: Expression, b: Expression, c: Expression, d: Expression): Expression =
-    copy(xs = a, ys = b, lon = c, lat = d)
   override def prettyName: String = "st_contains_ring"
 }
 
@@ -616,8 +453,6 @@ case class StDistance(left: Expression, right: Expression) extends GraftBinary {
           .distance(GeomSqlOps.readJts(b.asInstanceOf[Array[Byte]]))
     }
   }
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
   override def prettyName: String = "st_distance"
 }
 
@@ -636,8 +471,6 @@ case class StRelate(left: Expression, right: Expression) extends GraftBinary {
     UTF8String.fromString(
       GeomSqlOps.readJts(a.asInstanceOf[Array[Byte]])
         .relate(GeomSqlOps.readJts(b.asInstanceOf[Array[Byte]])).toString)
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
   override def prettyName: String = "st_relate"
 }
 
@@ -655,7 +488,6 @@ case class StHasZ(child: Expression) extends GeomPredicate {
       ((code & 0x80000000) != 0) || ((code & 0xFFFF) / 1000 == 1) || ((code & 0xFFFF) / 1000 == 3)
     }
   }
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   override def prettyName: String = "st_has_z"
 }
 
@@ -667,7 +499,6 @@ case class StIsClosed(child: Expression) extends GeomPredicate {
       case m: org.locationtech.jts.geom.MultiLineString => m.isClosed
       case _ => false
     }
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   override def prettyName: String = "st_is_closed"
 }
 
@@ -678,7 +509,6 @@ case class StIsRing(child: Expression) extends GeomPredicate {
       case l: org.locationtech.jts.geom.LineString => l.isClosed && l.isSimple
       case _ => false
     }
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   override def prettyName: String = "st_is_ring"
 }
 
@@ -693,7 +523,6 @@ case class StExterior(child: Expression) extends GraftUnary {
       case g => throw new IllegalArgumentException(
         s"exterior is only defined for Polygon, got ${g.getGeometryType}")
     }
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   override def prettyName: String = "st_exterior"
 }
 
@@ -710,7 +539,6 @@ case class StInteriors(child: Expression) extends GraftUnary {
       case g => throw new IllegalArgumentException(
         s"interiors is only defined for Polygon, got ${g.getGeometryType}")
     }
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   override def prettyName: String = "st_interiors"
 }
 
@@ -735,7 +563,6 @@ case class StCoords(child: Expression) extends GraftUnary {
               Array(c.x, c.y))).toArray[Any])
     }
   }
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   override def prettyName: String = "st_coords"
 }
 
@@ -757,7 +584,6 @@ case class StXY(child: Expression) extends GraftUnary {
         s"xy is not defined for ${g.getGeometryType}")
     }
   }
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   override def prettyName: String = "st_xy"
 }
 
@@ -770,7 +596,5 @@ case class StAlmostEquals(first: Expression, second: Expression, third: Expressi
     GeomSqlOps.readJts(a.asInstanceOf[Array[Byte]]).equalsExact(
       GeomSqlOps.readJts(b.asInstanceOf[Array[Byte]]),
       0.5 * math.pow(10.0, -decimal.asInstanceOf[Int]))
-  override protected def withNewChildrenInternal(a: Expression, b: Expression, c: Expression): Expression =
-    copy(first = a, second = b, third = c)
   override def prettyName: String = "st_almost_equals"
 }

@@ -23,109 +23,127 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 }
 
 object GraftFunctions {
-  private def agg(f: Expression => AggregateFunction)(args: Seq[Expression]): Expression =
-    f(args.head).toAggregateExpression()
+  private type Builder = Seq[Expression] => Expression
 
-  val all: Seq[(String, Seq[Expression] => Expression)] = Seq(
+  /** `name` → its builder, which first checks the argument count against
+    * `arities`: a wrong count fails analysis with Spark's WRONG_NUM_ARGS
+    * error naming the function and the counts it takes. */
+  private def checked(name: String, arities: Int*)(build: Builder): (String, Builder) =
+    name -> { args =>
+      if (!arities.contains(args.size))
+        throw org.apache.spark.sql.GraftRegistrar.wrongNumArgs(name, arities, args.size)
+      build(args)
+    }
+  private def f1(name: String)(b: Expression => Expression) =
+    checked(name, 1)(a => b(a(0)))
+  private def f2(name: String)(b: (Expression, Expression) => Expression) =
+    checked(name, 2)(a => b(a(0), a(1)))
+  private def f3(name: String)(b: (Expression, Expression, Expression) => Expression) =
+    checked(name, 3)(a => b(a(0), a(1), a(2)))
+  private def f4(name: String)(b: (Expression, Expression, Expression, Expression) => Expression) =
+    checked(name, 4)(a => b(a(0), a(1), a(2), a(3)))
+  private def agg(name: String)(f: Expression => AggregateFunction) =
+    f1(name)(f(_).toAggregateExpression())
+
+  val all: Seq[(String, Builder)] = Seq(
     // constructors / codecs
-    "st_point" -> (a => StPoint(a(0), a(1))),
-    "st_makebbox" -> (a => StMakeBBox(a)),
-    "st_geomfromgeojson" -> (a => StGeomFromGeoJson(a.head)),
-    "st_asgeojson" -> (a => StAsGeoJson(a.head)),
-    "st_geomfromtext" -> (a => StGeomFromText(a.head)),
-    "st_astext" -> (a => StAsText(a.head)),
+    f2("st_point")(StPoint),
+    f4("st_makebbox")(StMakeBBox),
+    f1("st_geomfromgeojson")(StGeomFromGeoJson),
+    f1("st_asgeojson")(StAsGeoJson),
+    f1("st_geomfromtext")(StGeomFromText),
+    f1("st_astext")(StAsText),
     // accessors
-    "st_x" -> (a => StX(a.head)),
-    "st_y" -> (a => StY(a.head)),
-    "st_xmin" -> (a => StXMin(a.head)),
-    "st_ymin" -> (a => StYMin(a.head)),
-    "st_xmax" -> (a => StXMax(a.head)),
-    "st_ymax" -> (a => StYMax(a.head)),
-    "st_area" -> (a => StArea(a.head)),
-    "st_area_eck4" -> (a => StAreaEck4(a.head)),
-    "st_isempty" -> (a => StIsEmpty(a.head)),
-    "st_isvalid" -> (a => StIsValid(a.head)),
-    "st_issimple" -> (a => StIsSimple(a.head)),
+    f1("st_x")(StX),
+    f1("st_y")(StY),
+    f1("st_xmin")(StXMin),
+    f1("st_ymin")(StYMin),
+    f1("st_xmax")(StXMax),
+    f1("st_ymax")(StYMax),
+    f1("st_area")(StArea),
+    f1("st_area_eck4")(StAreaEck4),
+    f1("st_isempty")(StIsEmpty),
+    f1("st_isvalid")(StIsValid),
+    f1("st_issimple")(StIsSimple),
     // unary constructive
-    "st_boundary" -> (a => StBoundary(a.head)),
-    "st_centroid" -> (a => StCentroid(a.head)),
-    "st_convexhull" -> (a => StConvexHull(a.head)),
-    "st_envelope" -> (a => StEnvelope(a.head)),
-    "st_buffer" -> (a => StBuffer(a(0), a(1),
+    f1("st_boundary")(StBoundary),
+    f1("st_centroid")(StCentroid),
+    f1("st_convexhull")(StConvexHull),
+    f1("st_envelope")(StEnvelope),
+    checked("st_buffer", 2, 3)(a => StBuffer(a(0), a(1),
       if (a.size > 2) a(2) else org.apache.spark.sql.catalyst.expressions.Literal(1))),
-    "st_simplify" -> (a => StSimplify(a(0), a(1))),
-    "st_transform" -> (a => StTransform(a(0), a(1), a(2))),
+    f2("st_simplify")(StSimplify),
+    f3("st_transform")(StTransform),
     // binary predicates
-    "st_contains" -> (a => StContains(a(0), a(1))),
-    "st_contains_xy" -> (a => StContainsXY(a(0), a(1), a(2))),
-    "st_contains_ring" -> (a => StContainsRing(a(0), a(1), a(2), a(3))),
-    "st_within" -> (a => StWithin(a(0), a(1))),
-    "st_intersects" -> (a => StIntersects(a(0), a(1))),
-    "st_disjoint" -> (a => StDisjoint(a(0), a(1))),
-    "st_equals" -> (a => StEquals(a(0), a(1))),
-    "st_touches" -> (a => StTouches(a(0), a(1))),
-    "st_crosses" -> (a => StCrosses(a(0), a(1))),
-    "st_overlaps" -> (a => StOverlaps(a(0), a(1))),
-    "st_covers" -> (a => StCovers(a(0), a(1))),
-    "st_equals_exact" -> (a => StEqualsExact(a(0), a(1), a(2))),
-    "st_almost_equals" -> (a => StAlmostEquals(a(0), a(1), a(2))),
-    "st_relate" -> (a => StRelate(a(0), a(1))),
+    f2("st_contains")(StContains),
+    f3("st_contains_xy")(StContainsXY),
+    f4("st_contains_ring")(StContainsRing),
+    f2("st_within")(StWithin),
+    f2("st_intersects")(StIntersects),
+    f2("st_disjoint")(StDisjoint),
+    f2("st_equals")(StEquals),
+    f2("st_touches")(StTouches),
+    f2("st_crosses")(StCrosses),
+    f2("st_overlaps")(StOverlaps),
+    f2("st_covers")(StCovers),
+    f3("st_equals_exact")(StEqualsExact),
+    f3("st_almost_equals")(StAlmostEquals),
+    f2("st_relate")(StRelate),
     // remaining unary predicates + accessors (vectors.py:45-80)
-    "st_has_z" -> (a => StHasZ(a.head)),
-    "st_is_closed" -> (a => StIsClosed(a.head)),
-    "st_is_ring" -> (a => StIsRing(a.head)),
-    "st_exterior" -> (a => StExterior(a.head)),
-    "st_interiors" -> (a => StInteriors(a.head)),
-    "st_coords" -> (a => StCoords(a.head)),
-    "st_xy" -> (a => StXY(a.head)),
+    f1("st_has_z")(StHasZ),
+    f1("st_is_closed")(StIsClosed),
+    f1("st_is_ring")(StIsRing),
+    f1("st_exterior")(StExterior),
+    f1("st_interiors")(StInteriors),
+    f1("st_coords")(StCoords),
+    f1("st_xy")(StXY),
     // binary constructive
-    "st_intersection" -> (a => StIntersection(a(0), a(1))),
-    "st_union" -> (a => StUnion(a(0), a(1))),
-    "st_difference" -> (a => StDifference(a(0), a(1))),
-    "st_symdifference" -> (a => StSymDifference(a(0), a(1))),
-    "st_distance" -> (a => StDistance(a(0), a(1))),
+    f2("st_intersection")(StIntersection),
+    f2("st_union")(StUnion),
+    f2("st_difference")(StDifference),
+    f2("st_symdifference")(StSymDifference),
+    f2("st_distance")(StDistance),
     // cell index
-    "st_tile" -> (a => StTile(a(0), a(1), a(2))),
-    "tile_x" -> (a => TileX(a.head)),
-    "tile_y" -> (a => TileY(a.head)),
-    "tile_z" -> (a => TileZ(a.head)),
-    "tile_parent" -> (a => TileParent(a(0), a(1))),
-    "tile_bounds_3857" -> (a => TileBounds3857(a.head)),
-    "tile_geom" -> (a => TileGeom(a.head)),
-    "mercator_res" -> (a => MercatorRes(a.head)),
-    "st_morton" -> (a => StMorton(a(0), a(1))),
+    f3("st_tile")(StTile),
+    f1("tile_x")(TileX),
+    f1("tile_y")(TileY),
+    f1("tile_z")(TileZ),
+    f2("tile_parent")(TileParent),
+    f1("tile_bounds_3857")(TileBounds3857),
+    f1("tile_geom")(TileGeom),
+    f1("mercator_res")(MercatorRes),
+    f2("st_morton")(StMorton),
     // generators
-    "tiles_for" -> (a => TilesFor(a(0), a(1))),
-    "cell_ring" -> (a => CellRing(a(0), a(1))),
-    "grid_cells" -> (a => GridCells(a(0), a(1), a(2))),
+    f2("tiles_for")(TilesFor),
+    f2("cell_ring")(CellRing),
+    f3("grid_cells")(GridCells),
     // vector kernels (primitive-loop dot products — see VecExpressions)
-    "vec_dot" -> (a => VecDot(a(0), a(1))),
-    "plane_dots" -> (a => PlaneDots(a(0), a(1), a(2))),
-    "jl_project" -> (a => JlProject(a(0), a(1))),
-    "sig_matches" -> (a => SigMatches(a(0), a(1))),
+    f2("vec_dot")(VecDot),
+    f3("plane_dots")(PlaneDots),
+    f2("jl_project")(JlProject),
+    f2("sig_matches")(SigMatches),
     // text
-    "simhash64" -> (a => graft.ops.SimHash64(a.head)),
-    "minhash128" -> (a => graft.ops.MinHash128(a.head)),
-    "band_keys" -> (a => graft.ops.BandKeys(a.head)),
-    "winnow_fp" -> (a => graft.ops.WinnowFp(a.head)),
-    "nfc_normalize" -> (a => graft.ops.NfcNormalize(a.head)),
+    f1("simhash64")(graft.ops.SimHash64),
+    f1("minhash128")(graft.ops.MinHash128),
+    f1("band_keys")(graft.ops.BandKeys),
+    f1("winnow_fp")(graft.ops.WinnowFp(_)),
+    f1("nfc_normalize")(graft.ops.NfcNormalize),
     // Spark ships Bloom sketches only as INTERNAL expressions (used by its
     // own runtime row-level filtering); surfacing them gives the q65
     // decontamination pre-filter a codegen'd probe instead of a UDF
-    "bloom_filter_agg" -> (a =>
-      new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(a.head)
+    f1("bloom_filter_agg")(
+      new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(_)
         .toAggregateExpression()),
-    "might_contain" -> (a =>
-      org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(a(0), a(1))),
+    f2("might_contain")(org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain),
     // Count-Min sketch (q84 threshold heavy hitters): constant-size
     // mergeable aggregate + never-undercounting literal probe
-    "cm_sketch_agg" -> agg(CountMinAgg(_)) _,
-    "cm_est" -> (a => CmEst(a(0), a(1))),
+    agg("cm_sketch_agg")(CountMinAgg(_)),
+    f2("cm_est")(CmEst),
     // raster serving
-    "tile_to_png" -> (a => graft.raster.TileToPng(a(0), a(1), a(2), a(3))),
+    f4("tile_to_png")(graft.raster.TileToPng),
     // aggregates
-    "st_envelope_agg" -> agg(EnvelopeAgg(_)) _,
-    "st_union_agg" -> agg(UnionAgg(_)) _,
+    agg("st_envelope_agg")(EnvelopeAgg(_)),
+    agg("st_union_agg")(UnionAgg(_)),
   )
 }
 

@@ -18,7 +18,7 @@ import org.apache.spark.sql.types._
   */
 
 /** st_tile(lon, lat, z) → packed cell id (LongType). Hot-path: pure math,
-  * stays inside WholeStageCodegen via the reference-object call. */
+  * the generated code calls `computePrim` ([[GraftKernel]]). */
 case class StTile(first: Expression, second: Expression, third: Expression)
     extends GraftTernary {
   override def dataType: DataType = LongType
@@ -28,16 +28,6 @@ case class StTile(first: Expression, second: Expression, third: Expression)
   /** primitive-signature entry point (no autoboxing in generated code). */
   def computePrim(lon: Double, lat: Double, z: Int): Long =
     Mercator.tileAtPacked(lon, lat, z)
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode = {
-    val ref = ctx.addReferenceObj("graftExpr", this, classOf[StTile].getName)
-    nullSafeCodeGen(ctx, ev, (lon, lat, z) =>
-      s"${ev.value} = $ref.computePrim($lon, $lat, $z);")
-  }
-  override protected def withNewChildrenInternal(a: Expression, b: Expression, c: Expression): Expression =
-    copy(first = a, second = b, third = c)
   override def prettyName: String = "st_tile"
 }
 
@@ -45,19 +35,16 @@ case class StTile(first: Expression, second: Expression, third: Expression)
 case class TileX(child: Expression) extends GraftUnary {
   override def dataType: DataType = LongType
   def compute(v: Any): Any = (v.asInstanceOf[Long] >> 29) & ((1L << 29) - 1)
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   override def prettyName: String = "tile_x"
 }
 case class TileY(child: Expression) extends GraftUnary {
   override def dataType: DataType = LongType
   def compute(v: Any): Any = v.asInstanceOf[Long] & ((1L << 29) - 1)
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   override def prettyName: String = "tile_y"
 }
 case class TileZ(child: Expression) extends GraftUnary {
   override def dataType: DataType = IntegerType
   def compute(v: Any): Any = (v.asInstanceOf[Long] >> 58).toInt
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   override def prettyName: String = "tile_z"
 }
 
@@ -72,8 +59,6 @@ case class TileParent(left: Expression, right: Expression) extends GraftBinary {
     require(d >= 0 && d <= t.z, s"tile_parent: dz $d outside [0, ${t.z}] for a z${t.z} cell")
     TileId.pack(t.x >> d, t.y >> d, t.z - d)
   }
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
   override def prettyName: String = "tile_parent"
 }
 
@@ -90,7 +75,6 @@ case class TileBounds3857(child: Expression) extends GraftUnary {
     val b = Mercator.xyBounds(t.x, t.y, t.z)
     InternalRow(b.left, b.bottom, b.right, b.top)
   }
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   override def prettyName: String = "tile_bounds_3857"
 }
 
@@ -102,7 +86,6 @@ case class TileGeom(child: Expression) extends GraftUnary {
     val (w, s, e, n) = Mercator.lngLatBounds(t.x, t.y, t.z)
     Geom.toWkb(Geom.polygonFromBounds(w, s, e, n))
   }
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   override def prettyName: String = "tile_geom"
 }
 
@@ -110,7 +93,6 @@ case class TileGeom(child: Expression) extends GraftUnary {
 case class MercatorRes(child: Expression) extends GraftUnary {
   override def dataType: DataType = DoubleType
   def compute(v: Any): Any = Mercator.resolution(v.asInstanceOf[Int])
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   override def prettyName: String = "mercator_res"
 }
 
@@ -118,8 +100,6 @@ case class MercatorRes(child: Expression) extends GraftUnary {
 case class StMorton(left: Expression, right: Expression) extends GraftBinary {
   override def dataType: DataType = LongType
   def compute(a: Any, b: Any): Any = Mercator.morton(a.asInstanceOf[Long], b.asInstanceOf[Long])
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
   override def prettyName: String = "st_morton"
 }
 

@@ -12,8 +12,8 @@ import org.apache.spark.sql.types._
   * pass) ran interpreted, allocating a zipped array per plane per row. A
   * static element_at chain was measured WORSE (giant Add trees defeat
   * whole-stage codegen — see the dotCols note in EmbQueries); the right
-  * vehicle is a custom Expression with a primitive loop (the CLAUDE.md
-  * hot-path invariant), entered from generated code via `computePrim`.
+  * vehicle is a custom Expression with a primitive loop, entered from
+  * generated code through the [[GraftKernel]] template.
   *
   * Bit-exactness: both kernels accumulate left-to-right in IEEE double —
   * `acc += a(i)·b(i)` for ascending i — exactly the order of the previous
@@ -89,8 +89,6 @@ case class VecDot(left: Expression, right: Expression)
     }
   }
   override def prettyName: String = "vec_dot"
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
 }
 
 /** sig_matches(a, b): count of positions where two packed signature
@@ -129,8 +127,6 @@ case class SigMatches(left: Expression, right: Expression) extends GraftBinary {
     acc
   }
   override def prettyName: String = "sig_matches"
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
 }
 
 /** jl_project(emb, s): the q99 Johnson–Lindenstrauss projection as ONE
@@ -216,8 +212,6 @@ case class JlProject(left: Expression, right: Expression)
     new GenericArrayData(out)
   }
   override def prettyName: String = "jl_project"
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
 }
 
 /** plane_dots(emb, base, count): dot products of `emb` against the
@@ -228,9 +222,6 @@ case class JlProject(left: Expression, right: Expression)
   * once per expression instance, never per row. */
 case class PlaneDots(child: Expression, base: Expression, count: Expression)
     extends GraftTernary with NullableResult { // wrong-length or null-element input
-  override def first: Expression = child
-  override def second: Expression = base
-  override def third: Expression = count
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
 
   override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
@@ -293,7 +284,4 @@ case class PlaneDots(child: Expression, base: Expression, count: Expression)
     new GenericArrayData(out)
   }
   override def prettyName: String = "plane_dots"
-  override protected def withNewChildrenInternal(
-      a: Expression, b: Expression, c: Expression): Expression =
-    copy(child = a, base = b, count = c)
 }

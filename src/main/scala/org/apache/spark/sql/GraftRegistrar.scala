@@ -19,4 +19,9 @@ object GraftRegistrar {
       }
     }
   }
+
+  /** Spark's own WRONG_NUM_ARGS analysis error (its factory is
+    * `private[sql]`): `name` takes one of `expected` arguments, not `actual`. */
+  def wrongNumArgs(name: String, expected: Seq[Int], actual: Int): Throwable =
+    org.apache.spark.sql.errors.QueryCompilationErrors.wrongNumArgsError(name, expected, actual)
 }

@@ -61,6 +61,29 @@ class GeomSpec extends AnyFunSuite {
     }
   }
 
+  test("WKB counts are checked against the bytes left before sizing anything") {
+    def wkb(ints: Int*): Array[Byte] = {
+      val b = java.nio.ByteBuffer.allocate(1 + 4 * ints.size)
+        .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      b.put(1.toByte)
+      ints.foreach(b.putInt)
+      b.array()
+    }
+    def rejects(bytes: Array[Byte], count: Int) = {
+      val e = intercept[IllegalArgumentException](Geom.fromWkb(bytes))
+      assert(e.getMessage.contains(s"count of $count "), e.getMessage)
+    }
+    rejects(wkb(2, Int.MaxValue), Int.MaxValue) // 9-byte LineString, 2^31-1 points
+    rejects(wkb(3, -1), -1)                     // negative ring count: no empty polygon
+    rejects(wkb(3, 1, 2), 2)                    // a ring of 2 points in 0 bytes
+    rejects(wkb(4, 2, 1), 2)                    // 2 points need ≥ 42 bytes
+    rejects(wkb(6, 1000000000), 1000000000)
+    rejects(wkb(7, Int.MaxValue), Int.MaxValue)
+    // exact-size inputs still parse
+    assert(Geom.fromWkb(wkb(2, 0)).isEmpty)
+    assert(Geom.fromWkb(wkb(3, 0)).isEmpty)
+  }
+
   test("WKB interop with JTS") {
     val jtsReader = new org.locationtech.jts.io.WKBReader()
     val g = unitSquare
